@@ -1,8 +1,11 @@
 package graft.ml
 
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** The composite filter (SURVEY §2.10, `stars_filter.py:13-389`):
   * descriptor fan-out → feature matrix (NaN rows dropped) → N deciders →
@@ -97,6 +100,12 @@ class StarsFilter(val descriptors: Seq[Descriptor], val deciders: Seq[Decider]) 
   }
 }
 
+object StarsFilterModel {
+  /** The statistic columns of [[StarsFilterModel.getStatistic]], after `decider`. */
+  val StatColumns: Seq[String] = Seq("precision", "accuracy", "f1_score",
+    "true_positive_rate", "true_negative_rate", "false_positive_rate", "false_negative_rate")
+}
+
 class StarsFilterModel(val descriptors: Seq[Descriptor],
                        val models: Seq[DeciderModel],
                        val featureCols: Seq[String]) extends Serializable {
@@ -186,6 +195,23 @@ class StarsFilterModel(val descriptors: Seq[Descriptor],
     * consume coords, `base_decider.py:133-197`).
     */
   def getStatisticOnCoords(searchedCoords: DataFrame, othersCoords: DataFrame): DataFrame = {
+    val spark = searchedCoords.sparkSession
+    val schema = StructType(StructField("decider", StringType) +:
+      StarsFilterModel.StatColumns.map(StructField(_, DoubleType, nullable = false)))
+    val perDecider = spark.createDataFrame(
+      deciderStatistics(searchedCoords, othersCoords)
+        .map { case (name, v) => Row.fromSeq(name +: v) }.asJava, schema)
+    val meanRow = perDecider.groupBy().agg(lit("mean").as("decider"),
+      StarsFilterModel.StatColumns.map(c => avg(c).as(c)): _*)
+    perDecider.unionByName(meanRow)
+  }
+
+  /** The per-decider rows of [[getStatisticOnCoords]] (no mean row), read
+    * on the driver: decider name → values in [[StarsFilterModel.StatColumns]]
+    * order.
+    */
+  def deciderStatistics(searchedCoords: DataFrame,
+                        othersCoords: DataFrame): Seq[(String, Seq[Double])] = {
     // ONE aggregation job computes both samples' n and every decider's hit
     // count: the two per-sample aggregates are label-conditional sums over
     // the union (guide §1 fewer jobs). No caches — each scored branch is
@@ -211,13 +237,13 @@ class StarsFilterModel(val descriptors: Seq[Descriptor],
     val oc = all.collect { case (k, v) if k.startsWith("o_") => k.drop(2) -> v }
     val rightNum = sc("n")
     val wrongNum = oc("n")
-    val rows = models.map { m =>
+    models.map { m =>
       val tp = sc(m.name)
       val tn = oc(m.name)
       val fp = wrongNum - tn
       val fn = rightNum - tp
       val precision = if (tp + fp > 0) tp / (tp + fp) else 0.0
-      (m.name,
+      m.name -> Seq(
         math.rint(precision * 1000) / 1000,
         (tp + tn) / (rightNum + wrongNum),
         2 * tp / (2 * tp + fp + fn),
@@ -226,20 +252,6 @@ class StarsFilterModel(val descriptors: Seq[Descriptor],
         math.rint((1 - tn / wrongNum) * 1000) / 1000,
         math.rint((1 - tp / rightNum) * 1000) / 1000)
     }
-    val spark = searchedCoords.sparkSession
-    import spark.implicits._
-    val perDecider = rows.toDF("decider", "precision", "accuracy", "f1_score",
-      "true_positive_rate", "true_negative_rate",
-      "false_positive_rate", "false_negative_rate")
-    val meanRow = perDecider.groupBy()
-      .agg(lit("mean").as("decider"),
-        avg("precision").as("precision"), avg("accuracy").as("accuracy"),
-        avg("f1_score").as("f1_score"),
-        avg("true_positive_rate").as("true_positive_rate"),
-        avg("true_negative_rate").as("true_negative_rate"),
-        avg("false_positive_rate").as("false_positive_rate"),
-        avg("false_negative_rate").as("false_negative_rate"))
-    perDecider.unionByName(meanRow)
   }
 
   /** Grid-evaluated probability space (`tools/visualization.py:117-199`

@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.functions.Kernels
 import graft.model.{Coordinates, LightCurveData, Star}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,9 +53,9 @@ object StarsProvider {
   * parquet dataset of the star schema. Query keys: `path`, `suffix`
   * (dat|fits|parquet), `files_limit`, `star_class`, `db_ident`.
   *
-  * Scale: both readers are per-file parallel tasks (text lines carry
-  * `input_file_name`, FITS arrives via the `binaryFile` source); no driver
-  * loop over files.
+  * Scale: no driver loop over files. `.dat` reads through the
+  * [[graft.sources.v2.DatDataSource]] scan (name-pruned listing, whole
+  * files packed into splits); FITS arrives via the `binaryFile` source.
   */
 class FileManagerConnector extends StarsConnector {
 
@@ -107,7 +109,9 @@ class FileManagerConnector extends StarsConnector {
       val listPruned = (limit.isDefined || frac.isDefined) && suffix == "dat"
       val effWanted: Option[Set[String]] =
         if (listPruned) {
-          val names = FileManagerConnector.listStems(path, suffix, wanted)
+          val names = DatFile.list(spark, path).toSeq
+            .map(f => DatFile.starName(f.getPath.getName))
+            .filter(n => wanted.forall(_.contains(n)))
           val keep = limit match {
             case Some(n) => names.take(n)
             case None    => names.take((names.size * frac.get).toInt)
@@ -216,33 +220,29 @@ class FileManagerConnector extends StarsConnector {
     * (`file_manager.py:194-233` + `light_curve.py:196-204`); star name from
     * the file name (`parseFileName`, `file_manager.py:247-253`).
     *
-    * Read via the `binaryFile` source (whole file per task, like the FITS
-    * path) rather than `textFile` + `groupBy(file)` + `collect_list`:
+    * Read through the [[graft.sources.v2.DatDataSource]] scan, with the
+    * wanted names pushed down as `starId IN (...)` so only those files are
+    * listed into splits and opened. Each file is parsed whole by one task
+    * rather than via `textFile` + `groupBy(file)` + `collect_list`:
     * `collect_list` after a shuffle has no ordering contract, and a
     * splittable text file would interleave lines and silently scramble the
     * time series every order-sensitive kernel (SAX, Abbe, variogram)
-    * depends on. Whole-file reads make line order structural.
+    * depends on. Whole-file reads make line order structural, however
+    * many files a split packs.
     */
   private def readDat(spark: SparkSession, path: String, q: QuerySpec,
                       wanted: Option[Set[String]]): Dataset[Star] = {
     import spark.implicits._
-    val starClass = q.get("star_class")
-    val db = q.get("db_ident")
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.dat")
-      .load(path)
-      .select(col("path").as("file"), col("content"))
+    val stars = spark.read.format("graft.sources.v2.DatDataSource").load(path)
     val selected = wanted match {
-      case Some(names) => files.filter( // prune before parsing
-        element_at(split(col("file"), "/"), -1).isin(names.map(_ + ".dat").toSeq: _*))
-      case None => files
+      case Some(names) => stars.filter(col("starId").isin(names.toSeq: _*))
+      case None        => stars
     }
     selected
-      .as[(String, Array[Byte])]
-      .map { case (file, bytes) =>
-        DatFile.parse(file, new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
-          starClass, db)
-      }
+      .withColumn("starClass", lit(q.get("star_class").orNull).cast("string"))
+      .withColumn("identNames", q.get("db_ident")
+        .map(d => map(lit(d), col("starId"))).getOrElse(col("identNames")))
+      .as[Star]
   }
 
   /** FITS via the `binaryFile` source + the pure [[Fits]] parser. */
@@ -282,41 +282,55 @@ object FileManagerConnector {
         p.contains("path") && p.getOrElse("suffix", "dat") == "dat" &&
           (p.contains("object_file_name") || p.contains("files_to_load"))
       }
-
-  /** Driver-side listing of star names (file stems) under `path`, sorted —
-    * the same storage seam [[graft.sources.v2.DatScan.planInputPartitions]]
-    * lists through (swap in Hadoop `FileSystem.listStatus` off-local).
-    * Stem order == starId order for `.dat` sources, so planning-time
-    * `take(n)` equals the per-row `orderBy(starId).limit(n)`.
-    */
-  private[sources] def listStems(path: String, ext: String,
-                                 wanted: Option[Set[String]]): Seq[String] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isFile && f.getName.endsWith("." + ext))
-      .map(_.getName.stripSuffix("." + ext))
-      .filter(n => wanted.forall(_.contains(n)))
-      .sorted
 }
 
-/** Shared `.dat` text parsing (`file_manager.py:194-253`): whitespace
-  * `time mag err` rows, comment/BAD_VALUES scrub, 5/3/3 python-rounding via
-  * the cleaning kernel, star name from the file name. Used by both the
-  * FileManager connector and the DataSource V2 `graft.sources.v2.DatDataSource`.
+/** Shared `.dat` file access (`file_manager.py:194-253`): the one listing
+  * and the one text parser behind the DataSource V2
+  * `graft.sources.v2.DatDataSource`, which the FileManager connector reads
+  * through. Parsing: whitespace `time mag err` rows, comment/BAD_VALUES
+  * scrub, 5/3/3 python-rounding via the cleaning kernel, star name from the
+  * file name.
   */
 private[sources] object DatFile {
+  private val BadValues = Set("-99", "-99.0", "99", "N/A")
+
   def starName(file: String): String = file.split("/").last.stripSuffix(".dat")
 
-  def parse(file: String, content: String,
-            starClass: Option[String], db: Option[String]): Star = {
-    val name = starName(file)
+  /** The `.dat` files directly under `dir`, sorted by name, through the
+    * session's Hadoop `FileSystem` (so `file:`, `hdfs:`, `s3a:` paths
+    * work). Names starting with `_` or `.` are hidden, as in Spark's file
+    * index. A missing directory raises `FileNotFoundException`. Name order
+    * is starId order, so a planning-time `take(n)` equals the per-row
+    * `orderBy(starId).limit(n)`.
+    */
+  def list(spark: SparkSession, dir: String): Array[FileStatus] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && n.endsWith(".dat") && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.getName)
+  }
+
+  /** A whole file as lossy UTF-8: malformed bytes become U+FFFD instead of
+    * failing the read.
+    */
+  def read(file: String, conf: Configuration): String = {
+    val p = new Path(file)
+    val in = p.getFileSystem(conf).open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  def parse(file: String, content: String): Star = {
     val rows = content.linesIterator
       .map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#"))
       .map(_.split("\\s+"))
       .filter(_.length >= 2)
       .flatMap { a =>
-        val bad = Set("-99", "-99.0", "99", "N/A")
-        if (a.take(3).exists(bad)) None
+        if (a.take(3).exists(BadValues)) None
         else for {
           t <- a(0).toDoubleOption
           m <- a(1).toDoubleOption
@@ -324,9 +338,7 @@ private[sources] object DatFile {
         } yield (t, m, e)
       }.toArray
     val (t, m, e) = Kernels.cleanLc(rows.map(_._1), rows.map(_._2), rows.map(_._3))
-    Star(name, None,
-      db.map(d => Map(d -> name)).getOrElse(Map.empty),
-      Map.empty, Map.empty, starClass,
+    Star(starName(file), None, Map.empty, Map.empty, Map.empty, None,
       Seq(LightCurveData(t, m, e, Map.empty)))
   }
 }

@@ -4,6 +4,9 @@ import java.util
 
 import graft.model.Star
 import graft.sources.DatFile
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,19 +14,24 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In, StringStartsWith}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 for `.dat` light-curve directories — the pushdown seam
   * SURVEY §2.1 designs (`TapClient`/`VizierTapBase` predicate pushdown),
-  * implemented for real on the local file layout where pruning is
-  * physical: the star id IS the file name, so `starId = 'x'` /
-  * `starId IN (...)` / `starId LIKE 'p%'` predicates are consumed by the
-  * scan and prune to the matching FILES at planning time (one
-  * InputPartition per surviving file — a query for one star opens one
-  * file no matter how many the directory holds). Column pruning is
-  * honored too: a projection without `lightCurves` skips the curve
-  * parsing and cleaning kernel entirely.
+  * implemented for real on the file layout where pruning is physical: the
+  * star id IS the file name, so `starId = 'x'` / `starId IN (...)` /
+  * `starId LIKE 'p%'` predicates are consumed by the scan and prune the
+  * listing to the matching FILES at planning time — a query for one star
+  * opens one file no matter how many the directory holds. The surviving
+  * files are packed, in name order, into splits by the rule Spark's file
+  * sources use (`spark.sql.files.maxPartitionBytes` / `openCostInBytes` /
+  * `minPartitionNum`), so the task count follows the bytes read, not the
+  * file count. Listing and reads go through Hadoop `FileSystem`, so URI
+  * paths (`file:`, `hdfs:`, `s3a:`) work. Column pruning is honored too: a
+  * projection without `lightCurves` skips the curve parsing and cleaning
+  * kernel entirely.
   *
   * Usage: `spark.read.format("graft.sources.v2.DatDataSource").load(dir)`.
   */
@@ -95,14 +103,9 @@ class DatScan(path: String, pushed: Array[Filter], required: StructType,
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // local-FS listing matches the fixture layout; a remote deployment
-    // swaps in Hadoop FileSystem.listStatus here (the pruning logic —
-    // name-derived starId — is storage-agnostic)
-    val dir = new java.io.File(path)
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".dat"))
-      .filter(f => keep(DatFile.starName(f.getName)))
-      .sortBy(_.getName)
+    val spark = SparkSession.active
+    val files = DatFile.list(spark, path)
+      .filter(f => keep(DatFile.starName(f.getPath.getName)))
     // sample pushdown: "files_limit" keeps the first N stars by id,
     // "sample_fraction" keeps floor(n·f) — consumed HERE so a sampled read
     // plans only the surviving files (one job, no count pass; stars are
@@ -114,47 +117,79 @@ class DatScan(path: String, pushed: Array[Filter], required: StructType,
         case None    => files
       }
     }
-    sampled.map(f => DatPartition(f.getAbsolutePath): InputPartition)
+    val conf = spark.sessionState.conf
+    DatScan.pack(sampled.map(f => f.getPath.toString -> f.getLen).toSeq,
+      conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
+      conf.filesMinPartitionNum
+        .orElse(spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt))
+        .getOrElse(spark.sparkContext.defaultParallelism))
+      .map(DatPartition(_): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DatReaderFactory(required)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    new DatReaderFactory(required, spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+  }
 }
 
-final case class DatPartition(file: String) extends InputPartition
+object DatScan {
+  /** Spark's file-source split rule (`FilePartition.maxSplitBytes` +
+    * `getFilePartitions`) over `(file, length)` pairs kept in the given
+    * order: each file costs its length plus `openCost`, the target split
+    * is `min(maxBytes, max(openCost, total / minPartitions))`, and a split
+    * closes before the file that would overflow it. Files are never cut —
+    * a reader parses whole files, so line order is structural.
+    */
+  def pack(files: Seq[(String, Long)], maxBytes: Long, openCost: Long,
+           minPartitions: Int): Seq[Seq[String]] = {
+    val total = files.map(_._2 + openCost).sum
+    val target = math.min(maxBytes, math.max(openCost, total / math.max(1, minPartitions)))
+    val splits = Seq.newBuilder[Seq[String]]
+    var current = Vector.empty[String]
+    var size = 0L
+    files.foreach { case (file, len) =>
+      if (current.nonEmpty && size + len > target) {
+        splits += current; current = Vector.empty; size = 0L
+      }
+      current :+= file
+      size += len + openCost
+    }
+    if (current.nonEmpty) splits += current
+    splits.result()
+  }
+}
 
-class DatReaderFactory(required: StructType) extends PartitionReaderFactory {
+/** One split: whole `.dat` files, read in order by one task. */
+final case class DatPartition(files: Seq[String]) extends InputPartition
+
+class DatReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new DatPartitionReader(partition.asInstanceOf[DatPartition].file, required)
+    new DatPartitionReader(partition.asInstanceOf[DatPartition].files, required, conf.value.value)
 }
 
-/** One star row per file; column pruning short-circuits curve parsing. */
-class DatPartitionReader(file: String, required: StructType)
+/** One star row per file of the split; column pruning short-circuits curve
+  * parsing (no file is opened for an id-only projection).
+  */
+class DatPartitionReader(files: Seq[String], required: StructType, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private var done = false
+  private val needCurves = required.fieldNames.contains("lightCurves")
+  private val ordinals = required.fieldNames.map(Star.schema.fieldIndex)
+  private val types = required.fields.map(_.dataType)
+  private val serialize = DatPartitionReader.serializer
+  private val remaining = files.iterator
   private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    if (done) return false
-    done = true
-    val needCurves = required.fieldNames.contains("lightCurves")
+  override def next(): Boolean = remaining.hasNext && {
+    val file = remaining.next()
     val star =
-      if (needCurves)
-        // lossy UTF-8 like the FileManager path (String replaces malformed
-        // bytes with U+FFFD; strict Files.readString would throw where the
-        // equivalent per-query scan succeeds)
-        DatFile.parse(file, new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)),
-          java.nio.charset.StandardCharsets.UTF_8), None, None)
-      else // pruned projection: never parse or clean the curve data
-        Star(DatFile.starName(file), None, Map.empty, Map.empty, Map.empty, None, Nil)
-    val full = DatPartitionReader.serializer(star)
+      if (needCurves) DatFile.parse(file, DatFile.read(file, conf))
+      else Star(DatFile.starName(file), None, Map.empty, Map.empty, Map.empty, None, Nil)
     // project the full row down to the required columns, by field ordinal
-    val idx = required.fieldNames.map(Star.schema.fieldIndex)
-    current = InternalRow.fromSeq(idx.zip(required.fields).map {
-      case (i, f) => full.get(i, f.dataType)
-    }.toSeq)
+    val full = serialize(star)
+    current = InternalRow.fromSeq(ordinals.indices.map(i => full.get(ordinals(i), types(i))))
     true
   }
 

@@ -85,6 +85,44 @@ class StarsFilterSpec extends SparkSpec {
     assert(best.stats("precision") >= all.map(_.stats("precision")).min)
   }
 
+  private def ldaQdaGrid = Seq(
+    TuneCombination("abbe100", Seq(new AbbeValueDescr(Some(100))),
+      Seq(new LDADec(), new QDADec())),
+    TuneCombination("abbe100+slope",
+      Seq(new AbbeValueDescr(Some(100)), new VariogramSlopeDescr(30)),
+      Seq(new LDADec(), new QDADec())))
+
+  test("ParamsEstimator 2-combination LDA/QDA grid runs at most 6 Spark jobs") {
+    searched.count(); others.count() // inputs cached before counting
+    var all: Seq[TuneResult] = Nil
+    val jobs = jobsFor("tune-grid") {
+      all = new ParamsEstimator(searched, others, ldaQdaGrid).fit()._2
+    }
+    assert(all.size == 2)
+    info(s"$jobs jobs")
+    assert(jobs <= 6, s"2-combination grid ran $jobs jobs")
+  }
+
+  test("ParamsEstimator split does not depend on the input partitioning") {
+    // two overlapping noise families, so every test-side star moves the stats
+    val noisy = new scala.util.Random(11)
+    def family(prefix: String, sd: Double) = (1 to 30).map { i =>
+      val t = Array.tabulate(100)(_.toDouble)
+      Star(s"${prefix}_$i", None, Map.empty, Map.empty, Map.empty, None,
+        Seq(LightCurveData(t, t.map(_ => noisy.nextGaussian() * sd), Array.fill(100)(0.01),
+          Map.empty)))
+    }
+    val (s0, o0) = (family("a", 1.0).toDF(), family("b", 1.2).toDF())
+    def stats(parts: Int) = {
+      val (s, o) = (s0.repartition(parts).cache(), o0.repartition(parts).cache())
+      try new ParamsEstimator(s, o, Seq(TuneCombination("skew+kurt",
+        Seq(new SkewnessDescr(), new KurtosisDescr()), Seq(new LDADec(), new QDADec()))))
+        .fit()._2.map(r => r.label -> r.stats)
+      finally { s.unpersist(); o.unpersist() }
+    }
+    assert(stats(1) == stats(7), "per-combination stats must not move with the partitioning")
+  }
+
   test("ParamsEstimator parallel fit matches the sequential argmax and is faster") {
     // 8 combinations (a realistic small tuning grid — descriptor variants ×
     // decider thresholds), so the measured ratio prices the concurrent-fit

@@ -59,8 +59,8 @@ class SourcesSpec extends SparkSpec {
   test("dat connector preserves line order on large files under tiny split sizes") {
     // Regression for the textFile+collect_list design: a splittable text
     // source would interleave lines across partitions and scramble the time
-    // series. The whole-file (binaryFile) read must return file order even
-    // when maxPartitionBytes is far below the file size.
+    // series. The whole-file read must return file order even when
+    // maxPartitionBytes is far below the file size.
     val dir = java.nio.file.Files.createTempDirectory("datbig")
     val n = 20000
     val body = new StringBuilder("#time mag err\n")
