@@ -685,11 +685,11 @@ object CorpusOps {
   }
 
   /** Count-thresholded Kneser–Ney (the SRILM-style `-gtmin` prune,
-    * priced by [[LmLadderBench]] before any gate): the bigram TYPE table
-    * is thresholded at `minCount` before the probe join, and a scored
-    * bigram whose type row was pruned takes the continuation-only
-    * backoff — EXACTLY interpolated KN's value for an unseen bigram
-    * (max(c12 − D, 0) = 0), i.e.
+    * priced by the [[graft.Ladder]] lm family before any gate): the
+    * bigram TYPE table is thresholded at `minCount` before the probe
+    * join, and a scored bigram whose type row was pruned takes the
+    * continuation-only backoff — EXACTLY interpolated KN's value for an
+    * unseen bigram (max(c12 − D, 0) = 0), i.e.
     * P = D·N1+(w1·)/c1 · N1+(·w2)/T → nll = ln(4·c1·T) − ln(3·N1+(w1·)·N1+(·w2))
     * — so the delta vs exact KN ([[q151KneserNey]]) is ONLY the dropped
     * direct mass (c12 − D)/c1 on types with 1 ≤ c12 < minCount, the

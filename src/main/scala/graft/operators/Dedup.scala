@@ -783,14 +783,14 @@ object Dedup {
     def roots: Iterator[(Long, Long)] = parent.keys.toArray.iterator.map(k => (k, find(k)))
   }
 
-  private[operators] def connectedComponents(edges: DataFrame, nodes: DataFrame): DataFrame =
+  private[graft] def connectedComponents(edges: DataFrame, nodes: DataFrame): DataFrame =
     connectedComponents(edges, nodes, DriverCcMaxEdges)
 
   /** Threshold-injectable variant: specs force `driverMaxEdges = -1` to
     * exercise the distributed propagation tier at fixture scale.
     */
-  private[operators] def connectedComponents(edges: DataFrame, nodes: DataFrame,
-                                             driverMaxEdges: Long): DataFrame = {
+  private[graft] def connectedComponents(edges: DataFrame, nodes: DataFrame,
+                                          driverMaxEdges: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // level 1: partition-local contraction
@@ -1211,8 +1211,7 @@ object Dedup {
     // v2: the stored band layout (array bk keys + meta) — versioning the
     // path retires indexes from the pre-dial m0..m3 layout
     val indexPath = graft.Tables.derivedIndexPath("graft_band_index_v2", dir, "documents")
-    IndexMeta.ensureBuilt(indexPath)(
-      new java.io.File(s"$indexPath/bands/_SUCCESS").exists()) {
+    IndexMeta.ensure(spark, indexPath) {
       writeBandIndex(d.filter(col("doc_id") % 10 =!= 0), indexPath)
     }
     incrementalDedupAgainstIndex(d.filter(col("doc_id") % 10 === 0), indexPath)

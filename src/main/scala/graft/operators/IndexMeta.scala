@@ -126,19 +126,11 @@ private[graft] object IndexMeta {
     * race losers block until the winner's meta lands, then skip. Builds
     * from separate JVMs remain the operator's responsibility (as before).
     */
-  def ensure(spark: SparkSession, path: String)(build: => Unit): Unit =
-    ensureBuilt(path)(exists(spark, path))(build)
-
-  /** As [[ensure]] but with a caller-supplied completeness predicate — for
-    * the index layouts whose completeness marker is a data-table _SUCCESS
-    * plus meta (ANN/IVF/SQ8/PQ/band). The predicate is re-evaluated under
-    * the lock (double-checked).
-    */
-  def ensureBuilt(path: String)(complete: => Boolean)(build: => Unit): Unit = {
-    if (complete) return
+  def ensure(spark: SparkSession, path: String)(build: => Unit): Unit = {
+    if (exists(spark, path)) return
     val lock = buildLocks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
-      if (!complete) build
+      if (!exists(spark, path)) build
     }
   }
 }

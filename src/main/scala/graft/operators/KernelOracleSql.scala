@@ -558,7 +558,7 @@ object KernelOracleSql {
        |FROM sc""".stripMargin
 
   /** q184: q51's whole train-and-score chain over a PLANTED 10× star
-    * fixture — the StarLadderBench 10× rung's conclusion (classify cost
+    * fixture — the [[graft.Ladder]] star 10× rung's conclusion (classify cost
     * ∝ stars, collects stay class-statistics-sized) promoted to a
     * hash-verified gate the way q178/q179 promoted the dedup/PQ dials.
     * The amplification is part of the query in BOTH engines: 10

@@ -382,9 +382,7 @@ object Similarity {
     // invalidates the stored index instead of silently serving stale sigs
     val indexPath = graft.Tables.derivedIndexPath("graft_ann_index", dir, "embeddings")
     // a pre-meta index dir (older layout) counts as incomplete → rebuild
-    IndexMeta.ensureBuilt(indexPath)(
-      new java.io.File(s"$indexPath/bands/_SUCCESS").exists() &&
-        new java.io.File(s"$indexPath/meta.properties").exists()) {
+    IndexMeta.ensure(spark, indexPath) {
       writeAnnIndex(e, indexPath)
     }
     annAgainstIndex(e.filter(col("vec_id") < 50), indexPath)
@@ -520,9 +518,10 @@ object Similarity {
 
   /** q57's train→assign→probe→rerank chain with the two deployment dials
     * exposed: `k` (list count) and `nprobe` (lists probed). q57 IS this
-    * at the fixture dials (hash-gated), so [[AnnLadderBench]] prices the
-    * production code path — fixed k=16 vs the ≈√N list count the
-    * [[IVF_K]] scaladoc prescribes at corpus scale — not a fork of it.
+    * at the fixture dials (hash-gated), so the [[graft.Ladder]] ann
+    * family prices the production code path — fixed k=16 vs the ≈√N
+    * list count the [[IVF_K]] scaladoc prescribes at corpus scale — not
+    * a fork of it.
     */
   private[graft] def ivfTopK(e0: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val e = graft.CacheScope.cache(withNorm(e0))
@@ -930,11 +929,8 @@ object Similarity {
   def q83IvfIndex(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val indexPath = graft.Tables.derivedIndexPath("graft_ivf_index", dir, "embeddings")
-    // vectors written LAST → its _SUCCESS marks the whole index complete;
     // a pre-meta index dir (older layout) counts as incomplete → rebuild
-    IndexMeta.ensureBuilt(indexPath)(
-      new java.io.File(s"$indexPath/vectors/_SUCCESS").exists() &&
-        new java.io.File(s"$indexPath/meta.properties").exists()) {
+    IndexMeta.ensure(spark, indexPath) {
       writeIvfIndex(e, indexPath)
     }
     ivfSearchAgainstIndex(e.filter(col("vec_id") < 20), indexPath)
@@ -1121,11 +1117,8 @@ object Similarity {
   def q91Sq8Index(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val indexPath = graft.Tables.derivedIndexPath("graft_sq8_index", dir, "embeddings")
-    // codes written LAST of the data tables → its _SUCCESS plus meta mark
-    // the build complete; a pre-meta dir counts as incomplete → rebuild
-    IndexMeta.ensureBuilt(indexPath)(
-      new java.io.File(s"$indexPath/codes/_SUCCESS").exists() &&
-        new java.io.File(s"$indexPath/meta.properties").exists()) {
+    // a pre-meta index dir (older layout) counts as incomplete → rebuild
+    IndexMeta.ensure(spark, indexPath) {
       writeSq8Index(e, indexPath)
     }
     sq8SearchAgainstIndex(e.filter(col("vec_id") < 20), indexPath)
@@ -1995,9 +1988,7 @@ object Similarity {
   def q183IvfPqIndex(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val indexPath = graft.Tables.derivedIndexPath("graft_ivfpq_index", dir, "embeddings")
-    IndexMeta.ensureBuilt(indexPath)(
-      new java.io.File(s"$indexPath/vectors/_SUCCESS").exists() &&
-        new java.io.File(s"$indexPath/meta.properties").exists()) {
+    IndexMeta.ensure(spark, indexPath) {
       writeIvfPqIndex(e, indexPath)
     }
     ivfPqSearchAgainstIndex(e.filter(col("vec_id") < 20), indexPath)
@@ -2081,9 +2072,7 @@ object Similarity {
   def q93PqIndex(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val indexPath = graft.Tables.derivedIndexPath("graft_pq_index", dir, "embeddings")
-    IndexMeta.ensureBuilt(indexPath)(
-      new java.io.File(s"$indexPath/codes/_SUCCESS").exists() &&
-        new java.io.File(s"$indexPath/meta.properties").exists()) {
+    IndexMeta.ensure(spark, indexPath) {
       writePqIndex(e, indexPath)
     }
     pqSearchAgainstIndex(e.filter(col("vec_id") < 20), indexPath)

@@ -92,8 +92,8 @@ object StarQueries {
     * c/1024 (an exact binary fraction: both engines' doubles are
     * bit-identical). The amplification is PART OF THE QUERY, mirrored in
     * the oracle's events_amp CTE, so the gate certifies the classify
-    * chain at 10× the fixture's stars — the StarLadderBench 10× rung
-    * promoted to a hash gate the way q178/q179 promoted their dials.
+    * chain at 10× the fixture's stars — the [[graft.Ladder]] star 10×
+    * rung promoted to a hash gate the way q178/q179 promoted their dials.
     */
   private def amplifiedEvents(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "events")

@@ -171,7 +171,7 @@ class AnnRecallSpec extends SparkSpec {
     // while the q179 dial's 128-bit codes keep discriminating (ladder:
     // 0.98) — the measured justification for PQ_M_SCALE
     val tmp = java.nio.file.Files.createTempDirectory("pq_occupancy").toString
-    AnnLadderBench.synthEmb(spark, 50000L).write.mode("overwrite")
+    graft.Synth.synthEmb(spark, 50000L).write.mode("overwrite")
       .parquet(s"$tmp/embeddings.parquet")
     def top3(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
       df.filter(org.apache.spark.sql.functions.col("rn") <= 3)

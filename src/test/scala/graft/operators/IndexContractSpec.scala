@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{CacheScope, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Contracts of the materialized similarity indexes: dials recorded and
@@ -68,5 +68,20 @@ class IndexContractSpec extends SparkSpec {
     val res = Similarity.ivfSearchAgainstIndex(
       rekeyed.filter(col("vec_id") < 1020), s"$tmp/idx")
     assert(res.count() > 0, "re-keyed corpus must train and serve")
+  }
+
+  test("q81 rebuilds an index whose meta is missing — a rebuild that crashed") {
+    // a rebuild that dies after IndexMeta.invalidate leaves the old data
+    // tables, bands/_SUCCESS included, with no meta. Meta is the
+    // completeness marker, so the next q81 must rebuild instead of
+    // reading dials from a meta that is not there
+    def q81 = CacheScope.run(Dedup.queries("q81_incremental_index")(spark, dir)
+      .collect().map(_.toString).sorted.toSeq)
+    val first = q81
+    val indexPath = graft.Tables.derivedIndexPath("graft_band_index_v2", dir, "documents")
+    IndexMeta.invalidate(spark, indexPath)
+    assert(new java.io.File(s"$indexPath/bands/_SUCCESS").exists())
+    assert(q81 == first)
+    assert(IndexMeta.exists(spark, indexPath))
   }
 }

@@ -43,8 +43,8 @@ class IvfPqDeltaSpec extends SparkSpec {
   /** base = synth ids [0, 2000); delta = synth ids [2000, 2400) — same
     * distribution (in-cluster), the "normal ingest" fixture.
     */
-  private def base(n: Long = 2000L) = AnnLadderBench.synthEmb(spark, n)
-  private def delta() = AnnLadderBench.synthEmb(spark, 2400L)
+  private def base(n: Long = 2000L) = graft.Synth.synthEmb(spark, n)
+  private def delta() = graft.Synth.synthEmb(spark, 2400L)
     .filter(col("vec_id") >= 2000)
   /** the planted-drift delta: the same 400 ids shifted +2.0 per
     * coordinate — far from every trained centroid by construction.

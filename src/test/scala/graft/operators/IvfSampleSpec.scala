@@ -33,7 +33,7 @@ class IvfSampleSpec extends SparkSpec {
 
   test("above the cap the sample trains; serve recall within 0.02 of full-train") {
     val tmp = java.nio.file.Files.createTempDirectory("ivf_sampled").toString
-    val corpus = AnnLadderBench.synthEmb(spark, 20000L)
+    val corpus = graft.Synth.synthEmb(spark, 20000L)
     corpus.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val e = graft.Tables.load(spark, tmp, "embeddings")
     val probes = e.filter(col("vec_id") < 20)

@@ -57,7 +57,7 @@ class IvfTwoLevelSpec extends SparkSpec {
 
   test("two-level with w >= nCoarse equals exact assignment, list for list") {
     val tmp = java.nio.file.Files.createTempDirectory("ivf_2l_eq").toString
-    val corpus = AnnLadderBench.synthEmb(spark, 2000L)
+    val corpus = graft.Synth.synthEmb(spark, 2000L)
     corpus.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val e = graft.Tables.load(spark, tmp, "embeddings")
 
@@ -79,7 +79,7 @@ class IvfTwoLevelSpec extends SparkSpec {
 
   test("default-w two-level serve recall within 0.02 of exact assignment") {
     val tmp = java.nio.file.Files.createTempDirectory("ivf_2l_rec").toString
-    val corpus = AnnLadderBench.synthEmb(spark, 20000L)
+    val corpus = graft.Synth.synthEmb(spark, 20000L)
     corpus.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val e = graft.Tables.load(spark, tmp, "embeddings")
     val probes = e.filter(col("vec_id") < 20)
@@ -115,7 +115,7 @@ class IvfTwoLevelSpec extends SparkSpec {
 
   test("serve with w >= nCoarse equals exact probe ranking, row for row") {
     val tmp = java.nio.file.Files.createTempDirectory("ivf_2l_serve_eq").toString
-    val corpus = AnnLadderBench.synthEmb(spark, 2000L)
+    val corpus = graft.Synth.synthEmb(spark, 2000L)
     corpus.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val e = graft.Tables.load(spark, tmp, "embeddings")
     val probes = e.filter(col("vec_id") < 20)
@@ -153,7 +153,7 @@ class IvfTwoLevelSpec extends SparkSpec {
 
   test("default-w two-level serve recall within 0.02 of exact probe ranking") {
     val tmp = java.nio.file.Files.createTempDirectory("ivf_2l_serve_rec").toString
-    val corpus = AnnLadderBench.synthEmb(spark, 20000L)
+    val corpus = graft.Synth.synthEmb(spark, 20000L)
     corpus.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val e = graft.Tables.load(spark, tmp, "embeddings")
     val probes = e.filter(col("vec_id") < 20)
