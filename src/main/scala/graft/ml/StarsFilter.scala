@@ -134,6 +134,28 @@ class StarsFilterModel(val descriptors: Seq[Descriptor],
   def getAllPredictions(stars: DataFrame): DataFrame =
     predictOnCoords(filterInstance.spaceCoordinates(stars))
 
+  /** [[getAllPredictions]] without its NaN-row drop: every row of `stars`
+    * comes back once. A row with a null or NaN feature scores on a zero
+    * vector, then gets null feature and probability columns and every
+    * passed flag false — the row a left join of `stars` to
+    * `getAllPredictions(stars)` gives it — so one pass serves callers that
+    * must also account for the unscorable stars.
+    */
+  def scoreEveryRow(stars: DataFrame): DataFrame = {
+    val withFeatures = descriptors.foldLeft(stars)((df, d) => d.transform(df).toDF())
+      .withColumn("_valid", featureCols.map(c => col(c).isNotNull && !isnan(col(c))).reduce(_ && _))
+    val coords = new VectorAssembler()
+      .setInputCols(featureCols.toArray)
+      .setOutputCol("features")
+      .transform(withFeatures.withColumns(featureCols.map(c =>
+        c -> when(col("_valid"), col(c)).otherwise(0.0)).toMap))
+    val scored = predictOnCoords(coords)
+    scored.withColumns(((featureCols ++ probCols).map(c => c -> when(col("_valid"), col(c))) ++
+      (models.map(m => s"passed_${m.name}") :+ "passed").map(c => c -> (col("_valid") && col(c))))
+      .toMap)
+      .drop("_valid")
+  }
+
   /** Score precomputed feature coordinates — the reuse seam for callers
     * that already hold the descriptor fan-out (one pass instead of
     * re-deriving features per evaluation).

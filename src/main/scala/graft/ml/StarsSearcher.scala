@@ -1,7 +1,9 @@
 package graft.ml
 
 import graft.sources.{QuerySpec, StarsProvider}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** Systematic filtered search (SURVEY §2.10 + §3.1,
@@ -10,12 +12,15 @@ import org.apache.spark.sql.functions._
   * to the matched-star sink and every star's probabilities go to the
   * append-mode status sink.
   *
-  * Spark restatement of the reference's sequential per-query loop: ONE job —
-  * queries are unioned into a single source scan (partition = query), the
-  * pipeline transforms once, both sinks write append-mode parquet. The
-  * reference's Redis work queue (`stars_searcher.py:267-346`) is subsumed by
-  * partition parallelism; its status-file resume (`getUnsearchedQuery`,
-  * `status_resolver.py:53-76`) is the left_anti join in [[unsearchedQueries]].
+  * Spark restatement of the reference's sequential per-query loop: the
+  * queries are unioned into a single source scan, every fetched star is
+  * scored in ONE cached pass, and both sinks are written from that cache.
+  * A `.dat` batch with fresh sinks runs three jobs, none of which
+  * shuffles: one fills the cache and reads back which queries fetched a
+  * star, then one append per sink. The reference's Redis work queue
+  * (`stars_searcher.py:267-346`) is subsumed by partition parallelism; its
+  * status-file resume (`getUnsearchedQuery`, `status_resolver.py:53-76`)
+  * is the left_anti join in [[unsearchedQueries]].
   */
 class StarsSearcher(
     model: StarsFilterModel,
@@ -24,12 +29,19 @@ class StarsSearcher(
     statusPath: String) {
 
   /** Resume support: queries minus those already present in the status sink
-    * (anti join on the query id).
+    * (anti join on the query id). A status path that is missing or holds no
+    * data file means nothing was searched yet; any other failure to read it
+    * raises, as re-running done queries would append duplicate rows.
     */
   def unsearchedQueries(spark: SparkSession, queries: DataFrame): DataFrame = {
-    val done =
-      try spark.read.parquet(statusPath).select(col("query_id")).distinct()
-      catch { case _: Exception => return queries } // no status yet
+    val p = new Path(statusPath)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasData = fs.exists(p) && fs.listStatus(p).exists { f =>
+      val n = f.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (!hasData) return queries
+    val done = spark.read.parquet(statusPath).select(col("query_id")).distinct()
     queries.join(done, Seq("query_id"), "left_anti")
   }
 
@@ -41,24 +53,25 @@ class StarsSearcher(
     val todoDf = unsearchedQueries(spark, queries)
       .select(col("query_id"), col("params"))
     val connector = StarsProvider.getProvider(connectorName)
-    val stars = connector match {
+    val (stars, asked) = connector match {
       // scale path: one source scan joined against the broadcast query
       // table — no driver loop, no N-way union plan
       case ac: graft.sources.ArchiveConnector
           if ac.supportsJoinedFetch(todoDf
             .select(explode(map_keys(col("params")))).distinct().as[String]
             .collect().toSet) =>
-        if (todoDf.isEmpty) return spark.emptyDataFrame
-        ac.getStarsJoined(spark, todoDf)
+        val ids = todoDf.select("query_id").as[String].collect().toSeq
+        if (ids.isEmpty) return spark.emptyDataFrame
+        (ac.getStarsJoined(spark, todoDf), ids)
       case _ =>
         // path-driven connectors: the query table is config-sized, so
         // collecting it is bounded driver state — the scan is what matters
         val todo = todoDf.as[(String, Map[String, String])].collect().toSeq
         if (todo.isEmpty) return spark.emptyDataFrame
-        connector match {
+        val fetched = connector match {
           // .dat directories with explicit star lists: ONE DataSource V2
-          // scan with starId IN pushdown (planning-time file pruning)
-          // joined to the broadcast query table — no N-way union plan
+          // scan with starId IN pushdown (planning-time file pruning),
+          // fanned out to the selecting queries — no N-way union plan
           case fm: graft.sources.FileManagerConnector
               if graft.sources.FileManagerConnector.datRoutable(todo) =>
             fm.getStarsDatJoined(spark, todo)
@@ -69,47 +82,59 @@ class StarsSearcher(
                 .withColumn("query_id", lit(qid))
             }.reduce(_ unionByName _)
         }
+        (fetched, todo.map(_._1))
     }
-
-    // ONE cached fetch feeds the scoring pipeline AND the status base;
-    // ONE cached scoring pass feeds the matched sink AND the status join
-    // (the dominant cost of a search run is fetch + scoring)
-    val fetched = stars.cache()
-    val predictions = model.getAllPredictions(fetched).cache()
 
     val probCols = model.models.map(m => s"prob_${m.name}")
     val passedCols = model.models.map(m => s"passed_${m.name}")
+    // ONE cached scoring pass over every fetched star feeds both sinks
+    val scored = model.scoreEveryRow(stars).cache()
     try {
+      // filling the cache also reads back which queries fetched a star
+      // (distinct per partition, merged here: no shuffle)
+      val hit = scored.select("query_id").as[String]
+        .mapPartitions(_.toSet.iterator).collect().toSet
+      val files = sinkFiles(spark, scored)
       // matched-star sink (reference: one FITS per match — here append parquet
       // of the full star rows, the scalable native sink)
-      predictions.filter(col("passed"))
+      scored.filter(col("passed"))
         .drop(model.featureCols ++ probCols ++ passedCols: _*)
         .drop("features", "passed")
+        .coalesce(files)
         .write.mode(SaveMode.Append).parquet(matchedPath)
       // Status notes EVERY queried star (`uploadStatus`, stars_searcher.py:
-      // 188-215): stars the NaN-drop removed from the scored set come back
-      // found=true / passed=false via the left join, and zero-hit queries
-      // record a found=false "Noname" row (`stars_searcher.py:100-105`) so
-      // the resume anti-join converges instead of re-running them forever.
-      val starBase = fetched.select(col("query_id"), col("starId"),
+      // 188-215): stars without usable features are found=true /
+      // passed=false with null features, and zero-hit queries record a
+      // found=false "Noname" row (`stars_searcher.py:100-105`) so the
+      // resume anti-join converges instead of re-running them forever.
+      val perStar = scored.select(Seq(col("query_id"), col("starId"),
         lit(true).as("found"),
         (size(col("lightCurves")) > 0 &&
-          size(col("lightCurves").getItem(0).getField("mag")) > 0).as("lc"))
-      val scored = predictions.select(
-        Seq(col("query_id"), col("starId")) ++
-          (model.featureCols ++ probCols).map(col) ++
-          (passedCols :+ "passed").map(col): _*)
-      val perStar = starBase.join(scored, Seq("query_id", "starId"), "left")
-      val noHit = todoDf
-        .join(starBase.select("query_id").distinct(), Seq("query_id"), "left_anti")
-        .select(col("query_id"), lit("Noname").as("starId"),
-          lit(false).as("found"), lit(false).as("lc"))
-      val status = perStar.unionByName(noHit, allowMissingColumns = true)
+          size(col("lightCurves").getItem(0).getField("mag")) > 0).as("lc")) ++
+        (model.featureCols ++ probCols ++ passedCols :+ "passed").map(col): _*)
+      val noHit = asked.filterNot(hit)
+      val status = (if (noHit.isEmpty) perStar else perStar.unionByName(
+          noHit.toDF("query_id").select(col("query_id"), lit("Noname").as("starId"),
+            lit(false).as("found"), lit(false).as("lc")),
+          allowMissingColumns = true))
         .select(Seq(col("query_id"), col("starId"), col("found"), col("lc")) ++
           (model.featureCols ++ probCols).map(col) ++
           (passedCols :+ "passed").map(c => coalesce(col(c), lit(false)).as(c)): _*)
-      status.write.mode(SaveMode.Append).parquet(statusPath)
+      status.coalesce(files).write.mode(SaveMode.Append).parquet(statusPath)
       status
-    } finally { predictions.unpersist(); fetched.unpersist() }
+    } finally scored.unpersist()
+  }
+
+  /** Files per sink: one per `spark.sql.files.maxPartitionBytes` of the
+    * cached scored rows, at least one — the scan's split rule applied to
+    * the write, so a small batch writes one file and the descriptor tasks
+    * keep the scan's width.
+    */
+  private def sinkFiles(spark: SparkSession, cached: DataFrame): Int = {
+    val bytes = cached.queryExecution.optimizedPlan
+      .collectFirst { case r: InMemoryRelation => r.computeStats().sizeInBytes }
+      .getOrElse(BigInt(0))
+    val perFile = spark.sessionState.conf.filesMaxPartitionBytes
+    ((bytes + perFile - 1) / perFile).max(BigInt(1)).toInt
   }
 }

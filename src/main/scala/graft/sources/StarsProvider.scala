@@ -83,41 +83,21 @@ class FileManagerConnector extends StarsConnector {
   override def getStars(spark: SparkSession, queries: Seq[QuerySpec]): Dataset[Star] = {
     import spark.implicits._
     val dfs = queries.map { q0 =>
-      // star_class may carry a ":N" / "%f" sample restriction
-      val (q, restr) = q0.get("star_class").map(parseSampleName) match {
-        case Some((clean, r)) => (QuerySpec(q0.params + ("star_class" -> clean)), r)
-        case None             => (q0, None)
-      }
+      val sel = selection(q0)
+      // star_class cleaned of its ":N" / "%f" sample mark
+      val q = sel.starClass.fold(q0)(c => QuerySpec(q0.params + ("star_class" -> c)))
       val path = q.get("path").getOrElse(
         throw new IllegalArgumentException("FileManager needs 'path'"))
       val suffix = q.get("suffix").getOrElse("dat")
-      // explicit file selection (`file_manager.py:16-107`): `files_to_load`
-      // is a ;-separated name list, `object_file_name` a single name —
-      // matched on the FILE name stem (filters before parsing)
-      val wanted: Option[Set[String]] =
-        q.get("object_file_name").map(n => Set(strip(n)))
-          .orElse(q.get("files_to_load").map(
-            _.split(";").map(n => strip(n.trim)).toSet))
-      val limit = q.get("files_limit").flatMap(_.toIntOption)
-        .orElse(restr.flatMap(_.left.toOption))
-      val frac = if (limit.isDefined) None else restr.flatMap(_.toOption)
       // .dat stars ARE files (starId = file stem), so "files_limit" / ":N" /
       // "%f" prune the driver-side LISTING — the same planning-time seam the
       // DSv2 source uses — instead of a global sort+limit job, and "%f"
       // needs no separate count() pass. FITS star ids come from headers
       // (stem != starId in general) so fits/parquet keep the generic path.
-      val listPruned = (limit.isDefined || frac.isDefined) && suffix == "dat"
+      val listPruned = sel.sampled && suffix == "dat"
       val effWanted: Option[Set[String]] =
-        if (listPruned) {
-          val names = DatFile.list(spark, path).toSeq
-            .map(f => DatFile.starName(f.getPath.getName))
-            .filter(n => wanted.forall(_.contains(n)))
-          val keep = limit match {
-            case Some(n) => names.take(n)
-            case None    => names.take((names.size * frac.get).toInt)
-          }
-          Some(keep.toSet)
-        } else wanted
+        if (listPruned) Some(sel.pick(DatFile.starIds(spark, path)).toSet)
+        else sel.wanted
       val ds1 = suffix match {
         case "dat"     => readDat(spark, path, q, effWanted)
         case "fits"    => readFits(spark, path, q, effWanted)
@@ -136,9 +116,9 @@ class FileManagerConnector extends StarsConnector {
         ds1.map(_.copy(lightCurves = Nil)) else ds1
       val limited =
         if (listPruned) ds // sample already consumed by the listing
-        else limit match {
+        else sel.limit match {
           case Some(n) => ds.orderBy("starId").limit(n) // deterministic "first N"
-          case None => frac match {
+          case None => sel.frac match {
             // fraction keeps exactly floor(n·f) stars (`_split_stars`,
             // `stars_handling.py:124-133`), deterministically by starId
             case Some(f) => ds.orderBy("starId").limit((ds.count() * f).toInt)
@@ -150,69 +130,67 @@ class FileManagerConnector extends StarsConnector {
     if (dfs.isEmpty) spark.emptyDataset[Star] else dfs.reduce(_ unionByName _)
   }
 
+  /** A query's star selection: the `star_class` cleaned of its sample
+    * mark, the explicit file selection (`files_to_load` is a ;-separated
+    * name list, `object_file_name` a single name, both matched on the FILE
+    * name stem — `file_manager.py:16-107`), and its first-N or fraction
+    * sample (`files_limit` / ":N" take precedence over "%f").
+    */
+  private def selection(q: QuerySpec): DatSelection = {
+    val (cls, restr) = q.get("star_class").map(parseSampleName) match {
+      case Some((c, r)) => (Some(c), r)
+      case None         => (None, None)
+    }
+    val limit = q.get("files_limit").flatMap(_.toIntOption)
+      .orElse(restr.flatMap(_.left.toOption))
+    DatSelection(cls,
+      q.get("object_file_name").map(n => Set(strip(n)))
+        .orElse(q.get("files_to_load").map(_.split(";").map(n => strip(n.trim)).toSet)),
+      limit,
+      if (limit.isDefined) None else restr.flatMap(_.toOption))
+  }
+
   private def strip(name: String): String =
     name.stripSuffix(".dat").stripSuffix(".fits").stripSuffix(".parquet")
 
-  /** Systematic-search fetch over a `.dat` directory (SURVEY §2.10): ONE
-    * DataSource V2 scan with the union of all queries' star names pushed
-    * down as `starId IN (...)` — [[graft.sources.v2.DatDataSource]] prunes
-    * the listing to the matching FILES at planning time — joined to the
-    * broadcast (query_id, starId) pair table. Per-query `star_class` /
-    * `db_ident` / `load_lc` / `files_limit` / `:N` / `%f` semantics apply
-    * post-join; limits and fractions become per-query `row_number` windows
-    * over the same starId ordering the per-query path sorts by, so results
-    * are identical. One scan + one broadcast join: no N-way union plan, no
-    * driver loop over queries, and `%f` needs no second counting job (the
-    * per-query count is a window over the already-scanned rows).
+  /** Systematic-search fetch over a `.dat` directory (SURVEY §2.10): each
+    * query's `files_limit` / `:N` / `%f` selection runs on the driver
+    * against ONE listing of the directory, in starId order — the rule
+    * `getStars` applies per query, so results are identical. The selected
+    * stars are then read by ONE DataSource V2 scan, their names pushed down
+    * as `starId IN (...)` so [[graft.sources.v2.DatDataSource]] plans only
+    * those FILES, and each star row fans out to the queries that selected
+    * it through a driver-built starId lookup, which also applies each
+    * query's `star_class` / `db_ident` / `load_lc`. No N-way union plan, no
+    * driver loop over queries, no join and no shuffle: the fetch is one
+    * narrow stage, and `%f` needs no counting job.
     */
   def getStarsDatJoined(spark: SparkSession,
                         todo: Seq[(String, Map[String, String])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
     require(FileManagerConnector.datRoutable(todo), "not a dat-routable query batch")
     val path = todo.head._2("path")
-    val pairRows = todo.flatMap { case (qid, params) =>
-      val q = QuerySpec(params)
-      val (cls, restr) = q.get("star_class") match {
-        case Some(sc) => val (c, r) = parseSampleName(sc); (Some(c), r)
-        case None     => (None, None)
-      }
-      // dedup like the per-query path's Set — "a;a;b" must not double
-      // star rows through the join or inflate the `%f` window count
-      val wanted: Seq[String] = q.get("object_file_name").map(n => Seq(strip(n)))
-        .orElse(q.get("files_to_load").map(_.split(";").map(n => strip(n.trim)).toSeq))
-        .getOrElse(Seq.empty)
-        .distinct
-      val limit = q.get("files_limit").flatMap(_.toIntOption)
-        .orElse(restr.flatMap(_.left.toOption))
-      // the per-query path gives `files_limit`/`:N` precedence over `%f`
-      val frac = if (limit.isDefined) None else restr.flatMap(_.toOption)
-      wanted.map(w => (qid, w, cls, q.get("db_ident"),
-        q.get("load_lc").contains("false"), limit.map(_.toLong), frac))
-    }
-    val pairs = pairRows
-      .toDF("query_id", "starId", "q_class", "q_db", "q_no_lc", "q_limit", "q_frac")
-    val allWanted = pairRows.map(_._2).distinct
-    val wOrd = Window.partitionBy(col("query_id")).orderBy(col("starId"))
+    val listed = DatFile.starIds(spark, path)
+    // starId -> (query_id, star_class, db_ident, load_lc=false) per selecting query
+    val queriesOf: Map[String, Seq[(String, String, String, Boolean)]] = todo.flatMap {
+      case (qid, params) =>
+        val q = QuerySpec(params)
+        val sel = selection(q)
+        sel.pick(listed).map(id => id -> (qid, sel.starClass.orNull, q.get("db_ident").orNull,
+          q.get("load_lc").contains("false")))
+    }.groupMap(_._1)(_._2)
+    val fanOut = udf((id: String) => queriesOf.getOrElse(id, Nil))
     val starCols = graft.model.Star.schema.fieldNames.map(col).toSeq
     spark.read.format("graft.sources.v2.DatDataSource").load(path)
-      .filter(col("starId").isin(allWanted: _*))
-      .join(broadcast(pairs), Seq("starId"))
-      .withColumn("starClass", col("q_class"))
+      .filter(col("starId").isin(queriesOf.keys.toSeq: _*))
+      .withColumn("_q", explode(fanOut(col("starId"))))
+      .withColumn("starClass", col("_q._2"))
       .withColumn("identNames",
-        when(col("q_db").isNotNull, map(col("q_db"), col("starId")))
+        when(col("_q._3").isNotNull, map(col("_q._3"), col("starId")))
           .otherwise(col("identNames")))
       .withColumn("lightCurves",
-        when(col("q_no_lc"), array().cast(graft.model.Star.schema("lightCurves").dataType))
+        when(col("_q._4"), array().cast(graft.model.Star.schema("lightCurves").dataType))
           .otherwise(col("lightCurves")))
-      .withColumn("_rn", row_number().over(wOrd))
-      .withColumn("_cnt", count(lit(1)).over(Window.partitionBy(col("query_id"))))
-      .filter(
-        (col("q_limit").isNull && col("q_frac").isNull) ||
-          (col("q_limit").isNotNull && col("_rn") <= col("q_limit")) ||
-          (col("q_frac").isNotNull &&
-            col("_rn") <= (col("_cnt") * col("q_frac")).cast("int")))
-      .select(starCols :+ col("query_id"): _*)
+      .select(starCols :+ col("_q._1").as("query_id"): _*)
   }
 
   /** `.dat`: whitespace-separated `time mag err` with optional comment
@@ -268,6 +246,25 @@ class FileManagerConnector extends StarsConnector {
   }
 }
 
+/** One FileManager query's star selection (see `FileManagerConnector.selection`). */
+private final case class DatSelection(starClass: Option[String], wanted: Option[Set[String]],
+                                      limit: Option[Int], frac: Option[Double]) {
+  def sampled: Boolean = limit.isDefined || frac.isDefined
+
+  /** The selected ids among `listed` (a directory's star ids, sorted): the
+    * wanted names that exist (every listed star when none are named), in
+    * starId order, cut to the first `limit` or to floor(n·frac) — what
+    * `orderBy(starId).limit` keeps of the fetched rows.
+    */
+  def pick(listed: collection.SortedSet[String]): Seq[String] = {
+    val names = wanted.fold(listed.toSeq)(_.filter(listed).toSeq.sorted)
+    limit match {
+      case Some(n) => names.take(n)
+      case None    => frac.fold(names)(f => names.take((names.size * f).toInt))
+    }
+  }
+}
+
 object FileManagerConnector {
   /** True when every query targets the SAME `.dat` directory with an
     * explicit star list (`object_file_name` / `files_to_load`) — the shape
@@ -296,12 +293,12 @@ private[sources] object DatFile {
 
   def starName(file: String): String = file.split("/").last.stripSuffix(".dat")
 
-  /** The `.dat` files directly under `dir`, sorted by name, through the
+  /** The `.dat` files directly under `dir`, sorted by star id, through the
     * session's Hadoop `FileSystem` (so `file:`, `hdfs:`, `s3a:` paths
     * work). Names starting with `_` or `.` are hidden, as in Spark's file
-    * index. A missing directory raises `FileNotFoundException`. Name order
-    * is starId order, so a planning-time `take(n)` equals the per-row
-    * `orderBy(starId).limit(n)`.
+    * index. A missing directory raises `FileNotFoundException`. Sorting by
+    * star id, not by file name (`a-b.dat` < `a.dat` but `a` < `a-b`), makes
+    * a planning-time `take(n)` equal the per-row `orderBy(starId).limit(n)`.
     */
   def list(spark: SparkSession, dir: String): Array[FileStatus] = {
     val p = new Path(dir)
@@ -310,8 +307,12 @@ private[sources] object DatFile {
         val n = f.getPath.getName
         f.isFile && n.endsWith(".dat") && !n.startsWith("_") && !n.startsWith(".")
       }
-      .sortBy(_.getPath.getName)
+      .sortBy(f => starName(f.getPath.getName))
   }
+
+  /** The star ids of [[list]]. */
+  def starIds(spark: SparkSession, dir: String): collection.immutable.SortedSet[String] =
+    collection.immutable.TreeSet.from(list(spark, dir).iterator.map(f => starName(f.getPath.getName)))
 
   /** A whole file as lossy UTF-8: malformed bytes become U+FFFD instead of
     * failing the read.

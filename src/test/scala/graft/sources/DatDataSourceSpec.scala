@@ -80,7 +80,7 @@ class DatDataSourceSpec extends SparkSpec {
     assert(FileManagerConnector.datRoutable(todo))
 
     val joined = fm.getStarsDatJoined(spark, todo)
-    // unwrap AQE (the join/window plan adaptively re-plans)
+    // unwrap AQE in case the plan is adaptive
     val plan = joined.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
@@ -89,8 +89,9 @@ class DatDataSourceSpec extends SparkSpec {
     val scans = plan.collect { case b: BatchScanExec => b }
     assert(scans.length == 1, "one DatScan, not a per-query union")
     assert(!plan.toString.contains("Union"), "no N-way union in the joined fetch plan")
-    // 12 distinct star names across the batch -> 12 files survive pruning
-    assert(filesPlanned(scans.head) == 12)
+    // each query's selection runs on the driver, so only the 7 selected
+    // stars' files are opened (qa keeps 3 of its 4, qc 5 of its 10)
+    assert(filesPlanned(scans.head) == 7)
 
     // loop-path reference: per query getStars + union (the replaced plan)
     val expected = todo.flatMap { case (qid, params) =>
@@ -185,6 +186,21 @@ class DatDataSourceSpec extends SparkSpec {
     assert(v2.DatScan.pack(Seq("a" -> 1L, "big" -> 50 * mb, "c" -> 1L), 8 * mb, 4 * mb, 1) ==
       Seq(Seq("a"), Seq("big"), Seq("c")))
     assert(v2.DatScan.pack(Nil, 128 * mb, 4 * mb, 4).isEmpty)
+  }
+
+  test("files_limit picks by star id, not by file name") {
+    // "a-b.dat" sorts before "a.dat", but star "a" sorts before "a-b"
+    val d = java.nio.file.Files.createTempDirectory("datorder").toString
+    Seq("a.dat", "a-b.dat").foreach(n =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, n), "1.0 13.0 0.1\n"))
+    val fm = StarsProvider.getProvider("FileManager").asInstanceOf[FileManagerConnector]
+    assert(fm.getStars(spark, Seq(QuerySpec(Map("path" -> d, "files_limit" -> "1"))))
+      .collect().map(_.starId).toSeq == Seq("a"))
+    assert(fm.getStarsDatJoined(spark, Seq("q" -> Map("path" -> d,
+      "files_to_load" -> "a-b;a", "files_limit" -> "1")))
+      .select("starId").as[String].collect().toSeq == Seq("a"))
+    assert(spark.read.format(fmt).option("files_limit", "1").load(d)
+      .select("starId").as[String].collect().toSeq == Seq("a"))
   }
 
   test("hidden files are skipped like Spark's file index") {
