@@ -253,12 +253,15 @@ class StarsFilterModel(val descriptors: Seq[Descriptor],
             .cast("double").as(s"o_${m.name}"))
       }
     val row = tagged.agg(aggs.head, aggs.tail: _*).head()
+    // sums over no rows are null: read them as 0 so the guard below fires
     val all = row.schema.fieldNames.zipWithIndex
-      .map { case (f, i) => f -> row.getDouble(i) }.toMap
+      .map { case (f, i) => f -> (if (row.isNullAt(i)) 0.0 else row.getDouble(i)) }.toMap
     val sc = all.collect { case (k, v) if k.startsWith("s_") => k.drop(2) -> v }
     val oc = all.collect { case (k, v) if k.startsWith("o_") => k.drop(2) -> v }
     val rightNum = sc("n")
     val wrongNum = oc("n")
+    require(rightNum > 0 && wrongNum > 0,
+      "Decider statistics can't be computed on an empty sample")
     models.map { m =>
       val tp = sc(m.name)
       val tn = oc(m.name)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column):
@@ -529,33 +529,45 @@ object Similarity {
     // --- assign + probe: pure map over the closure-broadcast centroids ---
     val assign = e.select(col("vec_id").as("c_id"),
       corpusAssignUdf(e0.sparkSession, cents)(col("embedding")).as("list_id"))
-    val probes = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("p_id"),
-        explode(probeListsUdf(e0.sparkSession, cents, nprobe)(col("embedding"))).as("list_id"))
-    val cand = probes
-      .join(assign, Seq("list_id"))
-      .filter(col("p_id") =!= col("c_id"))
-      .select(col("p_id"), col("c_id"))
+    val cand = listCandidates(
+      probeRows(e.filter(col("vec_id") < 20), cents, nprobe), assign)
     ivfRerank(cand,
-      e.select(col("vec_id").as("p_id"), col("embedding").as("pe"), col("nn").as("np")),
       e.select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2")))
   }
 
-  /** Shared exact-cosine re-rank tail: candidates × probe/corpus vector
-    * sides → top-3 per probe.
+  /** The probe side every IVF serve shares: one row per (probe, picked
+    * list) as (p_id, pe, np, list_id), each row carrying its probe's own
+    * vector and norm (the [[withNorm]] dot), so a serve joins its probes
+    * exactly once. Not cached: the frame has one consumer.
     */
-  private def ivfRerank(cand: DataFrame, probeSide: DataFrame,
-                        corpusSide: DataFrame): DataFrame = {
-    val spark = cand.sparkSession
-    val cos = cand
-      .join(probeSide, Seq("p_id"))
-      .join(corpusSide, Seq("c_id"))
-      .withColumn("cosine",
-        round6c(dotC(spark, "pe", "ce2") / (sqrt(col("np")) * sqrt(col("nc2")))))
-    val w = Window.partitionBy(col("p_id")).orderBy(col("cosine").desc, col("c_id"))
-    cos.withColumn("rn", row_number().over(w))
+  private def probeRows(probes: DataFrame,
+                        cents: Array[(Long, Array[Double], Double)],
+                        nprobe: Int, memo: UdfMemo = new UdfMemo): DataFrame =
+    probes.select(col("vec_id").as("p_id"), col("embedding").as("pe"),
+      dotC(probes.sparkSession, "embedding", "embedding").as("np"),
+      explode(probeListsUdf(probes.sparkSession, cents, nprobe, memo)(col("embedding")))
+        .as("list_id"))
+
+  /** Probe rows × the inverted lists (any frame keyed by `list_id` with a
+    * `c_id`): the probe rows broadcast, the lists stream through them, a
+    * probe never matches itself.
+    */
+  private def listCandidates(probes: DataFrame, lists: DataFrame): DataFrame =
+    broadcast(probes).join(lists, Seq("list_id"))
+      .filter(col("p_id") =!= col("c_id"))
+
+  /** Shared exact-cosine re-rank tail: candidates (p_id, c_id, pe, np) ×
+    * the corpus vector side (c_id, ce2, nc2) → top-3 per probe. The
+    * candidates already carry the probe vectors, so the only join is the
+    * corpus one.
+    */
+  private def ivfRerank(cand: DataFrame, corpusSide: DataFrame): DataFrame = {
+    val cosine = round6c(dotC(cand.sparkSession, "pe", "ce2") /
+      (sqrt(col("np")) * sqrt(col("nc2"))))
+    val w = Window.partitionBy(col("p_id")).orderBy(cosine.desc, col("c_id"))
+    cand.join(corpusSide, Seq("c_id"))
+      .select(col("p_id"), col("c_id"), cosine.as("cosine"), row_number().over(w).as("rn"))
       .filter(col("rn") <= 3)
-      .select(col("p_id"), col("c_id"), col("cosine"), col("rn"))
   }
 
   /** Centroid-training budget: at most this many vectors per centroid
@@ -799,22 +811,34 @@ object Similarity {
     */
   private def probeListsUdf(spark: SparkSession,
                             cents: Array[(Long, Array[Double], Double)],
-                            nprobe: Int) = {
+                            nprobe: Int, memo: UdfMemo) = {
     val minK = spark.conf.getOption(TWOLEVEL_MIN_K_CONF).map(_.toInt)
       .getOrElse(IVF_TWOLEVEL_MIN_K)
-    if (cents.length < minK) {
-      graft.Telemetry.record(s"ivf probe=exact k=${cents.length}")
-      topListsUdf(cents, nprobe)
-    } else {
-      val w = spark.conf.getOption(COARSE_W_CONF).map(_.toInt)
-        .getOrElse(IVF_COARSE_W)
-      val cells = buildCoarseCells(cents,
-        math.ceil(math.sqrt(cents.length.toDouble)).toInt)
-      graft.Telemetry.record(s"ivf probe=twolevel k=${cents.length} " +
-        s"coarse=${cells.cents.length} w=$w")
-      topListsTwoLevelUdf(cents, cells, w, nprobe)
-    }
+    val (note, picks) =
+      if (cents.length < minK)
+        memo.getOrElseUpdate(s"probe exact $nprobe",
+          (s"ivf probe=exact k=${cents.length}", topListsUdf(cents, nprobe)))
+      else {
+        val w = spark.conf.getOption(COARSE_W_CONF).map(_.toInt)
+          .getOrElse(IVF_COARSE_W)
+        memo.getOrElseUpdate(s"probe twolevel $w $nprobe", {
+          val cells = buildCoarseCells(cents,
+            math.ceil(math.sqrt(cents.length.toDouble)).toInt)
+          (s"ivf probe=twolevel k=${cents.length} coarse=${cells.cents.length} w=$w",
+            topListsTwoLevelUdf(cents, cells, w, nprobe))
+        })
+      }
+    graft.Telemetry.record(note)
+    picks
   }
+
+  /** The probe-list udfs a resolved index has built, keyed by path and
+    * dials, each with its telemetry note: building a udf reflects over its
+    * Scala types, about a third of a serve's plan-building time, so a
+    * loaded index builds each one once.
+    */
+  private[operators] type UdfMemo =
+    scala.collection.concurrent.TrieMap[String, (String, UserDefinedFunction)]
 
   /** The corpus-assignment udf every IVF build shares (inline q57/q95/
     * q181 shapes, [[writeIvfIndex]], [[writeIvfPqIndex]]): exact argmax
@@ -888,7 +912,9 @@ object Similarity {
     * `foreachBatch` like [[LoadedSq8Index]].
     */
   final case class LoadedIvfIndex private[operators] (
-      cents: Array[(Long, Array[Double], Double)], lists: DataFrame, vecs: DataFrame)
+      cents: Array[(Long, Array[Double], Double)], lists: DataFrame, vecs: DataFrame) {
+    private[operators] val udfs = new UdfMemo
+  }
 
   def loadIvfIndex(spark: SparkSession, indexPath: String): LoadedIvfIndex = {
     val meta = IndexMeta.read(spark, indexPath, "writeIvfIndex") // strict: no foreign indexes
@@ -905,18 +931,18 @@ object Similarity {
         .select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2")))
   }
 
+  /** One probe batch against a resolved IVF index, as one plan that
+    * registers no cache: the probe rows (p_id, pe, np, list_id) broadcast
+    * once, the stored lists stream through them, and the candidates carry
+    * their probe vectors into the exact re-rank — so the probes are read
+    * once and joined once. Measured at 4 Spark jobs per batch (probe-row
+    * broadcast, stored-vector broadcast, the re-rank window's shuffle,
+    * result).
+    */
   def ivfSearch(probes: DataFrame, idx: LoadedIvfIndex,
                 nprobe: Int = NPROBE): DataFrame = {
-    val p = graft.CacheScope.cache(withNorm(probes))
-    val probeLists = p.select(col("vec_id").as("p_id"),
-      explode(probeListsUdf(probes.sparkSession, idx.cents, nprobe)(col("embedding"))).as("list_id"))
-    val cand = probeLists
-      .join(idx.lists, Seq("list_id"))
-      .filter(col("p_id") =!= col("c_id"))
-      .select(col("p_id"), col("c_id"))
-    ivfRerank(cand,
-      p.select(col("vec_id").as("p_id"), col("embedding").as("pe"), col("nn").as("np")),
-      idx.vecs)
+    ivfRerank(
+      listCandidates(probeRows(probes, idx.cents, nprobe, idx.udfs), idx.lists), idx.vecs)
   }
 
   def ivfSearchAgainstIndex(probes: DataFrame, indexPath: String,
@@ -1332,13 +1358,13 @@ object Similarity {
                                   refine: Int = PQ_REFINE): DataFrame = {
     val e = graft.CacheScope.cache(withNorm(e0))
     val (cents, dsub, codes) = pqModel(e, m, k)
-    val cand = codesRerank(
-      e.filter(col("vec_id") < 20).select(col("vec_id").as("p_id"),
-        col("embedding").as("pe"), col("nn").as("np")),
+    val probeSide = e.filter(col("vec_id") < 20).select(col("vec_id").as("p_id"),
+      col("embedding").as("pe"), col("nn").as("np"))
+    val cand = codesRerank(probeSide,
       codes, (pe, cs) => pqDotUdf(cents, dsub)(pe, cs), k = refine)
       .select(col("p_id"), col("c_id"))
+      .join(broadcast(probeSide), Seq("p_id"))
     ivfRerank(cand,
-      e.select(col("vec_id").as("p_id"), col("embedding").as("pe"), col("nn").as("np")),
       e.select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2")))
   }
 
@@ -1398,18 +1424,11 @@ object Similarity {
     val ivfCents = trainCentroidsSampled(e, ivfK, IVF_TRAIN_PER_CENTROID)
     val assign = e.select(col("vec_id").as("c_id"),
       corpusAssignUdf(e0.sparkSession, ivfCents)(col("embedding")).as("list_id"))
-    val probeLists = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("p_id"),
-        explode(probeListsUdf(e0.sparkSession, ivfCents, nprobe)(col("embedding"))).as("list_id"))
-    val cand = probeLists
-      .join(assign, Seq("list_id"))
-      .filter(col("p_id") =!= col("c_id"))
-      .select(col("p_id"), col("c_id"))
+    val cand = listCandidates(
+      probeRows(e.filter(col("vec_id") < 20), ivfCents, nprobe), assign)
     // PQ stage: ADC rank of the pruned candidates through the code bytes
     val (pqCents, dsub, codes) = pqModel(e, m, pqK)
     val adc = cand
-      .join(broadcast(e.filter(col("vec_id") < 20).select(col("vec_id").as("p_id"),
-        col("embedding").as("pe"), col("nn").as("np"))), Seq("p_id"))
       .join(codes, Seq("c_id"))
       .withColumn("acos",
         round6c(pqDotUdf(pqCents, dsub)(col("pe"), col("codes")) /
@@ -1417,10 +1436,9 @@ object Similarity {
     val wAdc = Window.partitionBy(col("p_id")).orderBy(col("acos").desc, col("c_id"))
     val pruned = adc.withColumn("arn", row_number().over(wAdc))
       .filter(col("arn") <= PQ_REFINE)
-      .select(col("p_id"), col("c_id"))
+      .select(col("p_id"), col("c_id"), col("pe"), col("np"))
     // refine stage: q57's exact tail over the survivors
     ivfRerank(pruned,
-      e.select(col("vec_id").as("p_id"), col("embedding").as("pe"), col("nn").as("np")),
       e.select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2")))
   }
 
@@ -1607,43 +1625,32 @@ object Similarity {
         "aggregate(residual, 0d, (acc, x) -> acc + x * x)").as("r2"))
       .agg(coalesce(avg(col("r2")), lit(0.0))).head().getDouble(0)
 
-  /** The serve tail every q181 surface shares: probes pick their lists,
-    * ADC ranks the stored codes against centroid+codeword
-    * reconstructions, exact refine over the PQ_REFINE survivors.
+  /** The serve tail every q181 surface shares, as one plan with no
+    * cache: the probe rows (p_id, pe, np, list_id) broadcast once and the
+    * stored codes stream through them on `list_id`; ADC ranks the codes
+    * against centroid+codeword reconstructions; the top PQ_REFINE per
+    * probe keep their pe/np through that window; the survivors join the
+    * stored vectors (broadcast) for the exact refine, whose window reuses
+    * the ADC window's `p_id` partitioning — one shuffle per batch.
     */
-  private def ivfPqResidualServe(probes: DataFrame,
-                                 ivfCents: Array[(Long, Array[Double], Double)],
-                                 pqCents: Array[Array[Array[Double]]],
-                                 dsub: Int, codes: DataFrame,
-                                 corpusVecs: DataFrame, nprobe: Int): DataFrame = {
-    val centMap = ivfCents.map { case (id, c, _) => id -> c }.toMap
-    val p = graft.CacheScope.cache(withNorm(probes))
-    val probeLists = p.select(col("vec_id").as("p_id"),
-      explode(probeListsUdf(probes.sparkSession, ivfCents, nprobe)(col("embedding"))).as("list_id"))
-    val adc = probeLists
-      .join(codes, Seq("list_id"))
-      .filter(col("p_id") =!= col("c_id"))
-      .join(broadcast(p.select(col("vec_id").as("p_id"),
-        col("embedding").as("pe"), col("nn").as("np"))), Seq("p_id"))
-      .withColumn("acos",
-        round6c(pqDotResUdf(pqCents, dsub, centMap)(col("pe"), col("codes"), col("list_id")) /
-          (sqrt(col("np")) * sqrt(col("nq")))))
-    val wAdc = Window.partitionBy(col("p_id")).orderBy(col("acos").desc, col("c_id"))
-    val pruned = adc.withColumn("arn", row_number().over(wAdc))
+  private def ivfPqResidualServe(probes: DataFrame, idx: LoadedIvfPqIndex,
+                                 nprobe: Int): DataFrame = {
+    val acos = round6c(idx.adcUdf(col("pe"), col("codes"), col("list_id")) /
+      (sqrt(col("np")) * sqrt(col("nq"))))
+    val wAdc = Window.partitionBy(col("p_id")).orderBy(acos.desc, col("c_id"))
+    val pruned = listCandidates(probeRows(probes, idx.ivfCents, nprobe, idx.udfs), idx.codes)
+      .select(col("p_id"), col("c_id"), col("pe"), col("np"), row_number().over(wAdc).as("arn"))
       .filter(col("arn") <= PQ_REFINE)
-      .select(col("p_id"), col("c_id"))
-    ivfRerank(pruned,
-      p.select(col("vec_id").as("p_id"), col("embedding").as("pe"), col("nn").as("np")),
-      corpusVecs)
+    ivfRerank(pruned, idx.vecs)
   }
 
   private[graft] def ivfPqResidualTopK(e0: DataFrame, ivfK: Int, nprobe: Int,
                                        m: Int, pqK: Int): DataFrame = {
     val e = graft.CacheScope.cache(withNorm(e0))
     val (ivfCents, pqCents, dsub, codes, _) = ivfPqResidualModel(e, ivfK, m, pqK)
-    ivfPqResidualServe(e.filter(col("vec_id") < 20), ivfCents, pqCents, dsub,
-      codes,
-      e.select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2")),
+    ivfPqResidualServe(e.filter(col("vec_id") < 20),
+      LoadedIvfPqIndex(ivfCents, pqCents, dsub, codes,
+        e.select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2"))),
       nprobe)
   }
 
@@ -1680,6 +1687,22 @@ object Similarity {
     while (m > 1 && dim % m != 0) m /= 2
     m
   }
+
+  /** The schemas of the four tables a residual IVF-PQ index holds, as
+    * [[writeIvfPqIndex]] and [[appendIvfPqDelta]] write them: the two
+    * model tables come from typed driver rows, the code and vector tables
+    * go through [[ivfPqTable]]. [[loadIvfPqIndex]] reads with them, so a
+    * load starts no schema-inference job.
+    */
+  private val IvfPqCentroidsSchema = "cent_id BIGINT, centroid ARRAY<DOUBLE>, norm DOUBLE"
+  private val IvfPqCodebookSchema = "s INT, code INT, j INT, cv DOUBLE"
+  private val IvfPqCodesSchema = "c_id BIGINT, list_id BIGINT, codes BINARY, nq DOUBLE"
+  private val IvfPqVectorsSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>, nn DOUBLE"
+
+  /** `df`'s columns cast to one of the IVF-PQ table schemas above. */
+  private def ivfPqTable(df: DataFrame, schema: String): DataFrame =
+    df.select(org.apache.spark.sql.types.StructType.fromDDL(schema).fields
+      .map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
 
   /** Materialize the residual IVF-PQ index — the index-once/serve-many
     * shape for q181 (what a billion-vector deployment actually runs):
@@ -1735,9 +1758,8 @@ object Similarity {
       } yield (s, c, j, pqCents(s)(c)(j))
       flat.toDF("s", "code", "j", "cv")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      e.select(col("vec_id"), col("embedding"), col("nn"))
-        .write.mode("overwrite").parquet(s"$path/vectors")
+      ivfPqTable(codes, IvfPqCodesSchema).write.mode("overwrite").parquet(s"$path/codes")
+      ivfPqTable(e, IvfPqVectorsSchema).write.mode("overwrite").parquet(s"$path/vectors")
       // the base drift statistic appends compare against — one aggregate
       // over the assign frame the model build cached anyway
       (dsub * mUsed, n, meanResid2(assign))
@@ -1753,12 +1775,20 @@ object Similarity {
     * collected (quantizer ≤ recorded ivf_k rows, codebook ≤ m·k·dsub),
     * code/vector frames resolved ONCE (base ∪ live delta segments — the
     * serve kernel is one union-read away from incremental, exactly like
-    * BM25's segment load).
+    * BM25's segment load). [[loadIvfPqIndex]] reads all four tables with
+    * their written schemas, so a load is 2 Spark jobs (the two collects)
+    * and no schema inference; serving from it registers no caches, and
+    * its probe-list and ADC udfs are built once per load ([[UdfMemo]]).
     */
   final case class LoadedIvfPqIndex private[operators] (
       ivfCents: Array[(Long, Array[Double], Double)],
       pqCents: Array[Array[Array[Double]]], dsub: Int,
-      codes: DataFrame, vecs: DataFrame)
+      codes: DataFrame, vecs: DataFrame) {
+    private[operators] val udfs = new UdfMemo
+    /** The ADC kernel over this index's model ([[pqDotResUdf]]), built once. */
+    private[operators] lazy val adcUdf =
+      pqDotResUdf(pqCents, dsub, ivfCents.map { case (id, c, _) => id -> c }.toMap)
+  }
 
   /** Live delta segment names from the meta's `deltas` count — the meta
     * is the single source of segment topology (a crashed append leaves a
@@ -1778,12 +1808,13 @@ object Similarity {
     val dim = meta.getProperty("dim").toInt
     require(k <= 256 && m >= 1 && dim % m == 0,
       s"residual IVF-PQ index at $indexPath records unusable dials m=$m k=$k dim=$dim")
-    val cents0 = spark.read.parquet(s"$indexPath/centroids").collect()
+    val cents0 = spark.read.schema(IvfPqCentroidsSchema).parquet(s"$indexPath/centroids")
+      .collect()
     require(cents0.length <= ivfK,
       s"index at $indexPath holds ${cents0.length} centroids but records ivf_k=$ivfK")
     val dsub = dim / m
     val pqCents = Array.fill(m, k)(null: Array[Double])
-    spark.read.parquet(s"$indexPath/codebook").collect().foreach { r =>
+    spark.read.schema(IvfPqCodebookSchema).parquet(s"$indexPath/codebook").collect().foreach { r =>
       val (s, c, j) = (r.getInt(0), r.getInt(1), r.getInt(2))
       if (pqCents(s)(c) == null) pqCents(s)(c) = new Array[Double](dsub)
       pqCents(s)(c)(j) = r.getDouble(3)
@@ -1792,9 +1823,9 @@ object Similarity {
       cents0.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
         .sortBy(_._1),
       pqCents, dsub,
-      spark.read.parquet(
+      spark.read.schema(IvfPqCodesSchema).parquet(
         (s"$indexPath/codes" +: deltaNames(meta).map(d => s"$indexPath/$d/codes")): _*),
-      spark.read.parquet(
+      spark.read.schema(IvfPqVectorsSchema).parquet(
         (s"$indexPath/vectors" +: deltaNames(meta).map(d => s"$indexPath/$d/vectors")): _*)
         .select(col("vec_id").as("c_id"), col("embedding").as("ce2"), col("nn").as("nc2")))
   }
@@ -1803,11 +1834,14 @@ object Similarity {
     * streaming callers need: [[StreamingIvfPq]] hoists the load outside
     * `foreachBatch` (one meta read + two bounded collects per query
     * start, zero per batch), exactly like [[ivfSearch]]/[[sq8Search]].
+    * One batch is one uncached plan ([[ivfPqResidualServe]]): 4 Spark
+    * jobs (probe-row broadcast, the ADC window's shuffle, stored-vector
+    * broadcast, result) and no cache registered, with or without an open
+    * [[graft.CacheScope]].
     */
   def ivfPqSearch(probes: DataFrame, idx: LoadedIvfPqIndex,
                   nprobe: Int = NPROBE): DataFrame =
-    ivfPqResidualServe(probes, idx.ivfCents, idx.pqCents, idx.dsub,
-      idx.codes, idx.vecs, nprobe)
+    ivfPqResidualServe(probes, idx, nprobe)
 
   def ivfPqSearchAgainstIndex(probes: DataFrame, indexPath: String,
                               nprobe: Int = NPROBE): DataFrame =
@@ -1884,10 +1918,10 @@ object Similarity {
       IndexMeta.invalidate(spark, path)
       val enc = pqEncodeResUdf(idx.pqCents, idx.dsub, centMap)(
         col("residual"), col("list_id"))
-      assign.select(col("c_id"), col("list_id"),
-          enc.getField("_1").as("codes"), enc.getField("_2").as("nq"))
+      ivfPqTable(assign.select(col("c_id"), col("list_id"),
+          enc.getField("_1").as("codes"), enc.getField("_2").as("nq")), IvfPqCodesSchema)
         .write.mode("overwrite").parquet(s"$path/$segName/codes")
-      e.select(col("vec_id"), col("embedding"), col("nn"))
+      ivfPqTable(e, IvfPqVectorsSchema)
         .write.mode("overwrite").parquet(s"$path/$segName/vectors")
       (n, r2)
     }
@@ -1964,7 +1998,7 @@ object Similarity {
         PQ_M_AUTO
       else meta.getProperty("m").toInt
     val stage = s"$path/_retrain_stage"
-    spark.read.parquet(
+    spark.read.schema(IvfPqVectorsSchema).parquet(
         (s"$path/vectors" +: deltaNames(meta).map(d => s"$path/$d/vectors")): _*)
       .select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(stage)

@@ -65,6 +65,16 @@ class StarsFilterSpec extends SparkSpec {
     assert(stats.count() == deciders.size + 1)
   }
 
+  test("decider statistics refuse an empty searched or others sample") {
+    // without the guard an empty side divides by zero (NaN/Infinity rates)
+    // and two empty sides read a null count
+    val none = searched.limit(0)
+    for ((s, o) <- Seq((none, others), (searched, none), (none, none))) {
+      val err = intercept[IllegalArgumentException](model.getStatistic(s, o))
+      assert(err.getMessage.contains("empty sample"), err.getMessage)
+    }
+  }
+
   test("roc sweep is monotone-ish and bounded") {
     val roc = model.roc(searched, others, nPoints = 10).collect()
     assert(roc.length == 10)
