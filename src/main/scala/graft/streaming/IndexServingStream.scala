@@ -3,12 +3,20 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The one streaming scaffold every materialized-index serving stream
-  * shares ([[StreamingAnn]], [[StreamingSq8]]): probe rows stream from a
-  * parquet file source, each micro-batch runs a BATCH search kernel built
-  * from the index resolved ONCE at query start, and the sink is an
-  * idempotent `batch_<id>` overwrite. Centralizing it means the two
-  * contracts that make serving safe live in exactly one place:
+/** The one streaming entry every materialized-index serving stream
+  * shares — the vector serves bind to it directly, e.g.
+  * {{{
+  * IndexServingStream.run(spark, probeDir, schema, indexPath, out, ckpt) {
+  *   val idx = Similarity.loadIvfPqIndex(spark, indexPath)
+  *   batch => Similarity.ivfPqSearch(batch, idx)
+  * }
+  * }}}
+  * and the text gates wrap it. Probe rows stream from a parquet file
+  * source, each micro-batch runs a BATCH search kernel built from the
+  * index resolved ONCE at query start, and the sink is an idempotent
+  * `batch_<id>` overwrite (readers load it with
+  * `recursiveFileLookup=true`). Centralizing it means the two contracts
+  * that make serving safe live in exactly one place:
   *
   *  - fingerprint BEFORE load: the meta fingerprint is captured before
   *    the index frames resolve, so a rebuild landing between the two
@@ -19,18 +27,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    (one FS stat + tiny read) and fails loudly if the index was
   *    replaced, never serving a mixture of old plan and new files.
   *
-  * `search` receives the probe micro-batch and returns the scored frame;
-  * it closes over the pre-resolved index, so per-batch corpus work is
+  * `resolve` loads the index and returns the search: a function from the
+  * probe micro-batch to the scored frame that closes over the
+  * pre-resolved index, so per-batch corpus work is
   * whatever the batch kernel does — no state, no watermark, checkpointed
   * file-source progress, and at-least-once replays re-place rather than
   * duplicate output.
   */
-private[streaming] object IndexServingStream {
+private[graft] object IndexServingStream {
 
   def run(spark: SparkSession, probeDir: String,
           probeSchema: org.apache.spark.sql.types.StructType,
           indexPath: String, outPath: String, checkpoint: String,
-          trigger: Trigger)(resolve: => DataFrame => DataFrame): StreamingQuery = {
+          trigger: Trigger = Trigger.AvailableNow())(
+      resolve: => DataFrame => DataFrame): StreamingQuery = {
     val loadedFp = graft.operators.IndexMeta.fingerprint(spark, indexPath)
     val search = resolve // index frames resolve ONCE, after the fingerprint
     spark.readStream

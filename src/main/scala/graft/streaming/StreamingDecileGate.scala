@@ -51,7 +51,7 @@ object StreamingDecileGate {
           checkpoint: String, minDecile: Int = 9,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // resolved ONCE: 9 doubles, baked into the per-batch plan as a
-    // literal. Fingerprint BEFORE the read (the StreamingAnn ordering), so
+    // literal. Fingerprint BEFORE the read (the IndexServingStream ordering), so
     // a rebuild racing the load fails the first batch loudly; each batch
     // re-checks and fails instead of serving retired boundaries.
     val loadedFp = graft.operators.IndexMeta.fingerprint(spark, boundariesPath)

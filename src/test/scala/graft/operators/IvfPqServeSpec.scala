@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * uncached plan of at most 4 Spark jobs (probe-row broadcast, ADC
   * shuffle, vector broadcast, result), and a load reads the index's four
   * tables with the schemas the writer wrote, so it runs only its two
-  * bounded model collects.
+  * bounded model collects. Every index family's serve (ann, ivf, sq8,
+  * pq, ivfpq) registers no cache.
   */
 class IvfPqServeSpec extends SparkSpec {
   import spark.implicits._
@@ -58,12 +59,27 @@ class IvfPqServeSpec extends SparkSpec {
   }
 
   test("the serve caches nothing, even outside any CacheScope") {
-    spark.catalog.clearCache()
-    val idx = Similarity.loadIvfPqIndex(spark, indexPath)
-    val served = Similarity.ivfPqSearch(probes, idx)
-    assert(served.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty,
-      served.queryExecution.optimizedPlan.treeString)
-    served.collect()
-    assert(spark.sharedState.cacheManager.isEmpty, "a serve left a cached frame behind")
+    // every index family's serve, over one 2000-vector corpus; ivfpq
+    // serves the spec's base ∪ delta index
+    val tmp = java.nio.file.Files.createTempDirectory("serve_nocache").toString
+    val corpus = graft.Synth.synthEmb(spark, 2000L).select("vec_id", "embedding")
+    Similarity.writeAnnIndex(corpus, s"$tmp/ann")
+    Similarity.writeIvfIndex(corpus, s"$tmp/ivf")
+    Similarity.writeSq8Index(corpus, s"$tmp/sq8")
+    Similarity.writePqIndex(corpus, s"$tmp/pq")
+    val serves: Seq[(String, () => DataFrame)] = Seq(
+      "ann" -> (() => Similarity.annSearch(probes, Similarity.loadAnnIndex(spark, s"$tmp/ann"))),
+      "ivf" -> (() => Similarity.ivfSearch(probes, Similarity.loadIvfIndex(spark, s"$tmp/ivf"))),
+      "sq8" -> (() => Similarity.sq8Search(probes, Similarity.loadSq8Index(spark, s"$tmp/sq8"))),
+      "pq" -> (() => Similarity.pqSearch(probes, Similarity.loadPqIndex(spark, s"$tmp/pq"))),
+      "ivfpq" -> (() => Similarity.ivfPqSearch(probes, Similarity.loadIvfPqIndex(spark, indexPath))))
+    for ((family, serve) <- serves) {
+      spark.catalog.clearCache()
+      val served = serve()
+      assert(served.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty,
+        s"$family: ${served.queryExecution.optimizedPlan.treeString}")
+      assert(served.collect().nonEmpty, s"$family: the serve found no neighbors")
+      assert(spark.sharedState.cacheManager.isEmpty, s"a $family serve left a cached frame behind")
+    }
   }
 }

@@ -77,6 +77,33 @@ class IvfTwoLevelSpec extends SparkSpec {
         s"${two.count { case (k, v) => ex(k) != v }} of ${two.size} differ")
   }
 
+  test("a zero-norm vector assigns identically on both paths and builds an IVF-PQ index") {
+    // every cosine of a zero vector is NaN: the pickers must still land it
+    // on a real list (the lowest cent_id), or the residual encode has no
+    // centroid to subtract
+    val tmp = java.nio.file.Files.createTempDirectory("ivf_2l_zero").toString
+    val corpus = ((0L until 24L).map { i =>
+      (i, Seq.tabulate(8)(j => (if ((i + j) % 2 == 0) 1.0 else 0.1 + i * 0.01).toFloat))
+    } :+ (99L, Seq.fill(8)(0.0f))).toDF("vec_id", "embedding")
+    def codeLists(path: String): Map[Long, Long] =
+      spark.read.parquet(s"$path/codes").select("c_id", "list_id")
+        .as[(Long, Long)].collect().toMap
+    graft.Telemetry.drain()
+    withConf(Similarity.TWOLEVEL_MIN_K_CONF -> "2", Similarity.COARSE_W_CONF -> "9999") {
+      Similarity.writeIvfPqIndex(corpus, s"$tmp/twolevel")
+    }
+    assert(graft.Telemetry.drain().exists(_.contains("ivf assign=twolevel")),
+      "forced gate must take the two-level path")
+    withConf(Similarity.TWOLEVEL_MIN_K_CONF -> Int.MaxValue.toString) {
+      Similarity.writeIvfPqIndex(corpus, s"$tmp/exact")
+    }
+    val (two, ex) = (codeLists(s"$tmp/twolevel"), codeLists(s"$tmp/exact"))
+    val cents = spark.read.parquet(s"$tmp/exact/centroids").select("cent_id").as[Long]
+      .collect().toSet
+    assert(cents.contains(ex(99L)), s"the zero vector landed on list ${ex(99L)}, not a centroid")
+    assert(two == ex, s"paths disagree on ${two.count { case (k, v) => ex(k) != v }} vectors")
+  }
+
   test("default-w two-level serve recall within 0.02 of exact assignment") {
     val tmp = java.nio.file.Files.createTempDirectory("ivf_2l_rec").toString
     val corpus = graft.Synth.synthEmb(spark, 20000L)

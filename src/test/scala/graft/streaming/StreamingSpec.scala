@@ -139,144 +139,106 @@ class StreamingSpec extends SparkSpec {
       col("dup_of") === 101L).count() == 1)
   }
 
-  test("streaming ANN probes match the batch search against a stored index") {
-    val tmp = java.nio.file.Files.createTempDirectory("annstream").toString
-    // tiny 4-dim corpus, indexed once; vec 0 and 2 are near-identical
-    def vf(xs: Double*) = xs.map(_.toFloat)
-    val corpus = Seq(
-      (0L, vf(1.0, 0.1, 0.0, 0.0)), (1L, vf(0.0, 1.0, 0.0, 0.1)),
-      (2L, vf(0.9, 0.12, 0.0, 0.0)), (3L, vf(0.0, 0.0, 1.0, 0.0)),
-      (4L, vf(0.1, 0.9, 0.1, 0.0)), (5L, vf(0.0, 0.1, 0.9, 0.1)))
-      .toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeAnnIndex(corpus, s"$tmp/index")
+  /** The vector-serving families as (family, index writer, load+search
+    * binding): the binding is exactly what a serving stream hands
+    * [[IndexServingStream.run]], and applied to a probe frame directly it
+    * is the batch search the stream must match.
+    */
+  private val vectorFamilies: Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit,
+      String => org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = {
+    import graft.operators.Similarity._
+    Seq(
+      ("ann", writeAnnIndex(_, _),
+        p => { val idx = loadAnnIndex(spark, p); b => annSearch(b, idx) }),
+      ("sq8", writeSq8Index(_, _),
+        p => { val idx = loadSq8Index(spark, p); b => sq8Search(b, idx) }),
+      ("ivf", writeIvfIndex(_, _),
+        p => { val idx = loadIvfIndex(spark, p); b => ivfSearch(b, idx) }),
+      ("ivfpq", writeIvfPqIndex(_, _),
+        p => { val idx = loadIvfPqIndex(spark, p); b => ivfPqSearch(b, idx) }))
+  }
 
-    val probes1 = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
+  /** A serving stream of `family` against the index at `index`. */
+  private def serveStream(family: String, in: String,
+                          schema: org.apache.spark.sql.types.StructType, index: String,
+                          out: String, ckpt: String,
+                          trigger: Trigger = Trigger.AvailableNow()) =
+    IndexServingStream.run(spark, in, schema, index, out, ckpt, trigger)(
+      vectorFamilies.find(_._1 == family).get._3(index))
+
+  private def vf(xs: Double*) = xs.map(_.toFloat)
+
+  /** 24 8-dim vectors in two separated clusters (even ids near axis 0,
+    * odd ids near axis 2): dim is a multiple of PQ_M = 8 and there are
+    * ≥ 16 vectors for both seed tables (IVF_K and PQ_K), so every family
+    * builds on it and its lists and codes have real structure.
+    */
+  private def vecCorpus = (0L until 24L).map { i =>
+    val base = if (i % 2 == 0) vf(1.0, 0.1, 0.0, 0.0, 0.2, 0.0, 0.0, 0.0)
+               else vf(0.0, 0.1, 1.0, 0.0, 0.0, 0.2, 0.0, 0.0)
+    (i, base.updated(1, (0.1 + i * 0.01).toFloat))
+  }.toDF("vec_id", "embedding")
+
+  private def vecProbe(id: Long, v: Seq[Float]) = Seq((id, v)).toDF("vec_id", "embedding")
+
+  /** Streams two probe batches through `family`'s serving stream: the first
+    * must equal the batch search and land in its own cluster, the second
+    * must resume from the checkpoint without re-serving the first.
+    */
+  private def checkVectorServe(family: String): Unit = {
+    val (_, write, search) = vectorFamilies.find(_._1 == family).get
+    val tmp = java.nio.file.Files.createTempDirectory(s"${family}stream").toString
+    write(vecCorpus, s"$tmp/index")
+    def drain(): org.apache.spark.sql.DataFrame = {
+      serveStream(family, s"$tmp/in", vecProbe(0L, Nil).schema,
+        s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
+      spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
+    }
+    val probes1 = vecProbe(100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0))
     probes1.write.mode("append").parquet(s"$tmp/in")
-    StreamingAnn.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out1 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    val batch1 = graft.operators.Similarity.annAgainstIndex(probes1, s"$tmp/index")
+    val out1 = drain()
+    val batch1 = search(s"$tmp/index")(probes1)
     assert(out1.collect().map(_.toSeq).toSet == batch1.collect().map(_.toSeq).toSet,
-      "streamed and batch neighbors diverged")
-    assert(out1.filter(col("p_id") === 100L && col("rn") === 1).head().getLong(1) == 0L,
-      "nearest neighbor of the probe must be vec 0")
+      s"$family: streamed and batch neighbors diverged")
+    val nearest = out1.filter(col("p_id") === 100L && col("rn") === 1)
+      .select("c_id").as[Long].collect()
+    assert(nearest.length == 1 && nearest.head % 2 == 0,
+      s"$family: the probe's nearest neighbor must be in its own cluster: ${nearest.toSeq}")
 
-    // second batch resumes from the checkpoint
-    Seq((101L, vf(0.0, 0.05, 0.95, 0.05))).toDF("vec_id", "embedding")
+    // a second batch resumes from the checkpoint
+    vecProbe(101L, vf(0.0, 0.05, 0.95, 0.0, 0.0, 0.21, 0.0, 0.0))
       .write.mode("append").parquet(s"$tmp/in")
-    StreamingAnn.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out2 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    assert(out2.filter(col("p_id") === 101L).count() > 0, "new probe served")
+    val out2 = drain()
+    assert(out2.filter(col("p_id") === 101L).count() > 0, s"$family: new probe served")
     assert(out2.filter(col("p_id") === 100L).count() == out1.count(),
-      "restart must not re-serve processed probes")
+      s"$family: restart must not re-serve processed probes")
+  }
+
+  test("streaming ANN probes match the batch search against a stored index") {
+    checkVectorServe("ann")
   }
 
   test("streaming SQ8 probes match the batch search against a stored code table") {
-    val tmp = java.nio.file.Files.createTempDirectory("sq8stream").toString
-    def vf(xs: Double*) = xs.map(_.toFloat)
-    val corpus = Seq(
-      (0L, vf(1.0, 0.1, 0.0, 0.0)), (1L, vf(0.0, 1.0, 0.0, 0.1)),
-      (2L, vf(0.9, 0.12, 0.0, 0.0)), (3L, vf(0.0, 0.0, 1.0, 0.0)),
-      (4L, vf(0.1, 0.9, 0.1, 0.0)), (5L, vf(0.0, 0.1, 0.9, 0.1)))
-      .toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeSq8Index(corpus, s"$tmp/index")
-
-    val probes1 = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
-    probes1.write.mode("append").parquet(s"$tmp/in")
-    StreamingSq8.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out1 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    val batch1 = graft.operators.Similarity.sq8SearchAgainstIndex(probes1, s"$tmp/index")
-    assert(out1.collect().map(_.toSeq).toSet == batch1.collect().map(_.toSeq).toSet,
-      "streamed and batch SQ8 neighbors diverged")
-    assert(out1.filter(col("p_id") === 100L && col("rn") === 1).head().getLong(1) == 0L,
-      "nearest neighbor of the probe must be vec 0")
-
-    // second batch resumes from the checkpoint
-    Seq((101L, vf(0.0, 0.05, 0.95, 0.05))).toDF("vec_id", "embedding")
-      .write.mode("append").parquet(s"$tmp/in")
-    StreamingSq8.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out2 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    assert(out2.filter(col("p_id") === 101L).count() > 0, "new probe served")
-    assert(out2.filter(col("p_id") === 100L).count() == out1.count(),
-      "restart must not re-serve processed probes")
+    checkVectorServe("sq8")
   }
 
   test("streaming IVF probes match the batch search against a stored index") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfstream").toString
-    // the IVF trainer seeds from the IVF_K lowest vec_ids, so give it a
-    // corpus of at least IVF_K = 16 vectors with separated clusters
-    def vf(xs: Double*) = xs.map(_.toFloat)
-    val corpus = (0L until 20L).map { i =>
-      val base = if (i % 2 == 0) vf(1.0, 0.1, 0.0, 0.0) else vf(0.0, 0.1, 1.0, 0.0)
-      (i, base.updated(1, (0.1 + i * 0.01).toFloat))
-    }.toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeIvfIndex(corpus, s"$tmp/index")
-
-    val probes1 = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
-    probes1.write.mode("append").parquet(s"$tmp/in")
-    StreamingIvf.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out1 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    val batch1 = graft.operators.Similarity.ivfSearchAgainstIndex(probes1, s"$tmp/index")
-    assert(out1.collect().map(_.toSeq).toSet == batch1.collect().map(_.toSeq).toSet,
-      "streamed and batch IVF neighbors diverged")
-    assert(out1.count() > 0, "probe must find neighbors in its probed lists")
+    checkVectorServe("ivf")
   }
 
   test("streaming residual IVF-PQ probes match the batch search against a stored index") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpqstream").toString
-    // 8-dim corpus (dim must be a multiple of PQ_M = 8) with ≥ 16 vectors
-    // for both seed tables (IVF_K and PQ_K); two separated clusters so the
-    // inverted lists and residual codes have real structure
-    def vf(xs: Double*) = xs.map(_.toFloat)
-    val corpus = (0L until 24L).map { i =>
-      val base = if (i % 2 == 0) vf(1.0, 0.1, 0.0, 0.0, 0.2, 0.0, 0.0, 0.0)
-                 else vf(0.0, 0.1, 1.0, 0.0, 0.0, 0.2, 0.0, 0.0)
-      (i, base.updated(1, (0.1 + i * 0.01).toFloat))
-    }.toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeIvfPqIndex(corpus, s"$tmp/index")
-
-    val probes1 = Seq((100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0)))
-      .toDF("vec_id", "embedding")
-    probes1.write.mode("append").parquet(s"$tmp/in")
-    StreamingIvfPq.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out1 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    val batch1 = graft.operators.Similarity.ivfPqSearchAgainstIndex(probes1, s"$tmp/index")
-    assert(out1.collect().map(_.toSeq).toSet == batch1.collect().map(_.toSeq).toSet,
-      "streamed and batch residual IVF-PQ neighbors diverged")
-    assert(out1.count() > 0, "probe must find neighbors in its probed lists")
-
-    // second batch resumes from the checkpoint
-    Seq((101L, vf(0.0, 0.05, 0.95, 0.0, 0.0, 0.21, 0.0, 0.0)))
-      .toDF("vec_id", "embedding")
-      .write.mode("append").parquet(s"$tmp/in")
-    StreamingIvfPq.runAgainstIndex(spark, s"$tmp/in", probes1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out2 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    assert(out2.filter(col("p_id") === 101L).count() > 0, "new probe served")
-    assert(out2.filter(col("p_id") === 100L).count() == out1.count(),
-      "restart must not re-serve processed probes")
+    checkVectorServe("ivfpq")
   }
 
   test("residual IVF-PQ serving fails the running query when the index is rebuilt") {
     val tmp = java.nio.file.Files.createTempDirectory("ivfpqr").toString
-    def vf(xs: Double*) = xs.map(_.toFloat)
-    val corpus = (0L until 24L).map { i =>
-      val base = if (i % 2 == 0) vf(1.0, 0.1, 0.0, 0.0, 0.2, 0.0, 0.0, 0.0)
-                 else vf(0.0, 0.1, 1.0, 0.0, 0.0, 0.2, 0.0, 0.0)
-      (i, base.updated(1, (0.1 + i * 0.01).toFloat))
-    }.toDF("vec_id", "embedding")
+    val corpus = vecCorpus
     graft.operators.Similarity.writeIvfPqIndex(corpus, s"$tmp/index")
     val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
     probes.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingIvfPq.runAgainstIndex(spark, s"$tmp/in", probes.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
+    val q = serveStream("ivfpq", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
+      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
     assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
       graft.operators.Similarity.writeIvfPqIndex(corpus, s"$tmp/index")
       probes.write.mode("append").parquet(s"$tmp/in")
@@ -285,12 +247,7 @@ class StreamingSpec extends SparkSpec {
 
   test("an appended IVF-PQ delta restarts serving, then serves base ∪ delta") {
     val tmp = java.nio.file.Files.createTempDirectory("ivfpqdelta").toString
-    def vf(xs: Double*) = xs.map(_.toFloat)
-    val corpus = (0L until 24L).map { i =>
-      val base = if (i % 2 == 0) vf(1.0, 0.1, 0.0, 0.0, 0.2, 0.0, 0.0, 0.0)
-                 else vf(0.0, 0.1, 1.0, 0.0, 0.0, 0.2, 0.0, 0.0)
-      (i, base.updated(1, (0.1 + i * 0.01).toFloat))
-    }.toDF("vec_id", "embedding")
+    val corpus = vecCorpus
     graft.operators.Similarity.writeIvfPqIndex(corpus, s"$tmp/index")
     // a delta in a THIRD direction: its ids can only come from the segment
     val delta = (50L until 56L).map { i =>
@@ -299,9 +256,8 @@ class StreamingSpec extends SparkSpec {
     val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
     probes.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingIvfPq.runAgainstIndex(spark, s"$tmp/in", probes.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
+    val q = serveStream("ivfpq", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
+      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
     // an append flips the meta fingerprint exactly like a rebuild: the
     // running query must restart rather than serve a base/delta frame mix
     spark.conf.set(graft.operators.Similarity.RETRAIN_FRACTION_CONF, "0")
@@ -316,8 +272,8 @@ class StreamingSpec extends SparkSpec {
       val deltaProbe = Seq((101L, vf(0.0, 0.1, 0.0, 0.98, 0.0, 0.0, 0.26, 0.0)))
         .toDF("vec_id", "embedding")
       deltaProbe.write.mode("append").parquet(s"$tmp/in")
-      StreamingIvfPq.runAgainstIndex(spark, s"$tmp/in", probes.schema,
-        s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
+      serveStream("ivfpq", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out", s"$tmp/ckpt")
+        .awaitTermination()
       val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
       val served = out.filter(col("p_id") === 101L && col("c_id") >= 50L).count()
       assert(served > 0, "the delta segment must be served after restart")
@@ -334,18 +290,29 @@ class StreamingSpec extends SparkSpec {
 
   test("SQ8 serving fails the running query when the index is rebuilt") {
     val tmp = java.nio.file.Files.createTempDirectory("sq8r").toString
-    def vf(xs: Double*) = xs.map(_.toFloat)
     val corpus = Seq(
       (0L, vf(1.0, 0.1, 0.0, 0.0)), (1L, vf(0.0, 1.0, 0.0, 0.1)),
       (2L, vf(0.9, 0.12, 0.0, 0.0))).toDF("vec_id", "embedding")
     graft.operators.Similarity.writeSq8Index(corpus, s"$tmp/index")
     val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
     probes.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingSq8.runAgainstIndex(spark, s"$tmp/in", probes.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
+    val q = serveStream("sq8", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
+      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
     assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
       graft.operators.Similarity.writeSq8Index(corpus, s"$tmp/index")
+      probes.write.mode("append").parquet(s"$tmp/in")
+    }
+  }
+
+  test("IVF serving fails the running query when the index is rebuilt") {
+    val tmp = java.nio.file.Files.createTempDirectory("ivfr").toString
+    graft.operators.Similarity.writeIvfIndex(vecCorpus, s"$tmp/index")
+    val probes = vecProbe(100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0))
+    probes.write.mode("append").parquet(s"$tmp/in")
+    val q = serveStream("ivf", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
+      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
+    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
+      graft.operators.Similarity.writeIvfIndex(vecCorpus, s"$tmp/index")
       probes.write.mode("append").parquet(s"$tmp/in")
     }
   }
@@ -724,16 +691,14 @@ class StreamingSpec extends SparkSpec {
 
   test("ANN serving fails the running query when the LSH index is rebuilt") {
     val tmp = java.nio.file.Files.createTempDirectory("annr").toString
-    def vf(xs: Double*) = xs.map(_.toFloat)
     val corpus = Seq(
       (0L, vf(1.0, 0.1, 0.0, 0.0)), (1L, vf(0.0, 1.0, 0.0, 0.1)),
       (2L, vf(0.9, 0.12, 0.0, 0.0))).toDF("vec_id", "embedding")
     graft.operators.Similarity.writeAnnIndex(corpus, s"$tmp/index")
     val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
     probes.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingAnn.runAgainstIndex(spark, s"$tmp/in", probes.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
+    val q = serveStream("ann", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
+      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
     assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
       graft.operators.Similarity.writeAnnIndex(corpus, s"$tmp/index")
       probes.write.mode("append").parquet(s"$tmp/in")
