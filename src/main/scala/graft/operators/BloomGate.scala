@@ -165,18 +165,16 @@ object BloomGate {
   // ---------------------------------------------------------------- index
 
   /** Materialize the blocklist gate: the exact gram table (verify side)
-    * and the 1-row bloom sketch, meta LAST with the dials recorded
+    * and the 1-row bloom sketch, the meta recording the dials
     * (gram_n especially — a reader gramming at a guessed width would
-    * zero the verify join silently). Follows the writeBandIndex
-    * invalidate-first / meta-last contract.
+    * zero the verify join silently).
     */
   def writeBloomIndex(refDocs: DataFrame, path: String,
                       gramN: Int = GRAM_N,
                       estItems: Long = EST_ITEMS, numBits: Long = NUM_BITS): Unit = {
     val spark = refDocs.sparkSession
     BloomFns.register(spark)
-    IndexMeta.invalidate(spark, path)
-    graft.CacheScope.run {
+    IndexMeta.commit(spark, path, "graft bloom gate") {
       val g = graft.CacheScope.cache(
         CorpusOps.tokenGrams(refDocs, gramN).select(col("gram")).distinct())
       g.write.mode("overwrite").parquet(s"$path/grams")
@@ -185,10 +183,9 @@ object BloomGate {
           xxhash64(col("gram")), lit(estItems), lit(numBits)).as("bf"))
           .write.mode("overwrite").parquet(s"$path/bloom")
       }
+      Seq("kind" -> "bloom_gate", "gram_n" -> gramN.toString,
+        "est_items" -> estItems.toString, "num_bits" -> numBits.toString)
     }
-    IndexMeta.write(spark, path, "graft bloom gate",
-      "kind" -> "bloom_gate", "gram_n" -> gramN.toString,
-      "est_items" -> estItems.toString, "num_bits" -> numBits.toString)
   }
 
   /** A resolved bloom index: dials + sketch bytes + the exact gram frame,

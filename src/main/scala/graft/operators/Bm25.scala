@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * ranks tokens *within* a doc; this ranks *docs against a standing
   * query*, served from a materialized index.
   *
-  * Index layout (`writeBm25Index`, invalidate-first/meta-last):
+  * Index layout (`writeBm25Index`, committed through `IndexMeta.commit`):
   *  - `postings`  (token, doc_id, tf, dl) — the doc-length norm is
   *    DENORMALIZED into the posting row (the Lucene norm-in-posting
   *    trick), so serving never joins a corpus-sized doclen table;
@@ -140,21 +140,24 @@ object Bm25 {
       .write.mode("overwrite").parquet(s"$path/df/$name")
   }
 
+  /** The dials every BM25 commit records. */
+  private def bm25Meta = Seq("kind" -> "bm25", "k1" -> K1.toString, "b" -> B.toString)
+
   /** Materialize postings + df + exact corpus stats. */
   def writeBm25Index(d: DataFrame, path: String): Unit = {
     val spark = d.sparkSession
-    IndexMeta.invalidate(spark, path)
-    fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    writeSegment(d, path, "seg_0")
-    IndexMeta.write(spark, path, "graft bm25 index",
-      "kind" -> "bm25", "k1" -> K1.toString, "b" -> B.toString)
+    IndexMeta.commit(spark, path, "graft bm25 index") {
+      fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+      writeSegment(d, path, "seg_0")
+      bm25Meta
+    }
   }
 
   /** Append a delta snapshot (NEW doc_ids only) at delta-sized cost:
-    * one new segment; nothing historical is read or rewritten.
-    * Invalidate-first/meta-last makes a crashed append a loud refusal,
-    * and the meta rewrite flips the fingerprint so running serving
-    * streams restart rather than mix old term stats with new postings.
+    * one new segment; nothing historical is read or rewritten. The
+    * commit makes a crashed append a loud refusal, and the meta rewrite
+    * flips the fingerprint so running serving streams restart rather
+    * than mix old term stats with new postings.
     */
   def appendBm25Delta(delta: DataFrame, path: String): Unit = {
     val spark = delta.sparkSession
@@ -164,8 +167,8 @@ object Bm25 {
     // and duplicates (token, doc) postings — nothing downstream fails
     // loudly. The check reads one column of the stored postings
     // (dictionary-pruned; maintenance-path cost, the same order the
-    // compactor already pays) and refuses BEFORE invalidating the meta,
-    // so a rejected append leaves the index serving.
+    // compactor already pays) and refuses BEFORE the commit, so a
+    // rejected append leaves the index serving.
     val dup = spark.read
       .parquet(segmentNames(spark, path).map(n => s"$path/postings/$n"): _*)
       .select(col("doc_id")).distinct()
@@ -175,10 +178,10 @@ object Bm25 {
       s"appendBm25Delta: delta re-submits stored doc_ids (e.g. ${dup.mkString(", ")}) — " +
         "deltas must carry NEW documents only; updates are a rebuild")
     val name = s"seg_${nextSegId(spark, path)}"
-    IndexMeta.invalidate(spark, path)
-    writeSegment(delta, path, name)
-    IndexMeta.write(spark, path, "graft bm25 index",
-      "kind" -> "bm25", "k1" -> K1.toString, "b" -> B.toString)
+    IndexMeta.commit(spark, path, "graft bm25 index") {
+      writeSegment(delta, path, name)
+      bm25Meta
+    }
     // maintenance rides the append: the writer that fragments the index
     // is the one that pays to defragment it, at the measured threshold
     maintainBm25(spark, path)
@@ -231,22 +234,23 @@ object Bm25 {
     if (segs.size <= 1) return
     val hi = nextSegId(spark, path) - 1L
     val name = s"compact_$hi"
-    IndexMeta.invalidate(spark, path) // running streams must restart
-    val post = spark.read.parquet(segs.map(n => s"$path/postings/$n"): _*)
-    post.repartition(col("token")).sortWithinPartitions(col("token"))
-      .write.mode("overwrite").parquet(s"$path/postings/$name")
-    spark.read.parquet(segs.map(n => s"$path/stats/$n"): _*)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats/$name")
-    spark.read.parquet(segs.map(n => s"$path/df/$n"): _*)
-      .groupBy(col("token"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .write.mode("overwrite").parquet(s"$path/df/$name")
-    val f = fs(spark, path)
-    for (tbl <- Seq("postings", "stats", "df"); n <- segs)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/$tbl/$n"), true)
-    IndexMeta.write(spark, path, "graft bm25 index",
-      "kind" -> "bm25", "k1" -> K1.toString, "b" -> B.toString)
+    // the commit flips the fingerprint: running streams must restart
+    IndexMeta.commit(spark, path, "graft bm25 index") {
+      val post = spark.read.parquet(segs.map(n => s"$path/postings/$n"): _*)
+      post.repartition(col("token")).sortWithinPartitions(col("token"))
+        .write.mode("overwrite").parquet(s"$path/postings/$name")
+      spark.read.parquet(segs.map(n => s"$path/stats/$n"): _*)
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/stats/$name")
+      spark.read.parquet(segs.map(n => s"$path/df/$n"): _*)
+        .groupBy(col("token"))
+        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+        .write.mode("overwrite").parquet(s"$path/df/$name")
+      val f = fs(spark, path)
+      for (tbl <- Seq("postings", "stats", "df"); n <- segs)
+        f.delete(new org.apache.hadoop.fs.Path(s"$path/$tbl/$n"), true)
+      bm25Meta
+    }
   }
 
   /** Load + finalize: df/cf/stats partials fold by exact integer sums,
@@ -359,13 +363,29 @@ object Bm25 {
         round(col("su") / lit(1e6), 6).as("score"), col("n_terms"))
   }
 
-  /** Score an ARRIVING doc batch against frozen terms + corpus stats
-    * (tf/dl from the batch's own text) — the streaming gate kernel.
+  /** The frozen state the streaming gate scores against: the standing
+    * query's term set as a local relation, plus the corpus stats.
     */
-  private[graft] def scoreNewDocs(batch: DataFrame, terms: DataFrame,
-                                  n: Long, sumDl: Long): DataFrame = {
-    val matched = postingsWithNorms(batch).join(broadcast(terms), Seq("token"))
-    scoreMatched(matched, n, sumDl)
+  private[graft] final case class LoadedBm25Terms(terms: DataFrame, n: Long, sumDl: Long)
+
+  /** Load step of [[scoreNewDocs]]: the term set resolves ONCE into a
+    * local relation, so per-batch work never re-ranks the stored
+    * vocabulary table.
+    */
+  private[graft] def loadBm25Terms(spark: SparkSession, path: String): LoadedBm25Terms = {
+    val (_, dfTable, n, sumDl) = loadBm25Index(spark, path)
+    val resolved = queryTerms(dfTable)
+    LoadedBm25Terms(spark.createDataFrame(
+      java.util.Arrays.asList(resolved.collect(): _*), resolved.schema), n, sumDl)
+  }
+
+  /** Score an ARRIVING (doc_id, text) batch against frozen terms + corpus
+    * stats (tf/dl from the batch's own text) — the streaming gate kernel,
+    * the same integer-unit `scoreMatched` the batch serve path uses.
+    */
+  private[graft] def scoreNewDocs(batch: DataFrame, idx: LoadedBm25Terms): DataFrame = {
+    val matched = postingsWithNorms(batch).join(broadcast(idx.terms), Seq("token"))
+    scoreMatched(matched, idx.n, idx.sumDl)
       .select(col("doc_id"), round(col("su") / lit(1e6), 6).as("score"),
         col("n_terms"))
   }

@@ -217,25 +217,22 @@ object CorpusOps {
   // ------------------------------------------------------- hot-block index
 
   /** Materialize q127's hot list: the (tiny) table of block hashes whose
-    * occurrence count reaches `hotMin`, meta LAST with the dials recorded
+    * occurrence count reaches `hotMin`, the meta recording the dials
     * (block width especially — a reader blocking at a guessed width would
-    * match nothing silently). Follows the writeBandIndex
-    * invalidate-first / meta-last contract.
+    * match nothing silently).
     */
   def writeHotBlockIndex(docsDf: DataFrame, path: String,
-                         hotMin: Int = HOT_BLOCK_MIN): Unit = {
-    val spark = docsDf.sparkSession
-    IndexMeta.invalidate(spark, path)
-    scrubBlocks(docsDf)
-      .groupBy(md5(col("btxt")).as("h"))
-      .agg(count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") >= hotMin)
-      .select(col("h"))
-      .write.mode("overwrite").parquet(s"$path/hot")
-    IndexMeta.write(spark, path, "graft hot block list",
-      "kind" -> "hot_blocks", "hot_min" -> hotMin.toString,
-      "block" -> SCRUB_BLOCK.toString)
-  }
+                         hotMin: Int = HOT_BLOCK_MIN): Unit =
+    IndexMeta.commit(docsDf.sparkSession, path, "graft hot block list") {
+      scrubBlocks(docsDf)
+        .groupBy(md5(col("btxt")).as("h"))
+        .agg(count(lit(1)).as("n_occ"))
+        .filter(col("n_occ") >= hotMin)
+        .select(col("h"))
+        .write.mode("overwrite").parquet(s"$path/hot")
+      Seq("kind" -> "hot_blocks", "hot_min" -> hotMin.toString,
+        "block" -> SCRUB_BLOCK.toString)
+    }
 
   /** A resolved hot-block list (the stored frame stays distributed; it is
     * tiny by construction and BROADCASTS at the join).
@@ -1284,31 +1281,29 @@ object CorpusOps {
     * (doc_id uniqueness makes the order total; `>` on the pair is
     * membership — and because the weight is an order-independent 64-bit
     * micro-unit sum, the serve-pass recomputation is bitwise identical to
-    * the build pass by construction, not by summation-order luck). Meta
-    * last with the per-build nonce.
+    * the build pass by construction, not by summation-order luck).
     */
-  def writeDsirIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    IndexMeta.invalidate(spark, path)
-    val feats = graft.CacheScope.cache(dsirFeats(docs(spark, dir), Seq("source")))
-    val rawF = feats.filter(col("source") =!= "src0")
-    val tgtF = feats.filter(col("source") === "src0")
-    dsirModelOf(tgtF, rawF).write.mode("overwrite").parquet(s"$path/model")
-    val modelR = spark.read.parquet(s"$path/model")
-    val weights = dsirWeightsOf(rawF.select(col("doc_id"), col("b")), modelR)
-    val kth = Ranked.twoPhaseTopK(weights, Seq.empty,
-      Seq(col("log_w_micro").desc, col("doc_id")), lit(DSIR_TOP_K))
-      .filter(col("rk") === DSIR_TOP_K)
-      .select(col("log_w_micro"), col("doc_id")).collect()
-    val (thrM, thrId) =
-      if (kth.isEmpty) (Long.MinValue, Long.MaxValue)
-      else (kth(0).getLong(0), kth(0).getLong(1))
-    val (tt, tr) = (tgtF.count(), rawF.count())
-    IndexMeta.write(spark, path, "graft DSIR importance index",
-      "kind" -> "dsir_llr", "buckets" -> DSIR_BUCKETS.toString,
-      "top_k" -> DSIR_TOP_K.toString,
-      "thr_m" -> thrM.toString, "thr_id" -> thrId.toString,
-      "tt" -> tt.toString, "tr" -> tr.toString)
-  }
+  def writeDsirIndex(spark: SparkSession, dir: String, path: String): Unit =
+    IndexMeta.commit(spark, path, "graft DSIR importance index") {
+      val feats = graft.CacheScope.cache(dsirFeats(docs(spark, dir), Seq("source")))
+      val rawF = feats.filter(col("source") =!= "src0")
+      val tgtF = feats.filter(col("source") === "src0")
+      dsirModelOf(tgtF, rawF).write.mode("overwrite").parquet(s"$path/model")
+      val modelR = spark.read.parquet(s"$path/model")
+      val weights = dsirWeightsOf(rawF.select(col("doc_id"), col("b")), modelR)
+      val kth = Ranked.twoPhaseTopK(weights, Seq.empty,
+        Seq(col("log_w_micro").desc, col("doc_id")), lit(DSIR_TOP_K))
+        .filter(col("rk") === DSIR_TOP_K)
+        .select(col("log_w_micro"), col("doc_id")).collect()
+      val (thrM, thrId) =
+        if (kth.isEmpty) (Long.MinValue, Long.MaxValue)
+        else (kth(0).getLong(0), kth(0).getLong(1))
+      val (tt, tr) = (tgtF.count(), rawF.count())
+      Seq("kind" -> "dsir_llr", "buckets" -> DSIR_BUCKETS.toString,
+        "top_k" -> DSIR_TOP_K.toString,
+        "thr_m" -> thrM.toString, "thr_id" -> thrId.toString,
+        "tt" -> tt.toString, "tr" -> tr.toString)
+    }
 
   private[graft] final case class LoadedDsirIndex(
       model: DataFrame, thrM: Long, thrId: Long, defaultLr: Double)
@@ -1756,32 +1751,29 @@ object CorpusOps {
     * (q82/q91/q97 shape applied to the q108 model): the target slice's
     * unigram/bigram count tables land as parquet, the vocabulary size and
     * the tercile boundaries (computed over the BUILD corpus through the
-    * exact parquet round-trip the serve path will read) land in the meta,
-    * meta LAST with the per-build nonce so any rebuild invalidates a
-    * running gate's fingerprint.
+    * exact parquet round-trip the serve path will read) land in the meta.
     */
-  def writeCcnetIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    IndexMeta.invalidate(spark, path)
-    val toks = graft.CacheScope.cache(docs(spark, dir)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks")))
-    val (tgtUni, _, tgtBig) = ccnetTargetModel(toks.filter(col("source") === "src0"))
-    tgtUni.write.mode("overwrite").parquet(s"$path/uni")
-    tgtBig.write.mode("overwrite").parquet(s"$path/big")
-    // boundaries via the STORED tables (what serving will read), so the
-    // frozen thresholds are exactly the serve-path arithmetic's
-    val uniR = spark.read.parquet(s"$path/uni")
-    val bigR = spark.read.parquet(s"$path/big")
-    val v = uniR.count()
-    val bs = ccnetScores(
-      ccnetBigrams(toks.filter(col("source") =!= "src0")), uniR, bigR,
-      spark.range(1).select(lit(v).as("v")))
-      .agg(expr("percentile(avg_nll, array(double(1)/3, double(2)/3))").as("bs"))
-      .head().getSeq[Double](0)
-    IndexMeta.write(spark, path, "graft ccnet LM index",
-      "kind" -> "ccnet_lm", "vocab" -> v.toString,
-      "b0" -> java.lang.Double.toString(bs(0)),
-      "b1" -> java.lang.Double.toString(bs(1)))
-  }
+  def writeCcnetIndex(spark: SparkSession, dir: String, path: String): Unit =
+    IndexMeta.commit(spark, path, "graft ccnet LM index") {
+      val toks = graft.CacheScope.cache(docs(spark, dir)
+        .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks")))
+      val (tgtUni, _, tgtBig) = ccnetTargetModel(toks.filter(col("source") === "src0"))
+      tgtUni.write.mode("overwrite").parquet(s"$path/uni")
+      tgtBig.write.mode("overwrite").parquet(s"$path/big")
+      // boundaries via the STORED tables (what serving will read), so the
+      // frozen thresholds are exactly the serve-path arithmetic's
+      val uniR = spark.read.parquet(s"$path/uni")
+      val bigR = spark.read.parquet(s"$path/big")
+      val v = uniR.count()
+      val bs = ccnetScores(
+        ccnetBigrams(toks.filter(col("source") =!= "src0")), uniR, bigR,
+        spark.range(1).select(lit(v).as("v")))
+        .agg(expr("percentile(avg_nll, array(double(1)/3, double(2)/3))").as("bs"))
+        .head().getSeq[Double](0)
+      Seq("kind" -> "ccnet_lm", "vocab" -> v.toString,
+        "b0" -> java.lang.Double.toString(bs(0)),
+        "b1" -> java.lang.Double.toString(bs(1)))
+    }
 
   /** The resolved serving state: model frames + the three scalars. */
   private[graft] final case class LoadedCcnetIndex(

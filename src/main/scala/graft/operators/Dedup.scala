@@ -1022,24 +1022,14 @@ object Dedup {
                      k: Int = 16, bands: Int = 4): Unit = {
     // the index RECORDS its dials: a delta reader signs at the stored k
     // and bands at the stored layout, so index and delta can never be
-    // compared at mismatched widths (silent zero-candidate failure mode).
-    // Written LAST — meta presence marks the build complete, and a
-    // streaming reader racing a rebuild fingerprints the OLD meta, so the
-    // new meta landing fails its next batch loudly (see IndexMeta) —
-    // through the Hadoop filesystem of the path, so hdfs://- or
-    // s3a://-hosted indexes work and readers on other machines see it.
-    val spark = corpusDocs.sparkSession
-    // invalidate first: a rebuild that crashes mid-write must leave a
-    // meta-less (refused) dir, never new sigs under the old meta
-    IndexMeta.invalidate(spark, path)
-    graft.CacheScope.run {
+    // compared at mismatched widths (silent zero-candidate failure mode)
+    IndexMeta.commit(corpusDocs.sparkSession, path, "graft band index dials") {
       val sig = graft.CacheScope.cache(
         minhashSigs(shingleArraysOf(Spread.scan(corpusDocs)), k))
       sig.write.mode("overwrite").parquet(s"$path/sigs")
       bandKeys(sig, k, bands).write.mode("overwrite").parquet(s"$path/bands")
+      Seq("k" -> k.toString, "bands" -> bands.toString)
     }
-    IndexMeta.write(spark, path, "graft band index dials",
-      "k" -> k.toString, "bands" -> bands.toString)
   }
 
   /** The (k, bands) dials a stored index was built with. STRICT: a

@@ -3,18 +3,32 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Index-dial metadata shared by every materialized index (minhash band /
-  * embedding ANN / IVF / decile boundaries): a small properties file
+  * embedding ANN / IVF / decile boundaries / ...): a small properties file
   * written through the path's Hadoop filesystem (so hdfs://- and
-  * s3a://-hosted indexes work and readers on other machines see it),
-  * written AFTER the data tables — meta presence IS the completeness
-  * marker. Meta-last also makes the rebuild race benign: a reader that
-  * starts mid-rebuild fingerprints the OLD meta, so when the new meta
-  * lands its next [[requireUnchanged]] fails loudly. (Meta-FIRST had the
-  * inverse race with no recovery: a reader starting during the build
-  * captured the NEW nonce over the OLD data and every later check passed,
-  * pinning stale data silently for the life of the query.) Readers are
-  * STRICT: serving at guessed dials zeroes the candidate join silently,
-  * the exact failure the metadata exists to prevent.
+  * s3a://-hosted indexes work and readers on other machines see it).
+  * Readers are STRICT: serving at guessed dials zeroes the candidate join
+  * silently, the exact failure the metadata exists to prevent.
+  *
+  * [[commit]] is the one writer protocol. Every build, append, compaction
+  * and retrain runs through it, and the two steps it orders are private:
+  *
+  *  - invalidate FIRST: the meta file comes down before any data table is
+  *    touched, so a build that dies mid-write leaves a meta-less dir,
+  *    which readers refuse loudly. Without it an interrupted rebuild OVER
+  *    AN EXISTING index would leave new tables paired with the OLD meta —
+  *    a mixed index every completeness check and fingerprint would wave
+  *    through.
+  *  - meta LAST: meta presence IS the completeness marker. It also makes
+  *    the rebuild race benign: a reader that starts mid-rebuild
+  *    fingerprints the OLD meta, so when the new meta lands its next
+  *    [[requireUnchanged]] fails loudly. (Meta-FIRST had the inverse race
+  *    with no recovery: a reader starting during the build captured the
+  *    NEW nonce over the OLD data and every later check passed, pinning
+  *    stale data silently for the life of the query.)
+  *
+  * A writer's refusals (duplicate ids, empty input, anything that can
+  * fail on bad input) run BEFORE its `commit`, so a refused write leaves
+  * the index serving.
   */
 private[graft] object IndexMeta {
 
@@ -60,23 +74,28 @@ private[graft] object IndexMeta {
           "the new index")
   }
 
-  /** Delete the meta file (if present) BEFORE a rebuild starts writing
-    * data tables. Meta-last alone closes the reader-side race, but an
-    * interrupted rebuild OVER AN EXISTING index would otherwise leave new
-    * data tables paired with the OLD meta — a mixed index every
-    * completeness check and fingerprint would wave through. With
-    * invalidate-first, a crashed rebuild leaves a meta-less dir, which
-    * readers refuse loudly.
+  /** Commit one build of the index at `path`: invalidate the meta, run
+    * `build` (which writes the data tables and returns the dials) inside
+    * a [[graft.CacheScope]], so the frames it caches are freed when it
+    * ends, then write the dials as the new meta with a fresh `build_id`.
+    * If `build` throws, the dir is left meta-less and readers refuse it.
     */
-  def invalidate(spark: SparkSession, path: String): Unit = {
+  def commit(spark: SparkSession, path: String, comment: String)(
+      build: => Seq[(String, String)]): Unit = {
+    invalidate(spark, path)
+    val kv = graft.CacheScope.run(build)
+    write(spark, path, comment, kv)
+  }
+
+  private def invalidate(spark: SparkSession, path: String): Unit = {
     val p = metaPath(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, false)
     ()
   }
 
-  def write(spark: SparkSession, path: String, comment: String,
-            kv: (String, String)*): Unit = {
+  private def write(spark: SparkSession, path: String, comment: String,
+                    kv: Seq[(String, String)]): Unit = {
     val props = new java.util.Properties
     kv.foreach { case (k, v) => props.setProperty(k, v) }
     // unique per BUILD: makes the fingerprint change on every rebuild by
@@ -128,7 +147,12 @@ private[graft] object IndexMeta {
     */
   def ensure(spark: SparkSession, path: String)(build: => Unit): Unit = {
     if (exists(spark, path)) return
-    val lock = buildLocks.computeIfAbsent(path, _ => new Object)
+    // keyed by the QUALIFIED path: `file:/x` and `/x` name one directory,
+    // and two raw-string keys would let both build into it at once
+    val p = new org.apache.hadoop.fs.Path(path)
+    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+    val lock = buildLocks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
       if (!exists(spark, path)) build
     }

@@ -335,26 +335,19 @@ object Similarity {
     * stored tables.
     */
   def writeAnnIndex(corpusEmb: DataFrame, path: String,
-                    bands: Int = LSH_BANDS, bits: Int = LSH_BITS): Unit = {
+                    bands: Int = LSH_BANDS, bits: Int = LSH_BITS): Unit =
     // the index RECORDS its banding dials (like Dedup.writeBandIndex):
     // serving signs probes at the STORED bands/bits, so index and probe
     // signatures can never be compared at mismatched widths — the silent
-    // zero-candidate failure mode. Meta LAST: its presence marks the
-    // build complete, and a reader racing a rebuild holds the OLD
-    // fingerprint, so the new meta fails its next check loudly. Meta
-    // invalidated FIRST: a rebuild that crashes mid-write leaves a
-    // meta-less dir (refused), never new tables under the old meta.
-    IndexMeta.invalidate(corpusEmb.sparkSession, path)
-    graft.CacheScope.run {
+    // zero-candidate failure mode
+    IndexMeta.commit(corpusEmb.sparkSession, path, "graft ANN index dials") {
       val e = graft.CacheScope.cache(withNorm(corpusEmb))
       e.select(col("vec_id"), col("embedding"), col("nn"))
         .write.mode("overwrite").parquet(s"$path/vectors")
       bandedSigs(e, bands, bits).select(col("vec_id"), col("band"), col("sig"))
         .write.mode("overwrite").parquet(s"$path/bands")
+      Seq("bands" -> bands.toString, "bits" -> bits.toString)
     }
-    IndexMeta.write(corpusEmb.sparkSession, path, "graft ANN index dials",
-      "bands" -> bands.toString, "bits" -> bits.toString)
-  }
 
   /** A resolved ANN index — dials read from meta, corpus frames resolved
     * ONCE. The index is immutable for the life of a serving query, so
@@ -823,13 +816,10 @@ object Similarity {
   def writeIvfIndex(corpusEmb: DataFrame, path: String,
                     k: Int = IVF_K,
                     trainPerCentroid: Int = IVF_TRAIN_PER_CENTROID): Unit = {
+    val spark = corpusEmb.sparkSession
     // list count recorded like every materialized index's dials — a reader
-    // of a foreign/incomplete index fails loudly instead of serving it;
-    // meta written last (completeness marker, rebuild-race-safe) and
-    // invalidated first (a crashed rebuild leaves a refused meta-less dir)
-    IndexMeta.invalidate(corpusEmb.sparkSession, path)
-    graft.CacheScope.run {
-      val spark = corpusEmb.sparkSession
+    // of a foreign/incomplete index fails loudly instead of serving it
+    IndexMeta.commit(spark, path, "graft IVF index dials") {
       val e = graft.CacheScope.cache(withNorm(corpusEmb))
       val cents = trainCentroidsSampled(e, k, trainPerCentroid)
       writeCentroids(spark, cents, s"$path/centroids")
@@ -838,9 +828,8 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$path/lists")
       e.select(col("vec_id"), col("embedding"), col("nn"))
         .write.mode("overwrite").parquet(s"$path/vectors")
+      Seq("ivf_k" -> k.toString)
     }
-    IndexMeta.write(corpusEmb.sparkSession, path, "graft IVF index dials",
-      "ivf_k" -> k.toString)
   }
 
   /** The quantizer table both IVF index kinds store: (cent_id,
@@ -1019,15 +1008,13 @@ object Similarity {
   /** Materialize the SQ8 index: the trained quantizer (per-dimension min
     * and span — dim rows) and the code table (c_id, 1-byte-per-dim codes,
     * stored reconstruction norm). Quantizer trains ONCE here; serving
-    * reads codes and never touches float vectors. Meta written LAST
-    * (completeness marker, rebuild-race-safe) with the dials recorded.
+    * reads codes and never touches float vectors. The meta records the
+    * dials.
     */
   def writeSq8Index(corpusEmb: DataFrame, path: String): Unit = {
     val spark = corpusEmb.sparkSession
     import spark.implicits._
-    // invalidate first / meta last — see writePqIndex's rebuild note
-    IndexMeta.invalidate(spark, path)
-    val dim = graft.CacheScope.run {
+    IndexMeta.commit(spark, path, "graft SQ8 index dials") {
       val e = graft.CacheScope.cache(corpusEmb)
       val (mins, spans) = trainSq8(e)
       mins.indices.map(i => (i, mins(i), spans(i))).toDF("pos", "mn", "span")
@@ -1036,10 +1023,8 @@ object Similarity {
       e.select(col("vec_id").as("c_id"), q.getField("_1").as("codes"),
         q.getField("_2").as("nq"))
         .write.mode("overwrite").parquet(s"$path/codes")
-      mins.length
+      Seq("dim" -> mins.length.toString, "levels" -> "256")
     }
-    IndexMeta.write(spark, path, "graft SQ8 index dials",
-      "dim" -> dim.toString, "levels" -> "256")
   }
 
   /** [[q90AnnSq8]]'s semantics against a PREBUILT index
@@ -1574,7 +1559,7 @@ object Similarity {
     * shape for q181 (what a billion-vector deployment actually runs):
     * quantizer centroids, residual codebook, code table
     * (c_id, list_id, m bytes, full-reconstruction norm), and the
-    * vectors+norms for the exact refine. Meta LAST with all dials AND
+    * vectors+norms for the exact refine. The meta records all dials AND
     * the m decision: by default (`m = PQ_M_AUTO`) the code resolution
     * comes from [[derivedPqM]]'s measured occupancy law — the fixture
     * corpora derive the law's anchor m=8, so every gated hash is
@@ -1585,10 +1570,9 @@ object Similarity {
                       pqK: Int = PQ_K,
                       note: Seq[(String, String)] = Nil): Unit = {
     val spark = corpusEmb.sparkSession
-    IndexMeta.invalidate(spark, path)
-    var mDecision = "explicit"
-    var mUsed = m
-    val (dim, nBase, baseResid2) = graft.CacheScope.run {
+    IndexMeta.commit(spark, path, "graft residual IVF-PQ index dials") {
+      var mDecision = "explicit"
+      var mUsed = m
       val e = graft.CacheScope.cache(withNorm(corpusEmb))
       // n also feeds the maintenance policy's delta-fraction baseline; the
       // trainer re-reads it from cache so the stat costs no extra pass
@@ -1617,13 +1601,12 @@ object Similarity {
       ivfPqTable(e, IvfPqVectorsSchema).write.mode("overwrite").parquet(s"$path/vectors")
       // the base drift statistic appends compare against — one aggregate
       // over the assign frame the model build cached anyway
-      (dsub * mUsed, n, meanResid2(assign))
+      val baseResid2 = meanResid2(assign)
+      Seq("ivf_k" -> ivfK.toString, "m" -> mUsed.toString, "k" -> pqK.toString,
+        "dim" -> (dsub * mUsed).toString, "m_decision" -> mDecision,
+        "n_base" -> n.toString, "base_resid2" -> f"$baseResid2%.6f",
+        "deltas" -> "0") ++ note
     }
-    IndexMeta.write(spark, path, "graft residual IVF-PQ index dials",
-      (Seq("ivf_k" -> ivfK.toString, "m" -> mUsed.toString, "k" -> pqK.toString,
-        "dim" -> dim.toString, "m_decision" -> mDecision,
-        "n_base" -> nBase.toString, "base_resid2" -> f"$baseResid2%.6f",
-        "deltas" -> "0") ++ note): _*)
   }
 
   /** A resolved residual IVF-PQ index — both bounded model tables
@@ -1722,11 +1705,12 @@ object Similarity {
     * through the same ADC kernel (the segments hold DISJOINT vec_ids, so
     * no merge logic exists anywhere). The new-ids-only contract is
     * ENFORCED (an overlapping delta would double-serve a vector from two
-    * segments); refusal happens BEFORE the meta invalidate, so a
-    * rejected append leaves the index serving. Meta-last with the delta
-    * count as the single topology source: a crashed append leaves a
-    * meta-less dir (refused loudly), orphan `delta_*` dirs are never
-    * listed, and the meta rewrite flips the fingerprint so running
+    * segments); refusal happens BEFORE the commit, so a rejected append
+    * leaves the index serving. The meta carries every prior key forward
+    * (the m and maintenance decisions a retrain recorded included) and
+    * the delta count is the single topology source: a crashed append
+    * leaves a meta-less dir (refused loudly), orphan `delta_*` dirs are
+    * never listed, and the meta rewrite flips the fingerprint so running
     * serving streams restart rather than serve a frame mix.
     * Maintenance rides the append ([[maintainIvfPq]] — the appender is
     * the maintenance window); returns whether it re-trained.
@@ -1744,7 +1728,7 @@ object Similarity {
     val centMap = idx.ivfCents.map { case (id, c, _) => id -> c }.toMap
     val prevDeltas = Option(meta.getProperty("deltas")).map(_.toInt).getOrElse(0)
     val segName = s"delta_$prevDeltas"
-    val (nDelta, deltaResid2) = graft.CacheScope.run {
+    graft.CacheScope.run {
       val e = graft.CacheScope.cache(withNorm(delta))
       val n = e.count()
       require(n > 0, "appendIvfPqDelta: empty delta — nothing to append")
@@ -1755,29 +1739,31 @@ object Similarity {
           .withColumn("residual",
             residualUdf(centMap)(col("embedding"), col("list_id")))
           .select(col("c_id"), col("list_id"), col("residual")))
-      // drift statistic computed eagerly BEFORE the invalidate: everything
+      // drift statistic computed eagerly BEFORE the commit: everything
       // that can refuse has refused by the time the meta comes down
       val r2 = meanResid2(assign)
-      IndexMeta.invalidate(spark, path)
-      val enc = pqEncodeResUdf(idx.pqCents, idx.dsub, centMap)(
-        col("residual"), col("list_id"))
-      ivfPqTable(assign.select(col("c_id"), col("list_id"),
-          enc.getField("_1").as("codes"), enc.getField("_2").as("nq")), IvfPqCodesSchema)
-        .write.mode("overwrite").parquet(s"$path/$segName/codes")
-      ivfPqTable(e, IvfPqVectorsSchema)
-        .write.mode("overwrite").parquet(s"$path/$segName/vectors")
-      (n, r2)
+      IndexMeta.commit(spark, path, "graft residual IVF-PQ index dials") {
+        val enc = pqEncodeResUdf(idx.pqCents, idx.dsub, centMap)(
+          col("residual"), col("list_id"))
+        ivfPqTable(assign.select(col("c_id"), col("list_id"),
+            enc.getField("_1").as("codes"), enc.getField("_2").as("nq")), IvfPqCodesSchema)
+          .write.mode("overwrite").parquet(s"$path/$segName/codes")
+        ivfPqTable(e, IvfPqVectorsSchema)
+          .write.mode("overwrite").parquet(s"$path/$segName/vectors")
+        val nDeltaTotal =
+          Option(meta.getProperty("n_delta")).map(_.toLong).getOrElse(0L) + n
+        graft.Telemetry.record(f"ivfpq append seg=$segName n=$n resid2=$r2%.4f")
+        val prior = {
+          import scala.jdk.CollectionConverters._
+          meta.stringPropertyNames().asScala.toSeq
+            .filter(_ != "build_id").map(k => k -> meta.getProperty(k))
+        }
+        prior ++ Seq(
+          "deltas" -> (prevDeltas + 1).toString,
+          "n_delta" -> nDeltaTotal.toString,
+          "delta_resid2" -> f"$r2%.6f")
+      }
     }
-    val nDeltaTotal =
-      Option(meta.getProperty("n_delta")).map(_.toLong).getOrElse(0L) + nDelta
-    graft.Telemetry.record(
-      f"ivfpq append seg=$segName n=$nDelta resid2=$deltaResid2%.4f")
-    IndexMeta.write(spark, path, "graft residual IVF-PQ index dials",
-      (Seq("ivf_k", "m", "k", "dim", "m_decision", "n_base", "base_resid2")
-        .flatMap(k => Option(meta.getProperty(k)).map(k -> _)) ++ Seq(
-        "deltas" -> (prevDeltas + 1).toString,
-        "n_delta" -> nDeltaTotal.toString,
-        "delta_resid2" -> f"$deltaResid2%.6f")): _*)
     maintainIvfPq(spark, path)
   }
 
@@ -1874,8 +1860,8 @@ object Similarity {
   /** Materialize the PQ index: the trained codebook (s, code, j, cv —
     * ≤ m·k·dsub rows) and the code table (c_id, m code bytes, stored
     * reconstruction norm). Codebook trains ONCE; serving reads codes and
-    * never touches float vectors. Meta LAST with the dials recorded —
-    * the loader serves whatever dials the meta names (the fixture
+    * never touches float vectors. The meta records the dials — the
+    * loader serves whatever dials the meta names (the fixture
     * [[PQ_M]]×[[PQ_K]] default or the corpus-scale [[PQ_M_SCALE]]), so
     * the q179 configuration has the same index-once/serve-many path as
     * the fixture dial.
@@ -1883,20 +1869,13 @@ object Similarity {
   def writePqIndex(corpusEmb: DataFrame, path: String,
                    m: Int = PQ_M, k: Int = PQ_K): Unit = {
     val spark = corpusEmb.sparkSession
-    // invalidate FIRST: a rebuild that crashes mid-write must leave a
-    // meta-less dir (refused loudly) — never a new codebook paired with
-    // old codes under the old meta, which every completeness and
-    // fingerprint check would wave through
-    IndexMeta.invalidate(spark, path)
-    val dim = graft.CacheScope.run {
+    IndexMeta.commit(spark, path, "graft PQ index dials") {
       val e = graft.CacheScope.cache(corpusEmb)
       val (cents, dsub, codes) = pqModel(e, m, k)
       writeCodebook(spark, cents, dsub, s"$path/codebook")
       codes.write.mode("overwrite").parquet(s"$path/codes")
-      dsub * m
+      Seq("m" -> m.toString, "k" -> k.toString, "dim" -> (dsub * m).toString)
     }
-    IndexMeta.write(spark, path, "graft PQ index dials",
-      "m" -> m.toString, "k" -> k.toString, "dim" -> dim.toString)
   }
 
   /** A resolved PQ index — codebook collected (≤ PQ_M·PQ_K·dsub rows,
@@ -2232,28 +2211,26 @@ object Similarity {
 
   /** Materialized cluster-prune index — the serving half of q114 (the
     * q109/q113 shape applied to the Minipile verdicts): the k seed
-    * centroids and the k-row verdict table land as parquet, meta LAST
-    * with the per-build nonce. Verdicts are computed through the SAME
+    * centroids and the k-row verdict table land as parquet. Verdicts are computed through the SAME
     * parquet round-trip serving will read (exact for doubles), so the
     * stored state reproduces the inline answer bitwise; scores are
     * micro-unit means, so the cluster ranking cannot drift with
     * partitioning either.
     */
-  def writeClusterPruneIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    IndexMeta.invalidate(spark, path)
-    // the ONE seed definition (lowestIdSeeds) materialized — the build
-    // cannot drift from the inline q114 path
-    import spark.implicits._
-    lowestIdSeeds(emb(spark, dir), PRUNE_K).toSeq
-      .toDF("cent_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val seeds = readPruneSeeds(spark, path)
-    val verdicts = clusterVerdicts(scoredAssignments(spark, dir, seeds))
-    verdicts.coalesce(1).write.mode("overwrite").parquet(s"$path/verdicts")
-    IndexMeta.write(spark, path, "graft cluster-prune index",
-      "kind" -> "cluster_prune", "k" -> seeds.length.toString,
-      "pruned" -> PRUNE_CLUSTERS.toString)
-  }
+  def writeClusterPruneIndex(spark: SparkSession, dir: String, path: String): Unit =
+    IndexMeta.commit(spark, path, "graft cluster-prune index") {
+      // the ONE seed definition (lowestIdSeeds) materialized — the build
+      // cannot drift from the inline q114 path
+      import spark.implicits._
+      lowestIdSeeds(emb(spark, dir), PRUNE_K).toSeq
+        .toDF("cent_id", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+      val seeds = readPruneSeeds(spark, path)
+      val verdicts = clusterVerdicts(scoredAssignments(spark, dir, seeds))
+      verdicts.coalesce(1).write.mode("overwrite").parquet(s"$path/verdicts")
+      Seq("kind" -> "cluster_prune", "k" -> seeds.length.toString,
+        "pruned" -> PRUNE_CLUSTERS.toString)
+    }
 
   private def readPruneSeeds(spark: SparkSession,
                              path: String): Array[(Long, Array[Double])] =

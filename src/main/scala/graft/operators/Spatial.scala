@@ -267,8 +267,8 @@ object Spatial {
   }
 
   /** Build-once range-sorted layout of the q98 keyed table (64 files,
-    * zkey-sorted within each so parquet stats prune per range); meta
-    * written last = completeness marker, path keyed by the source
+    * zkey-sorted within each so parquet stats prune per range),
+    * committed through [[IndexMeta.commit]], path keyed by the source
     * fingerprint so a regenerated fixture rebuilds (the index-store
     * contract). The READER IS STRICT on the recorded key dial: the path
     * key only tracks SOURCE changes, so if a code change ever moves
@@ -281,14 +281,12 @@ object Spatial {
       IndexMeta.exists(spark, path) &&
         IndexMeta.read(spark, path, "the z-order layout writer")
           .getProperty("axis_bits") == AXIS_BITS.toString
-    if (!current) {
-      IndexMeta.invalidate(spark, path)
+    if (!current) IndexMeta.commit(spark, path, "z-order layout") {
       q98ZorderLayout(spark, dir)
         .repartitionByRange(64, col("zkey"))
         .sortWithinPartitions(col("zkey"))
         .write.mode("overwrite").parquet(s"$path/data")
-      IndexMeta.write(spark, path, "z-order layout",
-        "axis_bits" -> AXIS_BITS.toString, "source_table" -> "orders")
+      Seq("axis_bits" -> AXIS_BITS.toString, "source_table" -> "orders")
     }
     path
   }

@@ -628,14 +628,12 @@ object TextAnalysis {
     mergeStatsPartials(parts)
       .withColumn("avg_chars", round(col("total_chars") / col("n_docs"), 6))
 
-  /** Materialize the stats base (invalidate-first / meta-last). */
-  def writeStatsIndex(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    IndexMeta.invalidate(spark, path)
-    statsPartials(df).write.mode("overwrite").parquet(s"$path/partials")
-    IndexMeta.write(spark, path, "graft corpus stats view",
-      "kind" -> "stats_view", "keys" -> "lang,source")
-  }
+  /** Materialize the stats base. */
+  def writeStatsIndex(df: DataFrame, path: String): Unit =
+    IndexMeta.commit(df.sparkSession, path, "graft corpus stats view") {
+      statsPartials(df).write.mode("overwrite").parquet(s"$path/partials")
+      Seq("kind" -> "stats_view", "keys" -> "lang,source")
+    }
 
   /** Incremental corpus-stats maintenance — the materialized-view shape
     * a 100 TB corpus dashboard actually runs: per-(lang, source) doc and
@@ -805,14 +803,12 @@ object TextAnalysis {
         col("z_int"), col("est_distinct"))
   }
 
-  /** Materialize the HLL register base (invalidate-first / meta-last). */
-  def writeHllIndex(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    IndexMeta.invalidate(spark, path)
-    hllPartials(df).write.mode("overwrite").parquet(s"$path/registers")
-    IndexMeta.write(spark, path, "graft hll register view",
-      "kind" -> "hll_registers", "m" -> HLL_M.toString)
-  }
+  /** Materialize the HLL register base. */
+  def writeHllIndex(df: DataFrame, path: String): Unit =
+    IndexMeta.commit(df.sparkSession, path, "graft hll register view") {
+      hllPartials(df).write.mode("overwrite").parquet(s"$path/registers")
+      Seq("kind" -> "hll_registers", "m" -> HLL_M.toString)
+    }
 
   /** Incremental cardinality maintenance — the q132 materialized-view
     * shape with the MAX merge algebra: the corpus's registers are stored

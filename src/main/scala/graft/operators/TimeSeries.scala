@@ -455,27 +455,25 @@ object TimeSeries {
         round(col("su").cast("double") / col("n").cast("double") / 1e6, 6)
           .as("mean_v"))
 
-  /** Materialize the phase-serving index (invalidate-first/meta-last):
+  /** Materialize the phase-serving index:
     * `period` — per-user (best_period, med, mad), the argmin winner
     * denormalized with the robust scale so the gate needs ONE index;
     * `template` — q140's (user, bin, n, mean_v) profile. The expensive
     * parts (grid search, percentiles, fold aggregate) all happen HERE,
     * at build time.
     */
-  def writePhaseIndex(events: DataFrame, path: String): Unit = {
-    val spark = events.sparkSession
-    IndexMeta.invalidate(spark, path)
-    val e = graft.CacheScope.cache(events
-      .select(col("user_id"), col("event_id"), col("ts"), col("value")))
-    val best = graft.CacheScope.cache(bestPeriods(e))
-    best.select(col("user_id"), col("best_period"))
-      .join(madBoundaries(e.select(col("user_id"), col("value"))),
-        Seq("user_id"))
-      .write.mode("overwrite").parquet(s"$path/period")
-    foldTemplate(e, best).write.mode("overwrite").parquet(s"$path/template")
-    IndexMeta.write(spark, path, "graft phase template",
-      "kind" -> "phase_template", "bins" -> FOLD_BINS.toString, "k" -> "3")
-  }
+  def writePhaseIndex(events: DataFrame, path: String): Unit =
+    IndexMeta.commit(events.sparkSession, path, "graft phase template") {
+      val e = graft.CacheScope.cache(events
+        .select(col("user_id"), col("event_id"), col("ts"), col("value")))
+      val best = graft.CacheScope.cache(bestPeriods(e))
+      best.select(col("user_id"), col("best_period"))
+        .join(madBoundaries(e.select(col("user_id"), col("value"))),
+          Seq("user_id"))
+        .write.mode("overwrite").parquet(s"$path/period")
+      foldTemplate(e, best).write.mode("overwrite").parquet(s"$path/template")
+      Seq("kind" -> "phase_template", "bins" -> FOLD_BINS.toString, "k" -> "3")
+    }
 
   private[graft] def loadPhaseIndex(spark: SparkSession,
                                     path: String): (DataFrame, DataFrame) = {
@@ -528,15 +526,13 @@ object TimeSeries {
         round(percentile(abs(col("value") - col("med")), lit(0.5)), 6).as("mad"))
   }
 
-  /** Materialize q136's per-user boundaries (invalidate-first/meta-last). */
-  def writeOutlierIndex(events: DataFrame, path: String): Unit = {
-    val spark = events.sparkSession
-    IndexMeta.invalidate(spark, path)
-    madBoundaries(events.select(col("user_id"), col("value")))
-      .write.mode("overwrite").parquet(s"$path/bounds")
-    IndexMeta.write(spark, path, "graft outlier boundaries",
-      "kind" -> "mad_bounds", "k" -> "3")
-  }
+  /** Materialize q136's per-user boundaries. */
+  def writeOutlierIndex(events: DataFrame, path: String): Unit =
+    IndexMeta.commit(events.sparkSession, path, "graft outlier boundaries") {
+      madBoundaries(events.select(col("user_id"), col("value")))
+        .write.mode("overwrite").parquet(s"$path/bounds")
+      Seq("kind" -> "mad_bounds", "k" -> "3")
+    }
 
   /** Census a batch against STORED boundaries — the per-batch kernel of
     * the streaming gate and the q138 serve path: one user-keyed join

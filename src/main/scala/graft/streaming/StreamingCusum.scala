@@ -20,6 +20,8 @@ import org.apache.spark.sql.types.StructType
   * so it carries its own stream: the two scaffold contracts are upheld
   * manually (fingerprint captured BEFORE the boundary frame resolves;
   * re-checked every micro-batch in the sink, failing loudly on rebuild).
+  * The boundary table is collected to the driver at start (one row per
+  * user), so no micro-batch reads the index files the check guards.
   *
   * Ordering contract: within a batch events sort by (ts, event_id); the
   * state fold assumes batches arrive in per-user event-time order (the
@@ -30,7 +32,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: state is TWO longs per user (contrast the star builder's
   * per-event buffers); per-batch work is |batch| joined against the
-  * user-bounded boundary table. Replay is safe: state restores from the
+  * user-bounded boundary table, held on the driver as three numbers per
+  * user. Replay is safe: state restores from the
   * checkpoint version and `batch_<id>` overwrite re-places output.
   */
 object StreamingCusum {
@@ -75,7 +78,13 @@ object StreamingCusum {
                       indexPath: String, outPath: String, checkpoint: String,
                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val loadedFp = IndexMeta.fingerprint(spark, indexPath)
-    val bounds = TimeSeries.loadOutlierBounds(spark, indexPath)
+    // resolved ONCE into a local relation. Read from the index files, the
+    // stream-static join's broadcast runs before `foreachBatch` hands over
+    // the batch, so a rebuild would kill the query on a deleted part file
+    // before the fingerprint check below could name the rebuild
+    val stored = TimeSeries.loadOutlierBounds(spark, indexPath)
+    val bounds = spark.createDataFrame(
+      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
     build(spark.readStream.schema(evSchema).parquet(evDir), bounds)
       .writeStream
       .outputMode(OutputMode.Append())

@@ -27,24 +27,15 @@ object StreamingDecileGate {
 
   /** Materialize the decile boundaries of `dir`'s documents corpus —
     * the batch half of the serving pair (one aggregate, one tiny file).
-    * Meta LAST (the index-completeness convention): meta presence marks
-    * the build complete, and the per-build nonce makes ANY
-    * re-materialization invalidate a running gate's fingerprint. Written
-    * first, the meta would open the inverse race with no recovery — a
-    * gate starting DURING a rebuild would capture the new nonce over the
-    * old bounds and serve them forever with every check passing.
     */
-  def writeBoundaries(spark: SparkSession, dir: String, outPath: String): Unit = {
-    // invalidate first: a rebuild that crashes mid-write must leave a
-    // meta-less (refused) dir, never new bounds under the old meta
-    graft.operators.IndexMeta.invalidate(spark, outPath)
-    TextAnalysis.decileBoundaries(
-      TextAnalysis.qualityScored(graft.Tables.load(spark, dir, "documents")))
-      .write.mode("overwrite").parquet(s"$outPath/bounds")
-    graft.operators.IndexMeta.write(spark, outPath, "graft decile boundaries",
-      "kind" -> "decile_boundaries", "score" -> "distinct_ratio",
-      "probs" -> "0.1..0.9")
-  }
+  def writeBoundaries(spark: SparkSession, dir: String, outPath: String): Unit =
+    graft.operators.IndexMeta.commit(spark, outPath, "graft decile boundaries") {
+      TextAnalysis.decileBoundaries(
+        TextAnalysis.qualityScored(graft.Tables.load(spark, dir, "documents")))
+        .write.mode("overwrite").parquet(s"$outPath/bounds")
+      Seq("kind" -> "decile_boundaries", "score" -> "distinct_ratio",
+        "probs" -> "0.1..0.9")
+    }
 
   def run(spark: SparkSession, docDir: String, docSchema: StructType,
           boundariesPath: String, keepPath: String, restPath: String,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (documents arriving more than `retention` apart are treated as new),
   * which is the standard trade for unbounded streams. The same shape with
   * a minhash band column as the key gives streaming NEAR-dup candidate
-  * suppression.
+  * suppression. Dedup against a STORED band index is stateless and runs
+  * on [[IndexServingStream]] instead.
   */
 object StreamingDedup {
 
@@ -44,60 +45,6 @@ object StreamingDedup {
       .outputMode("append")
       .format("parquet")
       .option("path", cleanPath)
-      .start()
-  }
-
-  /** Streaming incremental dedup against a MATERIALIZED corpus band index
-    * ([[graft.operators.Dedup.writeBandIndex]]) — the realtime half of the
-    * nightly shape q81 gates: documents stream in, each micro-batch runs
-    * the BATCH delta-vs-index kernel
-    * ([[graft.operators.Dedup.incrementalDedupAgainstIndex]]) and appends
-    * its verdicts (doc_id, dup_of, est_sim, is_dup) to the sink. One
-    * shared definition means stream and nightly can never drift on
-    * candidate generation or the estimator; `foreachBatch` gives the
-    * batch planner (broadcasts, AQE) per micro-batch plus checkpointed
-    * exactly-once file-source progress.
-    *
-    * Scale: per-batch work is |batch| × bucket occupancy — the corpus
-    * participates only through the stored band keys (candidate equi-join)
-    * and signatures (verify); no streaming state at all, so there is no
-    * watermark to bound and a restart resumes from the checkpoint with
-    * zero rebuild.
-    */
-  def runAgainstIndex(spark: SparkSession, docDir: String,
-                      docSchema: org.apache.spark.sql.types.StructType,
-                      indexPath: String, outPath: String,
-                      checkpoint: String,
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // the index is immutable for the life of the query: resolve its dials
-    // and corpus frames ONCE, not per micro-batch (meta + parquet footer
-    // reads would otherwise dominate small batches). Restart-on-rebuild
-    // is the contract — each batch re-checks the meta fingerprint (one
-    // tiny FS stat + read) and fails loudly if the index was replaced,
-    // instead of silently serving frames resolved from the retired build.
-    // fingerprint BEFORE the load: a rebuild landing between the two calls
-    // then fails the first batch loudly instead of being masked forever
-    // (fingerprint-after would equal the NEW build while idx held the old)
-    val loadedFp = graft.operators.IndexMeta.fingerprint(spark, indexPath)
-    val idx = graft.operators.Dedup.loadBandIndex(spark, indexPath)
-    spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // foreachBatch is AT-LEAST-ONCE on failure retry: each batch
-        // OVERWRITES its own deterministic batch_<id> directory, so a
-        // replayed batch replaces rather than duplicates its verdicts.
-        // Readers load the sink with recursiveFileLookup=true.
-        graft.operators.IndexMeta.requireUnchanged(spark, indexPath, loadedFp)
-        graft.CacheScope.run {
-          graft.operators.Dedup.incrementalDedupAgainstLoaded(batch, idx)
-            .write.mode("overwrite").parquet(s"$outPath/batch_$batchId")
-        }
-        ()
-      }
       .start()
   }
 

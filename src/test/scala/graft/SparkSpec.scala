@@ -12,6 +12,18 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Runs `body` from an empty cache and fails if it leaves a cached
+    * frame behind — the check for operators called outside any
+    * [[CacheScope]], where a `CacheScope.cache` degrades to a plain
+    * `cache()` nobody frees.
+    */
+  def assertNoCachedFrames[A](label: String)(body: => A): A = {
+    spark.catalog.clearCache()
+    val r = body
+    assert(spark.sharedState.cacheManager.isEmpty, s"$label left a cached frame behind")
+    r
+  }
+
   /** Spark jobs `body` runs, counted through a job group. */
   def jobsFor(group: String)(body: => Unit): Int = {
     spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)

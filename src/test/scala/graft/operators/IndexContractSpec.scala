@@ -37,7 +37,7 @@ class IndexContractSpec extends SparkSpec {
   test("a rebuild invalidates the loaded fingerprint — even at identical dials") {
     // restart-on-rebuild is the streaming serving contract: a running
     // query holds the fingerprint it loaded at start and every micro-batch
-    // re-checks it (IndexServingStream.run, StreamingDedup.runAgainstIndex). The
+    // re-checks it (IndexServingStream.run). The
     // fingerprint must change on ANY rebuild — same dials included, since
     // same-dial rebuilds replace the corpus frames too — and the check
     // must fail loudly, not serve the retired build's plan.
@@ -71,17 +71,93 @@ class IndexContractSpec extends SparkSpec {
   }
 
   test("q81 rebuilds an index whose meta is missing — a rebuild that crashed") {
-    // a rebuild that dies after IndexMeta.invalidate leaves the old data
-    // tables, bands/_SUCCESS included, with no meta. Meta is the
-    // completeness marker, so the next q81 must rebuild instead of
-    // reading dials from a meta that is not there
+    // a rebuild that dies mid-write leaves the old data tables,
+    // bands/_SUCCESS included, with no meta: the dir is refused, and
+    // since meta is the completeness marker the next q81 must rebuild
+    // instead of reading dials from a meta that is not there
     def q81 = CacheScope.run(Dedup.queries("q81_incremental_index")(spark, dir)
       .collect().map(_.toString).sorted.toSeq)
     val first = q81
     val indexPath = graft.Tables.derivedIndexPath("graft_band_index_v2", dir, "documents")
-    IndexMeta.invalidate(spark, indexPath)
+    val crash = intercept[IllegalStateException] {
+      IndexMeta.commit(spark, indexPath, "graft band index dials") {
+        throw new IllegalStateException("rebuild killed mid-write")
+      }
+    }
+    assert(crash.getMessage == "rebuild killed mid-write")
     assert(new java.io.File(s"$indexPath/bands/_SUCCESS").exists())
+    val refused = intercept[IllegalStateException](Dedup.loadBandIndex(spark, indexPath))
+    assert(refused.getMessage.contains("no meta.properties"), refused.getMessage)
     assert(q81 == first)
     assert(IndexMeta.exists(spark, indexPath))
+  }
+
+  test("ensure builds a directory once, whether named by a file: URI or a bare path") {
+    val path = java.nio.file.Files.createTempDirectory("ensurelock").toString + "/idx"
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val bothIn = new java.util.concurrent.CountDownLatch(2)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    // each build counts itself, then waits up to 2 s for a second one to
+    // start: under one lock the second caller blocks, then sees the meta
+    def build(): Unit = {
+      builds.incrementAndGet()
+      bothIn.countDown()
+      bothIn.await(2, java.util.concurrent.TimeUnit.SECONDS)
+      IndexMeta.commit(spark, path, "lock test")(Nil)
+    }
+    val threads = Seq(s"file:$path", path).map { p =>
+      new Thread(() =>
+        try IndexMeta.ensure(spark, p)(build())
+        catch { case t: Throwable => errors.add(t); () })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, s"ensure failed: $errors")
+    assert(builds.get == 1, s"${builds.get} builds ran into one directory")
+  }
+
+  test("no index writer leaves a cached frame behind, even outside any CacheScope") {
+    val docs = graft.Tables.load(spark, dir, "documents")
+    val events = graft.Tables.load(spark, dir, "events")
+      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+    val tmp = java.nio.file.Files.createTempDirectory("writers_nocache").toString
+    // a private sf dir holding only `orders`, so the z-order layout is
+    // built here rather than found from an earlier run
+    val zdir = s"$tmp/zdir"
+    graft.Tables.load(spark, dir, "orders").write.parquet(s"$zdir/orders.parquet")
+    val oldIds = docs.filter(col("doc_id") % 5 =!= 0)
+    val newIds = docs.filter(col("doc_id") % 5 === 0)
+    val writers: Seq[(String, () => Unit)] = Seq(
+      "writeAnnIndex" -> (() => Similarity.writeAnnIndex(emb, s"$tmp/ann")),
+      "writeIvfIndex" -> (() => Similarity.writeIvfIndex(emb, s"$tmp/ivf")),
+      "writeSq8Index" -> (() => Similarity.writeSq8Index(emb, s"$tmp/sq8")),
+      "writePqIndex" -> (() => Similarity.writePqIndex(emb, s"$tmp/pq")),
+      "writeIvfPqIndex" -> (() => Similarity.writeIvfPqIndex(
+        emb.filter(col("vec_id") % 10 =!= 0), s"$tmp/ivfpq")),
+      "appendIvfPqDelta" -> (() => Similarity.appendIvfPqDelta(
+        emb.filter(col("vec_id") % 10 === 0), s"$tmp/ivfpq")),
+      "writeClusterPruneIndex" -> (() =>
+        Similarity.writeClusterPruneIndex(spark, dir, s"$tmp/prune")),
+      "writePhaseIndex" -> (() => TimeSeries.writePhaseIndex(events, s"$tmp/phase")),
+      "writeOutlierIndex" -> (() => TimeSeries.writeOutlierIndex(events, s"$tmp/mad")),
+      "writeStatsIndex" -> (() => TextAnalysis.writeStatsIndex(docs, s"$tmp/stats")),
+      "writeHllIndex" -> (() => TextAnalysis.writeHllIndex(docs, s"$tmp/hll")),
+      "writeBandIndex" -> (() => Dedup.writeBandIndex(docs, s"$tmp/band")),
+      "writeBm25Index" -> (() => Bm25.writeBm25Index(oldIds, s"$tmp/bm25")),
+      "appendBm25Delta" -> (() => Bm25.appendBm25Delta(newIds, s"$tmp/bm25")),
+      "compactBm25" -> (() => Bm25.compactBm25(spark, s"$tmp/bm25")),
+      "writeBloomIndex" -> (() => BloomGate.writeBloomIndex(
+        docs.filter(col("source") === "src0"), s"$tmp/bloom")),
+      "writeHotBlockIndex" -> (() => CorpusOps.writeHotBlockIndex(docs, s"$tmp/hot")),
+      "writeDsirIndex" -> (() => CorpusOps.writeDsirIndex(spark, dir, s"$tmp/dsir")),
+      "writeCcnetIndex" -> (() => CorpusOps.writeCcnetIndex(spark, dir, s"$tmp/ccnet")),
+      "the z-order layout" -> (() => Spatial.queries("q105_zrange_box")(spark, zdir)),
+      "writeBoundaries" -> (() => graft.streaming.StreamingDecileGate
+        .writeBoundaries(spark, dir, s"$tmp/deciles")))
+    for ((name, write) <- writers) assertNoCachedFrames(name)(write())
+    assert(Bm25.liveSegmentCount(spark, s"$tmp/bm25") == 1, "the compaction ran")
+    assert(new java.io.File(graft.Tables.derivedIndexPath(
+      "graft_zorder_layout_v1", zdir, "orders"), "meta.properties").exists(),
+      "the z-order layout was built")
   }
 }

@@ -148,6 +148,15 @@ class IvfPqDeltaSpec extends SparkSpec {
         base().filter(col("vec_id") < 5).select("vec_id", "embedding"), s"$tmp/idx")
         .filter(col("rn") <= 3).collect()
       assert(got.length == 15)
+
+      // one more append, below both triggers (10 / 2400 < 0.1): its meta
+      // rewrite must carry the retrain's recorded decision forward
+      val small = graft.Synth.synthEmb(spark, 2410L).filter(col("vec_id") >= 2400)
+      assert(!Similarity.appendIvfPqDelta(small.select("vec_id", "embedding"), s"$tmp/idx"))
+      val m2 = meta(s"$tmp/idx")
+      assert(m2.getProperty("deltas") == "1")
+      assert(m2.getProperty("maintain_decision") == m.getProperty("maintain_decision"),
+        s"an append dropped the recorded decision: ${m2.getProperty("maintain_decision")}")
     }
   }
 

@@ -73,13 +73,11 @@ class IvfPqServeSpec extends SparkSpec {
       "sq8" -> (() => Similarity.sq8Search(probes, Similarity.loadSq8Index(spark, s"$tmp/sq8"))),
       "pq" -> (() => Similarity.pqSearch(probes, Similarity.loadPqIndex(spark, s"$tmp/pq"))),
       "ivfpq" -> (() => Similarity.ivfPqSearch(probes, Similarity.loadIvfPqIndex(spark, indexPath))))
-    for ((family, serve) <- serves) {
-      spark.catalog.clearCache()
+    for ((family, serve) <- serves) assertNoCachedFrames(s"a $family serve") {
       val served = serve()
       assert(served.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty,
         s"$family: ${served.queryExecution.optimizedPlan.treeString}")
       assert(served.collect().nonEmpty, s"$family: the serve found no neighbors")
-      assert(spark.sharedState.cacheManager.isEmpty, s"a $family serve left a cached frame behind")
     }
   }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.ml._
 import graft.model.{LightCurveData, Star}
 import graft.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,6 +14,7 @@ import org.apache.spark.sql.streaming.Trigger
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+  import StreamingSpec.Served
 
   private val rng = new scala.util.Random(3)
 
@@ -100,71 +102,7 @@ class StreamingSpec extends SparkSpec {
     assert(clean.select("minhash_sig").distinct().count() == 2)
   }
 
-  test("streaming incremental dedup matches the batch kernel against a stored band index") {
-    val tmp = java.nio.file.Files.createTempDirectory("idxstream").toString
-    // corpus: two real documents, indexed once (the nightly artifact)
-    val corpus = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta eta theta", "en", "web", 46L),
-      (101L, "one two three four five six seven eight nine", "en", "web", 44L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    graft.operators.Dedup.writeBandIndex(corpus, s"$tmp/index")
-
-    // batch 1 of the stream: a verbatim copy of corpus doc 100 + a novel doc
-    val delta1 = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta", "en", "news", 46L),
-      (2L, "totally unrelated fresh content right here today", "en", "web", 48L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    delta1.write.mode("append").parquet(s"$tmp/in")
-    StreamingDedup.runAgainstIndex(spark, s"$tmp/in", delta1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out1 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    // stream verdicts must EQUAL the batch kernel's on the same delta —
-    // one shared definition, zero drift
-    val batch1 = graft.operators.Dedup.incrementalDedupAgainstIndex(delta1, s"$tmp/index")
-    assert(out1.collect().map(_.toSeq).toSet == batch1.collect().map(_.toSeq).toSet,
-      "stream and batch verdicts diverged")
-    assert(out1.filter(col("doc_id") === 1L && col("is_dup") &&
-      col("dup_of") === 100L).count() == 1, "copy of an indexed doc must flag dup")
-    assert(out1.filter(col("doc_id") === 2L && !col("is_dup")).count() == 1)
-
-    // batch 2 resumes from the checkpoint: only the new file processes
-    Seq((3L, "one two three four five six seven eight nine", "fr", "web", 44L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("append").parquet(s"$tmp/in")
-    StreamingDedup.runAgainstIndex(spark, s"$tmp/in", delta1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out2 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    assert(out2.count() == 3, "restart must process only the new arrivals")
-    assert(out2.filter(col("doc_id") === 3L && col("is_dup") &&
-      col("dup_of") === 101L).count() == 1)
-  }
-
-  /** The vector-serving families as (family, index writer, load+search
-    * binding): the binding is exactly what a serving stream hands
-    * [[IndexServingStream.run]], and applied to a probe frame directly it
-    * is the batch search the stream must match.
-    */
-  private val vectorFamilies: Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit,
-      String => org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = {
-    import graft.operators.Similarity._
-    Seq(
-      ("ann", writeAnnIndex(_, _),
-        p => { val idx = loadAnnIndex(spark, p); b => annSearch(b, idx) }),
-      ("sq8", writeSq8Index(_, _),
-        p => { val idx = loadSq8Index(spark, p); b => sq8Search(b, idx) }),
-      ("ivf", writeIvfIndex(_, _),
-        p => { val idx = loadIvfIndex(spark, p); b => ivfSearch(b, idx) }),
-      ("ivfpq", writeIvfPqIndex(_, _),
-        p => { val idx = loadIvfPqIndex(spark, p); b => ivfPqSearch(b, idx) }))
-  }
-
-  /** A serving stream of `family` against the index at `index`. */
-  private def serveStream(family: String, in: String,
-                          schema: org.apache.spark.sql.types.StructType, index: String,
-                          out: String, ckpt: String,
-                          trigger: Trigger = Trigger.AvailableNow()) =
-    IndexServingStream.run(spark, in, schema, index, out, ckpt, trigger)(
-      vectorFamilies.find(_._1 == family).get._3(index))
+  // ------------------------------------------------ index-serving streams
 
   private def vf(xs: Double*) = xs.map(_.toFloat)
 
@@ -181,25 +119,148 @@ class StreamingSpec extends SparkSpec {
 
   private def vecProbe(id: Long, v: Seq[Float]) = Seq((id, v)).toDF("vec_id", "embedding")
 
+  private def docs(rows: (Long, String, String, String, Long)*) =
+    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+
+  private val sf = "/root/testdata/sf0.001"
+  private def sfDocs = Tables.load(spark, sf, "documents")
+  private def sfEvents = Tables.load(spark, sf, "events")
+    .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+
+  private def served(family: String): Served = {
+    import graft.operators._
+    import graft.operators.Similarity._
+    val nearAxis0 = () => vecProbe(100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0))
+    family match {
+      case "dedup" => Served(Dedup.writeBandIndex(docs(
+          (100L, "alpha beta gamma delta epsilon zeta eta theta", "en", "web", 46L),
+          (101L, "one two three four five six seven eight nine", "en", "web", 44L)), _),
+        () => docs(
+          (1L, "alpha beta gamma delta epsilon zeta eta theta", "en", "news", 46L),
+          (2L, "totally unrelated fresh content right here today", "en", "web", 48L)),
+        p => { val idx = Dedup.loadBandIndex(spark, p)
+          b => Dedup.incrementalDedupAgainstLoaded(b, idx) })
+      case "ann" => Served(writeAnnIndex(vecCorpus, _), nearAxis0,
+        p => { val idx = loadAnnIndex(spark, p); b => annSearch(b, idx) })
+      case "sq8" => Served(writeSq8Index(vecCorpus, _), nearAxis0,
+        p => { val idx = loadSq8Index(spark, p); b => sq8Search(b, idx) })
+      case "ivf" => Served(writeIvfIndex(vecCorpus, _), nearAxis0,
+        p => { val idx = loadIvfIndex(spark, p); b => ivfSearch(b, idx) })
+      case "pq" => Served(writePqIndex(vecCorpus, _), nearAxis0,
+        p => { val idx = loadPqIndex(spark, p); b => pqSearch(b, idx) })
+      case "ivfpq" => Served(writeIvfPqIndex(vecCorpus, _), nearAxis0,
+        p => { val idx = loadIvfPqIndex(spark, p); b => ivfPqSearch(b, idx) })
+      case "bloom" => Served(BloomGate.writeBloomIndex(docs(
+          (900L, "the quick brown fox jumps over the lazy dog", "en", "src0", 43L)), _),
+        () => docs(
+          (1L, "he saw the quick brown fox jumps over a fence", "en", "web", 45L),
+          (2L, "completely unrelated content with no shared spans", "en", "web", 49L)),
+        p => { val idx = BloomGate.loadBloomIndex(spark, p)
+          b => BloomGate.decontaminateAgainstLoaded(b, idx) })
+      case "ccnet" => Served(CorpusOps.writeCcnetIndex(spark, sf, _),
+        () => sfDocs.filter(col("source") =!= "src0"),
+        p => { val idx = CorpusOps.loadCcnetIndex(spark, p)
+          b => CorpusOps.ccnetAgainstLoaded(b, idx) })
+      case "dsir" => Served(CorpusOps.writeDsirIndex(spark, sf, _),
+        () => sfDocs.filter(col("source") =!= "src0"),
+        p => { val idx = CorpusOps.loadDsirIndex(spark, p)
+          b => CorpusOps.dsirAgainstLoaded(b, idx) })
+      case "cluster-prune" => Served(writeClusterPruneIndex(spark, sf, _),
+        () => sfDocs.select(col("doc_id"), col("text"))
+          .join(Tables.load(spark, sf, "embeddings")
+            .select(col("vec_id"), col("embedding")), col("doc_id") === col("vec_id"))
+          .select(col("doc_id"), col("text"), col("embedding")),
+        p => { val idx = loadClusterPruneIndex(spark, p)
+          b => clusterPruneAgainstLoaded(b, idx) })
+      case "hot-block" => Served(CorpusOps.writeHotBlockIndex(sfDocs, _), () => sfDocs,
+        p => { val idx = CorpusOps.loadHotBlockIndex(spark, p)
+          b => CorpusOps.hotScrubAgainstLoaded(b, idx) })
+      case "outlier" => Served(
+        TimeSeries.writeOutlierIndex(sfEvents.select(col("user_id"), col("value")), _),
+        () => sfEvents.select(col("user_id"), col("value")),
+        p => { val bounds = TimeSeries.loadOutlierBounds(spark, p)
+          b => TimeSeries.outliersAgainstBounds(b, bounds) })
+      case "phase" => Served(TimeSeries.writePhaseIndex(sfEvents, _), () => sfEvents,
+        p => { val (period, template) = TimeSeries.loadPhaseIndex(spark, p)
+          b => TimeSeries.phaseResidualsAgainstIndex(b, period, template) })
+      case "bm25" => Served(Bm25.writeBm25Index(sfDocs, _),
+        () => sfDocs.select(col("doc_id"), col("text")),
+        p => { val idx = Bm25.loadBm25Terms(spark, p); b => Bm25.scoreNewDocs(b, idx) })
+    }
+  }
+
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** `family`'s serving stream from `$tmp/in` against `$tmp/index`. */
+  private def serveStream(family: String, tmp: String,
+                          trigger: Trigger = Trigger.AvailableNow()) =
+    IndexServingStream.run(spark, s"$tmp/in", spark.read.parquet(s"$tmp/in").schema,
+      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt", trigger)(
+      served(family).resolve(s"$tmp/index"))
+
+  /** Runs `family`'s stream until its input drains; everything it served. */
+  private def drain(family: String, tmp: String): DataFrame = {
+    serveStream(family, tmp).awaitTermination()
+    spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
+  }
+
+  /** Builds `family`'s index, streams `input` (the family's own batch by
+    * default) through its serving stream and asserts the output equals
+    * the batch serve on the same rows — one kernel definition, zero
+    * drift. Returns the tmp dir and the streamed rows for the family's
+    * own checks.
+    */
+  private def checkServe(family: String,
+                         input: Option[DataFrame] = None): (String, DataFrame) = {
+    val f = served(family)
+    val tmp = java.nio.file.Files.createTempDirectory(s"${family}stream").toString
+    f.build(s"$tmp/index")
+    val in = input.getOrElse(f.input())
+    in.write.mode("append").parquet(s"$tmp/in")
+    val out = drain(family, tmp)
+    val want = graft.CacheScope.run(rows(f.resolve(s"$tmp/index")(in)))
+    assert(rows(out) == want, s"$family: streamed and batch results diverged")
+    (tmp, out)
+  }
+
+  /** The restart-on-rebuild check for `family`: a continuous serving
+    * stream serves one batch, the index is rebuilt under it, and the
+    * next batch must kill the query.
+    */
+  private def checkRebuild(family: String): Unit = {
+    val f = served(family)
+    val tmp = java.nio.file.Files.createTempDirectory(s"${family}rebuild").toString
+    f.build(s"$tmp/index")
+    val in = f.input()
+    in.write.mode("append").parquet(s"$tmp/in")
+    val q = serveStream(family, tmp, Trigger.ProcessingTime("50 milliseconds"))
+    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
+      f.build(s"$tmp/index")
+      in.write.mode("append").parquet(s"$tmp/in")
+    }
+  }
+
+  test("streaming incremental dedup matches the batch kernel against a stored band index") {
+    val (tmp, out1) = checkServe("dedup")
+    assert(out1.filter(col("doc_id") === 1L && col("is_dup") &&
+      col("dup_of") === 100L).count() == 1, "copy of an indexed doc must flag dup")
+    assert(out1.filter(col("doc_id") === 2L && !col("is_dup")).count() == 1)
+
+    // batch 2 resumes from the checkpoint: only the new file processes
+    docs((3L, "one two three four five six seven eight nine", "fr", "web", 44L))
+      .write.mode("append").parquet(s"$tmp/in")
+    val out2 = drain("dedup", tmp)
+    assert(out2.count() == 3, "restart must process only the new arrivals")
+    assert(out2.filter(col("doc_id") === 3L && col("is_dup") &&
+      col("dup_of") === 101L).count() == 1)
+  }
+
   /** Streams two probe batches through `family`'s serving stream: the first
     * must equal the batch search and land in its own cluster, the second
     * must resume from the checkpoint without re-serving the first.
     */
   private def checkVectorServe(family: String): Unit = {
-    val (_, write, search) = vectorFamilies.find(_._1 == family).get
-    val tmp = java.nio.file.Files.createTempDirectory(s"${family}stream").toString
-    write(vecCorpus, s"$tmp/index")
-    def drain(): org.apache.spark.sql.DataFrame = {
-      serveStream(family, s"$tmp/in", vecProbe(0L, Nil).schema,
-        s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-      spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    }
-    val probes1 = vecProbe(100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0))
-    probes1.write.mode("append").parquet(s"$tmp/in")
-    val out1 = drain()
-    val batch1 = search(s"$tmp/index")(probes1)
-    assert(out1.collect().map(_.toSeq).toSet == batch1.collect().map(_.toSeq).toSet,
-      s"$family: streamed and batch neighbors diverged")
+    val (tmp, out1) = checkServe(family)
     val nearest = out1.filter(col("p_id") === 100L && col("rn") === 1)
       .select("c_id").as[Long].collect()
     assert(nearest.length == 1 && nearest.head % 2 == 0,
@@ -208,7 +269,7 @@ class StreamingSpec extends SparkSpec {
     // a second batch resumes from the checkpoint
     vecProbe(101L, vf(0.0, 0.05, 0.95, 0.0, 0.0, 0.21, 0.0, 0.0))
       .write.mode("append").parquet(s"$tmp/in")
-    val out2 = drain()
+    val out2 = drain(family, tmp)
     assert(out2.filter(col("p_id") === 101L).count() > 0, s"$family: new probe served")
     assert(out2.filter(col("p_id") === 100L).count() == out1.count(),
       s"$family: restart must not re-serve processed probes")
@@ -226,24 +287,30 @@ class StreamingSpec extends SparkSpec {
     checkVectorServe("ivf")
   }
 
+  test("streaming PQ probes match the batch search against a stored code table") {
+    checkVectorServe("pq")
+  }
+
   test("streaming residual IVF-PQ probes match the batch search against a stored index") {
     checkVectorServe("ivfpq")
   }
 
-  test("residual IVF-PQ serving fails the running query when the index is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpqr").toString
-    val corpus = vecCorpus
-    graft.operators.Similarity.writeIvfPqIndex(corpus, s"$tmp/index")
-    val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0)))
-      .toDF("vec_id", "embedding")
-    probes.write.mode("append").parquet(s"$tmp/in")
-    val q = serveStream("ivfpq", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
-      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.Similarity.writeIvfPqIndex(corpus, s"$tmp/index")
-      probes.write.mode("append").parquet(s"$tmp/in")
-    }
-  }
+  Seq(
+    "dedup" -> "dedup serving fails the running query when the band index is rebuilt",
+    "ann" -> "ANN serving fails the running query when the LSH index is rebuilt",
+    "sq8" -> "SQ8 serving fails the running query when the index is rebuilt",
+    "ivf" -> "IVF serving fails the running query when the index is rebuilt",
+    "pq" -> "PQ serving fails the running query when the index is rebuilt",
+    "ivfpq" -> "residual IVF-PQ serving fails the running query when the index is rebuilt",
+    "bloom" -> "bloom gate fails the running query when the index is rebuilt",
+    "ccnet" -> "ccnet gate fails the running query when the LM is rebuilt",
+    "dsir" -> "DSIR gate fails the running query when the model is rebuilt",
+    "cluster-prune" -> "cluster-prune gate fails the running query when the index is rebuilt",
+    "hot-block" -> "hot-block gate fails the running query when the list is rebuilt",
+    "outlier" -> "outlier gate fails the running query when the boundaries are rebuilt",
+    "phase" -> "phase gate fails the running query when the template is rebuilt",
+    "bm25" -> "BM25 gate fails the running query when the index is rebuilt"
+  ).foreach { case (family, name) => test(name)(checkRebuild(family)) }
 
   test("an appended IVF-PQ delta restarts serving, then serves base ∪ delta") {
     val tmp = java.nio.file.Files.createTempDirectory("ivfpqdelta").toString
@@ -256,8 +323,7 @@ class StreamingSpec extends SparkSpec {
     val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
     probes.write.mode("append").parquet(s"$tmp/in")
-    val q = serveStream("ivfpq", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
-      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
+    val q = serveStream("ivfpq", tmp, Trigger.ProcessingTime("50 milliseconds"))
     // an append flips the meta fingerprint exactly like a rebuild: the
     // running query must restart rather than serve a base/delta frame mix
     spark.conf.set(graft.operators.Similarity.RETRAIN_FRACTION_CONF, "0")
@@ -272,9 +338,7 @@ class StreamingSpec extends SparkSpec {
       val deltaProbe = Seq((101L, vf(0.0, 0.1, 0.0, 0.98, 0.0, 0.0, 0.26, 0.0)))
         .toDF("vec_id", "embedding")
       deltaProbe.write.mode("append").parquet(s"$tmp/in")
-      serveStream("ivfpq", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out", s"$tmp/ckpt")
-        .awaitTermination()
-      val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
+      val out = drain("ivfpq", tmp)
       val served = out.filter(col("p_id") === 101L && col("c_id") >= 50L).count()
       assert(served > 0, "the delta segment must be served after restart")
       val batch = graft.operators.Similarity.ivfPqSearchAgainstIndex(
@@ -285,35 +349,6 @@ class StreamingSpec extends SparkSpec {
     } finally {
       spark.conf.unset(graft.operators.Similarity.RETRAIN_FRACTION_CONF)
       spark.conf.unset(graft.operators.Similarity.RETRAIN_DRIFT_CONF)
-    }
-  }
-
-  test("SQ8 serving fails the running query when the index is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("sq8r").toString
-    val corpus = Seq(
-      (0L, vf(1.0, 0.1, 0.0, 0.0)), (1L, vf(0.0, 1.0, 0.0, 0.1)),
-      (2L, vf(0.9, 0.12, 0.0, 0.0))).toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeSq8Index(corpus, s"$tmp/index")
-    val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
-    probes.write.mode("append").parquet(s"$tmp/in")
-    val q = serveStream("sq8", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
-      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.Similarity.writeSq8Index(corpus, s"$tmp/index")
-      probes.write.mode("append").parquet(s"$tmp/in")
-    }
-  }
-
-  test("IVF serving fails the running query when the index is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfr").toString
-    graft.operators.Similarity.writeIvfIndex(vecCorpus, s"$tmp/index")
-    val probes = vecProbe(100L, vf(0.95, 0.11, 0.0, 0.0, 0.19, 0.0, 0.0, 0.0))
-    probes.write.mode("append").parquet(s"$tmp/in")
-    val q = serveStream("ivf", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
-      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.Similarity.writeIvfIndex(vecCorpus, s"$tmp/index")
-      probes.write.mode("append").parquet(s"$tmp/in")
     }
   }
 
@@ -500,14 +535,15 @@ class StreamingSpec extends SparkSpec {
     * IndexMeta mechanics (IndexContractSpec covers those) but each gate's
     * own wiring: the per-batch check watches the right path and its
     * failure propagates out of foreachBatch to kill the StreamingQuery.
-    * Waits for `firstBatchDir` (proving the gate serves under the loaded
-    * fingerprint), runs `rebuildAndPush` (re-materialize the index, then
+    * Waits for `firstBatchDir`'s `_SUCCESS` marker (proving the gate
+    * served under the loaded fingerprint, and that the batch no longer
+    * reads the index the rebuild is about to replace), runs `rebuildAndPush` (re-materialize the index, then
     * push input to force a batch), and asserts the query dies with the
     * rebuilt-index error — not a timeout, not some other failure.
     */
   private def assertDiesOnRebuild(q: org.apache.spark.sql.streaming.StreamingQuery,
                                   firstBatchDir: String)(rebuildAndPush: => Unit): Unit = {
-    val first = new java.io.File(firstBatchDir)
+    val first = new java.io.File(firstBatchDir, "_SUCCESS")
     val deadline = System.currentTimeMillis + 60000
     while (!first.exists() && q.exception.isEmpty &&
       System.currentTimeMillis < deadline) Thread.sleep(50)
@@ -520,65 +556,6 @@ class StreamingSpec extends SparkSpec {
       if (t == null) Nil else t.getMessage +: chain(t.getCause)
     assert(chain(ex).exists(_.contains("rebuilt under a running streaming query")),
       s"query died for the wrong reason: ${chain(ex)}")
-  }
-
-  test("streaming bloom gate matches the batch kernel against a stored index") {
-    val tmp = java.nio.file.Files.createTempDirectory("bloomstream").toString
-    // blocklist: one reference doc, indexed once (the nightly artifact)
-    val blocklist = Seq(
-      (900L, "the quick brown fox jumps over the lazy dog", "en", "src0", 43L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    graft.operators.BloomGate.writeBloomIndex(blocklist, s"$tmp/index")
-
-    // batch 1: one doc sharing a 5-gram with the blocklist + one clean doc
-    val batch1 = Seq(
-      (1L, "he saw the quick brown fox jumps over a fence", "en", "web", 45L),
-      (2L, "completely unrelated content with no shared spans", "en", "web", 49L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    batch1.write.mode("append").parquet(s"$tmp/in")
-    StreamingBloomGate.runAgainstIndex(spark, s"$tmp/in", batch1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out1 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    // stream verdicts EQUAL the batch kernel's on the same batch — one
-    // shared definition, zero drift
-    val want1 = graft.CacheScope.run {
-      graft.operators.BloomGate
-        .decontaminateAgainstIndex(batch1, s"$tmp/index")
-        .collect().map(_.toSeq).toSet
-    }
-    assert(out1.collect().map(_.toSeq).toSet == want1,
-      "stream and batch verdicts diverged")
-    assert(out1.filter(col("doc_id") === 1L && col("contaminated")).count() == 1,
-      "doc sharing a blocklist 5-gram must flag")
-    assert(out1.filter(col("doc_id") === 2L && !col("contaminated")).count() == 1)
-
-    // batch 2 resumes from the checkpoint: only the new file processes
-    Seq((3L, "fox jumps over the lazy dog and keeps running on", "en", "web", 48L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("append").parquet(s"$tmp/in")
-    StreamingBloomGate.runAgainstIndex(spark, s"$tmp/in", batch1.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out2 = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-    assert(out2.count() == 3, "restart must process only the new arrivals")
-    assert(out2.filter(col("doc_id") === 3L && col("contaminated")).count() == 1)
-  }
-
-  test("bloom gate fails the running query when the index is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("bloomr").toString
-    val blocklist = Seq(
-      (900L, "the quick brown fox jumps over the lazy dog", "en", "src0", 43L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    graft.operators.BloomGate.writeBloomIndex(blocklist, s"$tmp/index")
-    val batch = Seq((1L, "plain clean content here today", "en", "web", 30L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    batch.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingBloomGate.runAgainstIndex(spark, s"$tmp/in", batch.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.BloomGate.writeBloomIndex(blocklist, s"$tmp/index")
-      batch.write.mode("append").parquet(s"$tmp/in")
-    }
   }
 
   test("decile gate fails the running query when boundaries are rebuilt") {
@@ -595,113 +572,6 @@ class StreamingSpec extends SparkSpec {
     assertDiesOnRebuild(q, s"$tmp/keep/batch_id=0") {
       StreamingDecileGate.writeBoundaries(spark, dir, s"$tmp/bounds")
       docs.limit(5).write.mode("append").parquet(s"$tmp/in")
-    }
-  }
-
-  test("streaming cluster-prune gate verdicts docs against the stored index, batch-parity") {
-    val tmp = java.nio.file.Files.createTempDirectory("prunestream").toString
-    val dir = "/root/testdata/sf0.001"
-    // nightly half: freeze the centroids + cluster verdicts
-    graft.operators.Similarity.writeClusterPruneIndex(spark, dir, s"$tmp/idx")
-
-    // stream (doc_id, text, embedding) rows through the gate
-    val in = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-      .join(spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding")), col("doc_id") === col("vec_id"))
-      .select(col("doc_id"), col("text"), col("embedding"))
-    in.write.mode("append").parquet(s"$tmp/in")
-    StreamingClusterPrune.runAgainstIndex(spark, s"$tmp/in", in.schema,
-      s"$tmp/idx", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-
-    val streamed = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$tmp/out")
-      .select("doc_id", "cluster", "pruned")
-      .as[(Long, Long, Boolean)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    // the stream's verdicts must equal the INLINE q114 on the same corpus
-    // — certifies the whole stored-state round trip, not just the kernel
-    val batch = graft.CacheScope.run {
-      graft.operators.Similarity.queries("q114_cluster_prune")(spark, dir)
-        .select("doc_id", "cluster", "pruned")
-        .as[(Long, Long, Boolean)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    }
-    assert(streamed == batch, "streamed prune verdicts drifted from inline q114")
-  }
-
-  test("streaming ccnet gate buckets against the stored LM, batch-parity") {
-    val tmp = java.nio.file.Files.createTempDirectory("ccnetstream").toString
-    val dir = "/root/testdata/sf0.001"
-    // nightly half: freeze the target LM + tercile boundaries
-    graft.operators.CorpusOps.writeCcnetIndex(spark, dir, s"$tmp/idx")
-
-    // stream the raw slice through the gate
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source") =!= "src0")
-    raw.write.mode("append").parquet(s"$tmp/in")
-    StreamingCcnetGate.runAgainstIndex(spark, s"$tmp/in", raw.schema,
-      s"$tmp/idx", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-
-    val streamed = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$tmp/out")
-      .select("doc_id", "avg_nll", "bucket")
-      .as[(Long, Double, String)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    // the stream's verdicts must equal the batch q109 serving on the
-    // same corpus (one kernel definition — structural parity)
-    val batch = graft.CacheScope.run {
-      graft.operators.CorpusOps.queries("q109_ccnet_index")(spark, dir)
-        .select("doc_id", "avg_nll", "bucket")
-        .as[(Long, Double, String)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    }
-    assert(streamed == batch, "streamed ccnet verdicts drifted from the batch serving")
-  }
-
-  test("ccnet gate fails the running query when the LM is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("ccnetrebuild").toString
-    val dir = "/root/testdata/sf0.001"
-    graft.operators.CorpusOps.writeCcnetIndex(spark, dir, s"$tmp/idx")
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source") =!= "src0")
-    raw.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingCcnetGate.runAgainstIndex(spark, s"$tmp/in", raw.schema,
-      s"$tmp/idx", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.CorpusOps.writeCcnetIndex(spark, dir, s"$tmp/idx")
-      raw.limit(5).write.mode("append").parquet(s"$tmp/in")
-    }
-  }
-
-  test("dedup serving fails the running query when the band index is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("dedupr").toString
-    val corpus = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta eta theta", "en", "web", 46L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    graft.operators.Dedup.writeBandIndex(corpus, s"$tmp/index")
-    val delta = Seq((1L, "fresh new content here", "en", "web", 22L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    delta.write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingDedup.runAgainstIndex(spark, s"$tmp/in", delta.schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.Dedup.writeBandIndex(corpus, s"$tmp/index")
-      delta.write.mode("append").parquet(s"$tmp/in")
-    }
-  }
-
-  test("ANN serving fails the running query when the LSH index is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("annr").toString
-    val corpus = Seq(
-      (0L, vf(1.0, 0.1, 0.0, 0.0)), (1L, vf(0.0, 1.0, 0.0, 0.1)),
-      (2L, vf(0.9, 0.12, 0.0, 0.0))).toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeAnnIndex(corpus, s"$tmp/index")
-    val probes = Seq((100L, vf(0.95, 0.11, 0.0, 0.0))).toDF("vec_id", "embedding")
-    probes.write.mode("append").parquet(s"$tmp/in")
-    val q = serveStream("ann", s"$tmp/in", probes.schema, s"$tmp/index", s"$tmp/out",
-      s"$tmp/ckpt", Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.Similarity.writeAnnIndex(corpus, s"$tmp/index")
-      probes.write.mode("append").parquet(s"$tmp/in")
     }
   }
 
@@ -813,45 +683,6 @@ class StreamingSpec extends SparkSpec {
       s"multi-segment ledger reach: $v3")
   }
 
-  test("streaming hot-block gate scrubs against the stored list, batch-parity") {
-    val tmp = java.nio.file.Files.createTempDirectory("hotstream").toString
-    val dir = "/root/testdata/sf0.001"
-    val docs = Tables.load(spark, dir, "documents")
-    graft.operators.CorpusOps.writeHotBlockIndex(docs, s"$tmp/index")
-    docs.write.mode("append").parquet(s"$tmp/in")
-    StreamingHotBlockGate.runAgainstIndex(spark, s"$tmp/in",
-      spark.read.parquet(s"$tmp/in").schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-      .collect().map(_.toSeq).toSet
-    // stream verdicts EQUAL inline q127 on the same corpus — the stored
-    // list was built from it, so drop-all membership is identical
-    val want = graft.CacheScope.run {
-      graft.operators.CorpusOps.q127HotBlockScrub(spark, dir)
-        .collect().map(_.toSeq).toSet
-    }
-    assert(out == want, "stream and batch hot-block verdicts diverged")
-  }
-
-  test("streaming outlier gate censuses against stored boundaries, batch-parity") {
-    val tmp = java.nio.file.Files.createTempDirectory("madstream").toString
-    val dir = "/root/testdata/sf0.001"
-    val ev = Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("value"))
-    graft.operators.TimeSeries.writeOutlierIndex(ev, s"$tmp/index")
-    ev.write.mode("append").parquet(s"$tmp/in")
-    StreamingOutlierGate.runAgainstIndex(spark, s"$tmp/in",
-      spark.read.parquet(s"$tmp/in").schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-      .collect().map(_.toSeq).toSet
-    val want = graft.CacheScope.run {
-      graft.operators.TimeSeries.q136RobustOutliers(spark, dir)
-        .collect().map(_.toSeq).toSet
-    }
-    assert(out == want, "stream and batch censuses diverged")
-  }
-
   test("streaming CUSUM gate alarms match the batch closed form across batches") {
     val tmp = java.nio.file.Files.createTempDirectory("cusumstream").toString
     val dir = "/root/testdata/sf0.001"
@@ -897,66 +728,118 @@ class StreamingSpec extends SparkSpec {
       s"cusum state must be one row per incremented user: $stateRows vs $usersWithIncrements")
   }
 
-  test("streaming phase gate censuses residuals against the stored template") {
-    val tmp = java.nio.file.Files.createTempDirectory("phasestream").toString
-    val dir = "/root/testdata/sf0.001"
-    val ev = Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-    graft.CacheScope.run {
-      graft.operators.TimeSeries.writePhaseIndex(ev, s"$tmp/index")
+  test("streaming bloom gate matches the batch kernel against a stored index") {
+    val (tmp, out1) = checkServe("bloom")
+    assert(out1.filter(col("doc_id") === 1L && col("contaminated")).count() == 1,
+      "doc sharing a blocklist 5-gram must flag")
+    assert(out1.filter(col("doc_id") === 2L && !col("contaminated")).count() == 1)
+
+    // batch 2 resumes from the checkpoint: only the new file processes
+    docs((3L, "fox jumps over the lazy dog and keeps running on", "en", "web", 48L))
+      .write.mode("append").parquet(s"$tmp/in")
+    val out2 = drain("bloom", tmp)
+    assert(out2.count() == 3, "restart must process only the new arrivals")
+    assert(out2.filter(col("doc_id") === 3L && col("contaminated")).count() == 1)
+  }
+
+  test("streaming cluster-prune gate verdicts docs against the stored index, batch-parity") {
+    val (_, out) = checkServe("cluster-prune")
+    def verdicts(df: DataFrame) = df.select("doc_id", "cluster", "pruned")
+      .as[(Long, Long, Boolean)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
+    // the stream's verdicts must also equal the INLINE q114 on the same
+    // corpus — certifies the whole stored-state round trip, not just the kernel
+    val batch = graft.CacheScope.run {
+      verdicts(graft.operators.Similarity.queries("q114_cluster_prune")(spark, sf))
     }
-    ev.write.mode("append").parquet(s"$tmp/in")
-    StreamingPhaseGate.runAgainstIndex(spark, s"$tmp/in",
-      spark.read.parquet(s"$tmp/in").schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-      .collect().map(_.toSeq).toSet
+    assert(verdicts(out) == batch, "streamed prune verdicts drifted from inline q114")
+  }
+
+  test("streaming ccnet gate buckets against the stored LM, batch-parity") {
+    val (_, out) = checkServe("ccnet")
+    def buckets(df: DataFrame) = df.select("doc_id", "avg_nll", "bucket")
+      .as[(Long, Double, String)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
+    // ... and the driver's q109 serve of the same corpus
+    val batch = graft.CacheScope.run {
+      buckets(graft.operators.CorpusOps.queries("q109_ccnet_index")(spark, sf))
+    }
+    assert(buckets(out) == batch, "streamed ccnet verdicts drifted from the batch serving")
+  }
+
+  test("streaming DSIR gate selects arriving docs against the stored model, batch-parity") {
+    val (_, out) = checkServe("dsir")
+    assert(out.filter(col("selected")).count() > 0, "the fixture must select docs")
+    // ... and the driver's q113 serve of the same corpus
+    val batch = graft.CacheScope.run {
+      rows(graft.operators.CorpusOps.queries("q113_dsir_index")(spark, sf))
+    }
+    assert(rows(out) == batch, "streamed DSIR verdicts drifted from the batch serving")
+  }
+
+  test("streaming hot-block gate scrubs against the stored list, batch-parity") {
+    val (_, out) = checkServe("hot-block")
+    // ... and inline q127 on the same corpus — the stored list was built
+    // from it, so drop-all membership is identical
     val want = graft.CacheScope.run {
-      graft.operators.TimeSeries.q141PhaseResiduals(spark, dir)
-        .collect().map(_.toSeq).toSet
+      rows(graft.operators.CorpusOps.q127HotBlockScrub(spark, sf))
     }
-    assert(out == want, "stream and batch phase censuses diverged")
+    assert(rows(out) == want, "stream and batch hot-block verdicts diverged")
+  }
+
+  test("streaming outlier gate censuses against stored boundaries, batch-parity") {
+    val (_, out) = checkServe("outlier")
+    val want = graft.CacheScope.run {
+      rows(graft.operators.TimeSeries.q136RobustOutliers(spark, sf))
+    }
+    assert(rows(out) == want, "stream and batch censuses diverged")
+  }
+
+  test("streaming phase gate censuses residuals against the stored template") {
+    val (_, out) = checkServe("phase")
+    val want = graft.CacheScope.run {
+      rows(graft.operators.TimeSeries.q141PhaseResiduals(spark, sf))
+    }
+    assert(rows(out) == want, "stream and batch phase censuses diverged")
   }
 
   test("streaming BM25 gate scores arriving docs against the frozen index, batch-parity") {
-    val tmp = java.nio.file.Files.createTempDirectory("bm25stream").toString
-    val dir = "/root/testdata/sf0.001"
-    val docs = Tables.load(spark, dir, "documents")
-    graft.operators.Bm25.writeBm25Index(docs, s"$tmp/index")
-    docs.select(col("doc_id"), col("text")).write.mode("append").parquet(s"$tmp/in")
-    StreamingBm25Gate.runAgainstIndex(spark, s"$tmp/in",
-      spark.read.parquet(s"$tmp/in").schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/out")
-      .collect().map(_.toSeq).toSet
-    // the stream tokenizes arriving docs; the expectation scores the SAME
+    val (tmp, out) = checkServe("bm25")
+    // the stream tokenizes arriving docs; this expectation scores the SAME
     // corpus from the STORED postings — equality certifies both the
     // kernel share and the postings round-trip
     val (post, dfT, n, sumDl) =
       graft.operators.Bm25.loadBm25Index(spark, s"$tmp/index")
     val terms = graft.operators.Bm25.queryTerms(dfT)
     val want = graft.CacheScope.run {
-      graft.operators.Bm25.scoreMatched(
+      rows(graft.operators.Bm25.scoreMatched(
           post.join(broadcast(terms), Seq("token")), n, sumDl)
         .select(col("doc_id"), round(col("su") / lit(1e6), 6).as("score"),
-          col("n_terms"))
-        .collect().map(_.toSeq).toSet
+          col("n_terms")))
     }
-    assert(out == want, "stream and batch BM25 scores diverged")
+    assert(rows(out) == want, "stream and batch BM25 scores diverged")
   }
 
-  test("hot-block gate fails the running query when the list is rebuilt") {
-    val tmp = java.nio.file.Files.createTempDirectory("hotrebuild").toString
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    graft.operators.CorpusOps.writeHotBlockIndex(docs, s"$tmp/index")
-    docs.limit(5).write.mode("append").parquet(s"$tmp/in")
-    val q = StreamingHotBlockGate.runAgainstIndex(spark, s"$tmp/in",
-      spark.read.parquet(s"$tmp/in").schema,
-      s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
+  test("CUSUM gate fails the running query when the boundaries are rebuilt") {
+    val tmp = java.nio.file.Files.createTempDirectory("cusumrebuild").toString
+    val bounds = sfEvents.select(col("user_id"), col("value"))
+    graft.operators.TimeSeries.writeOutlierIndex(bounds, s"$tmp/index")
+    sfEvents.write.mode("append").parquet(s"$tmp/in")
+    val q = StreamingCusum.runAgainstIndex(spark, s"$tmp/in",
+      spark.read.parquet(s"$tmp/in").schema, s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
       trigger = Trigger.ProcessingTime("50 milliseconds"))
     assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
-      graft.operators.CorpusOps.writeHotBlockIndex(docs, s"$tmp/index")
-      docs.limit(5).write.mode("append").parquet(s"$tmp/in")
+      graft.operators.TimeSeries.writeOutlierIndex(bounds, s"$tmp/index")
+      sfEvents.limit(5).write.mode("append").parquet(s"$tmp/in")
     }
   }
+}
+
+object StreamingSpec {
+  /** One stateless index family on [[IndexServingStream.run]]: `build`
+    * materializes its index at a path, `input` is an arriving batch, and
+    * `resolve` is the load + batch-kernel binding a serving stream hands
+    * the scaffold — applied to a frame directly, it is the batch serve
+    * the stream must match.
+    */
+  private final case class Served(build: String => Unit, input: () => DataFrame,
+                                  resolve: String => DataFrame => DataFrame)
 }
