@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * append-mode status sink.
   *
   * Spark restatement of the reference's sequential per-query loop: the
-  * queries are unioned into a single source scan, every fetched star is
-  * scored in ONE cached pass, and both sinks are written from that cache.
+  * connector fetches the whole query batch
+  * ([[graft.sources.StarsConnector.fetch]]), every fetched star is scored
+  * in ONE cached pass, and both sinks are written from that cache.
   * A `.dat` batch with fresh sinks runs three jobs, none of which
   * shuffles: one fills the cache and reads back which queries fetched a
   * star, then one append per sink. The reference's Redis work queue
@@ -50,40 +51,14 @@ class StarsSearcher(
     */
   def queryStars(spark: SparkSession, queries: DataFrame): DataFrame = {
     import spark.implicits._
-    val todoDf = unsearchedQueries(spark, queries)
-      .select(col("query_id"), col("params"))
-    val connector = StarsProvider.getProvider(connectorName)
-    val (stars, asked) = connector match {
-      // scale path: one source scan joined against the broadcast query
-      // table — no driver loop, no N-way union plan
-      case ac: graft.sources.ArchiveConnector
-          if ac.supportsJoinedFetch(todoDf
-            .select(explode(map_keys(col("params")))).distinct().as[String]
-            .collect().toSet) =>
-        val ids = todoDf.select("query_id").as[String].collect().toSeq
-        if (ids.isEmpty) return spark.emptyDataFrame
-        (ac.getStarsJoined(spark, todoDf), ids)
-      case _ =>
-        // path-driven connectors: the query table is config-sized, so
-        // collecting it is bounded driver state — the scan is what matters
-        val todo = todoDf.as[(String, Map[String, String])].collect().toSeq
-        if (todo.isEmpty) return spark.emptyDataFrame
-        val fetched = connector match {
-          // .dat directories with explicit star lists: ONE DataSource V2
-          // scan with starId IN pushdown (planning-time file pruning),
-          // fanned out to the selecting queries — no N-way union plan
-          case fm: graft.sources.FileManagerConnector
-              if graft.sources.FileManagerConnector.datRoutable(todo) =>
-            fm.getStarsDatJoined(spark, todo)
-          case _ =>
-            todo.map { case (qid, params) =>
-              connector.getStars(spark, Seq(QuerySpec(params)))
-                .toDF()
-                .withColumn("query_id", lit(qid))
-            }.reduce(_ unionByName _)
-        }
-        (fetched, todo.map(_._1))
-    }
+    // the query table is config-sized, so collecting it is bounded driver
+    // state — the connector's scan is what matters
+    val todo = unsearchedQueries(spark, queries).select(col("query_id"), col("params"))
+      .as[(String, Map[String, String])].collect().toSeq
+    if (todo.isEmpty) return spark.emptyDataFrame
+    val stars = StarsProvider.getProvider(connectorName)
+      .fetch(spark, todo.map { case (qid, params) => qid -> QuerySpec(params) })
+    val asked = todo.map(_._1)
 
     val probCols = model.models.map(m => s"prob_${m.name}")
     val passedCols = model.models.map(m => s"passed_${m.name}")

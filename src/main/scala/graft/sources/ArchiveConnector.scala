@@ -107,9 +107,12 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
     cone.getOrElse(Nil) ++ ranges ++ types ++ eq
   }
 
-  override def getStars(spark: SparkSession, queries: Seq[QuerySpec]): Dataset[Star] = {
+  /** One query's stars; an OGLE-style cone query without a target reads
+    * once per target [[rewrite]] fans it out to.
+    */
+  override protected def read(spark: SparkSession, q0: QuerySpec): Dataset[Star] = {
     import spark.implicits._
-    val dfs = queries.flatMap(rewrite).map { q =>
+    rewrite(q0).map { q =>
       var df = spark.read.parquet(config.path(q.get("base_dir").getOrElse("")))
       // predicate pushdown: the same conditions the ADQL would carry
       conditions(q).foreach {
@@ -118,17 +121,7 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
         case QueryCompiler.Theta(c, e)        => df = df.filter(expr(s"$c $e"))
         case QueryCompiler.In(c, vs)          => df = df.filter(col(c).isin(vs: _*))
       }
-      // projection pushdown: IDENT ∪ MORE ∪ RA/DEC ∪ LC columns only;
-      // optional config columns absent from this archive table are skipped,
-      // like the reference's header-driven `_parseHeader` (`ogleIII.py:317-323`)
-      val present = df.schema.fieldNames.toSet
-      val needed = (config.identMap.values ++ config.moreMap.keys ++
-        Seq(config.raCol, config.decCol) ++ config.nameCol ++
-        config.starClassCol ++ config.identIdCols.values ++
-        config.lcBands.flatMap(b => Seq(b._1, b._2, b._3)))
-        .toSeq.distinct.filter(present)
-      df = df.select(needed.map(col): _*)
-      val stars = toStars(df, effectiveConfig(q))
+      val stars = toStars(project(df), effectiveConfig(q))
       // exact cone refine + nearest on the materialized stars
       (q.double("ra"), q.double("dec"), q.double("delta")) match {
         case (Some(ra), Some(dec), Some(delta)) =>
@@ -136,10 +129,21 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
             nearest = q.get("nearest").contains("true")).drop("dist_deg").as[Star]
         case _ => stars
       }
-    }
-    // an empty query list (e.g. a header-only query file) is a valid
-    // no-op fetch, not an `empty.reduce` crash
-    if (dfs.isEmpty) spark.emptyDataset[Star] else dfs.reduce(_ unionByName _)
+    }.reduce(_ unionByName _)
+  }
+
+  /** Projection pushdown: IDENT ∪ MORE ∪ RA/DEC ∪ name/class/identId ∪ LC
+    * columns, plus `extra`. Optional config columns absent from this
+    * archive table are skipped, like the reference's header-driven
+    * `_parseHeader` (`ogleIII.py:317-323`).
+    */
+  private def project(df: DataFrame, extra: Iterable[String] = Nil): DataFrame = {
+    val present = df.schema.fieldNames.toSet
+    df.select((config.identMap.values ++ config.moreMap.keys ++
+      Seq(config.raCol, config.decCol) ++ config.nameCol ++
+      config.starClassCol ++ config.identIdCols.values ++ extra ++
+      config.lcBands.flatMap(b => Seq(b._1, b._2, b._3)))
+      .toSeq.distinct.filter(present).map(col): _*)
   }
 
   private def toStars(df: DataFrame, cfg: ArchiveConfig = config): Dataset[Star] = {
@@ -148,11 +152,10 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
     df.map(row => ArchiveConnector.buildStar(cfg, row))
   }
 
-  /** Distributed query-table fetch: ONE archive scan joined against a
-    * broadcast query table instead of a per-query driver loop — the
-    * searcher's scale path (survey §3.1). Supported query keys: cone
-    * (ra/dec/delta/nearest) and plain equality params; callers check
-    * [[supportsJoinedFetch]] and fall back to [[getStars]] otherwise.
+  /** A batch whose keys [[supportsJoinedFetch]] accepts is ONE archive scan
+    * joined against the broadcast query table instead of a per-query
+    * union — the searcher's scale path (survey §3.1); any other batch
+    * keeps the per-query union.
     *
     * Shape at 100 TB: the query table is tiny (broadcast), the archive scan
     * happens once, each source row is tested against all queries in the
@@ -160,7 +163,16 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
     * whose analysis cost alone is quadratic-ish in N). The exact cone
     * refine and per-query `nearest` run post-join as window ops.
     */
-  def supportsJoinedFetch(keys: Set[String]): Boolean = {
+  override def fetch(spark: SparkSession, todo: Seq[(String, QuerySpec)]): DataFrame = {
+    val keys = todo.flatMap(_._2.params.keysIterator).toSet
+    if (todo.nonEmpty && supportsJoinedFetch(keys)) joinedFetch(spark, todo, keys)
+    else super.fetch(spark, todo)
+  }
+
+  /** Query keys the joined fetch expresses: cone (ra/dec/delta/nearest)
+    * and plain equality params.
+    */
+  private[sources] def supportsJoinedFetch(keys: Set[String]): Boolean = {
     // `base_dir` rebinds the archive path per query (`config.path`), which a
     // single joined scan cannot express — those batches keep the loop path
     if (keys.contains("base_dir")) return false
@@ -177,27 +189,14 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
         !config.rangeKeys.keysIterator.exists(rk => k == s"${rk}_min" || k == s"${rk}_max"))
   }
 
-  /** queries: DataFrame(query_id: String, params: Map[String,String]) →
-    * star columns + query_id.
-    */
-  def getStarsJoined(spark: SparkSession, queries: DataFrame): DataFrame = {
+  private def joinedFetch(spark: SparkSession, todo: Seq[(String, QuerySpec)],
+                          keys: Set[String]): DataFrame = {
     import spark.implicits._
     val cfg = config
-    val keys = queries.select(explode(map_keys(col("params")))).distinct()
-      .as[String].collect().toSet // tiny metadata aggregate
-    require(supportsJoinedFetch(keys),
-      s"query keys $keys not expressible as a joined fetch for ${cfg.name}")
-
-    var src = spark.read.parquet(cfg.path(""))
-    val present = src.schema.fieldNames.toSet
-    val needed = (cfg.identMap.values ++ cfg.moreMap.keys ++
-      Seq(cfg.raCol, cfg.decCol) ++ cfg.nameCol ++
-      cfg.starClassCol ++ cfg.identIdCols.values ++
-      (keys -- Set("ra", "dec", "delta", "nearest", "base_dir"))
-        .map(k => cfg.queryAliases.getOrElse(k, k)) ++
-      cfg.lcBands.flatMap(b => Seq(b._1, b._2, b._3)))
-      .toSeq.distinct.filter(present)
-    src = src.select(needed.map(col): _*)
+    val queries = todo.map { case (id, q) => (id, q.params) }.toDF("query_id", "params")
+    val eqKeys = keys -- Set("ra", "dec", "delta", "nearest")
+    val src = project(spark.read.parquet(cfg.path("")),
+      eqKeys.map(k => cfg.queryAliases.getOrElse(k, k)))
 
     def p(k: String): Column = col("params").getItem(k)
     val d = p("delta").cast("double") / 3600.0
@@ -206,7 +205,7 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
         col(cfg.raCol).between(p("ra").cast("double") / cfg.raScale - d,
           p("ra").cast("double") / cfg.raScale + d) &&
           col(cfg.decCol).between(p("dec").cast("double") - d, p("dec").cast("double") + d))
-    val eqCond: Column = (keys -- Set("ra", "dec", "delta", "nearest"))
+    val eqCond: Column = eqKeys
       .map { k =>
         val c = cfg.queryAliases.getOrElse(k, k)
         // cast the PARAM to the column's type — the same coercion
@@ -225,13 +224,8 @@ class ArchiveConnector(config: ArchiveConfig) extends StarsConnector {
 
     // exact cone refine + per-query nearest (`base_query.py:38-83`)
     val ra = p("ra").cast("double")
-    val dec = p("dec").cast("double")
-    val dist = degrees(lit(2.0) * asin(sqrt(
-      pow(sin(radians(col("coo.dec") - dec) / 2), 2) +
-        cos(radians(col("coo.dec"))) * cos(radians(dec)) *
-        pow(sin(radians(col("coo.ra") - ra) / 2), 2))))
     val withDist = stars.withColumn("_dist",
-      when(ra.isNull, lit(null)).otherwise(dist))
+      when(ra.isNull, lit(null)).otherwise(ConeSearch.distance(ra, p("dec").cast("double"))))
     val refined = withDist.filter(col("_dist").isNull ||
       col("_dist") < p("delta").cast("double") / 3600.0)
     val w = org.apache.spark.sql.expressions.Window

@@ -20,30 +20,27 @@ import org.apache.spark.sql.functions._
   */
 class CatalinaConnector extends StarsConnector {
 
-  override def getStars(spark: SparkSession, queries: Seq[QuerySpec]): Dataset[Star] = {
+  override protected def read(spark: SparkSession, q: QuerySpec): Dataset[Star] = {
     import spark.implicits._
-    val dfs = queries.map { q =>
-      val path = q.get("path").getOrElse(
-        throw new IllegalArgumentException("Catalina offline connector needs 'path'"))
-      val stars = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.html")
-        .load(path)
-        .select("content")
-        .as[Array[Byte]]
-        .flatMap(bytes => CatalinaConnector.parseRawStar(
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
-      val byId = q.get("id") match {
-        case Some(id) => stars.filter(s => s.identNames.get("CRST").contains(id))
-        case None     => stars
-      }
-      (q.double("ra"), q.double("dec"), q.double("delta")) match {
-        case (Some(ra), Some(dec), Some(delta)) =>
-          ConeSearch(byId.toDF(), ra, dec, delta / 3600.0,
-            nearest = q.get("nearest").contains("true")).drop("dist_deg").as[Star]
-        case _ => byId
-      }
+    val path = q.get("path").getOrElse(
+      throw new IllegalArgumentException("Catalina offline connector needs 'path'"))
+    val stars = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.html")
+      .load(path)
+      .select("content")
+      .as[Array[Byte]]
+      .flatMap(bytes => CatalinaConnector.parseRawStar(
+        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
+    val byId = q.get("id") match {
+      case Some(id) => stars.filter(s => s.identNames.get("CRST").contains(id))
+      case None     => stars
     }
-    if (dfs.isEmpty) spark.emptyDataset[Star] else dfs.reduce(_ unionByName _)
+    (q.double("ra"), q.double("dec"), q.double("delta")) match {
+      case (Some(ra), Some(dec), Some(delta)) =>
+        ConeSearch(byId.toDF(), ra, dec, delta / 3600.0,
+          nearest = q.get("nearest").contains("true")).drop("dist_deg").as[Star]
+      case _ => byId
+    }
   }
 }
 

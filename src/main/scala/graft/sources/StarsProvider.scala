@@ -4,7 +4,7 @@ import graft.functions.Kernels
 import graft.model.{Coordinates, LightCurveData, Star}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Query spec (SURVEY §1.1): the reference's query dict
@@ -22,13 +22,40 @@ final case class QuerySpec(params: Map[String, String]) {
 }
 
 /** Connector contract (`db_tier/base_query.py:13-36`): queries → star
-  * DataFrame. Offline connectors read local fixtures; the remote-archive
-  * pushdown seam (DataSource V2 `SupportsPushDownFilters` emitting ADQL,
-  * SURVEY §2.1 TapClient) is the designed extension point, not implemented
-  * in the zero-egress build.
+  * rows. A connector implements one query's [[read]]; the trait owns the
+  * one per-query union behind [[getStars]] and [[fetch]]. A connector that
+  * serves a whole batch with fewer scans overrides [[fetch]] and hands the
+  * queries it cannot batch back to `super.fetch`. Offline connectors read
+  * local fixtures; predicate pushdown is real where the layout allows it
+  * ([[graft.sources.v2.DatDataSource]] prunes `.dat` files by star id,
+  * [[ArchiveConnector]] pushes its predicates into the parquet scan).
   */
 trait StarsConnector extends Serializable {
-  def getStars(spark: SparkSession, queries: Seq[QuerySpec]): Dataset[Star]
+
+  /** One query's stars. */
+  protected def read(spark: SparkSession, q: QuerySpec): Dataset[Star]
+
+  def getStars(spark: SparkSession, queries: Seq[QuerySpec]): Dataset[Star] = {
+    import spark.implicits._
+    union(spark, queries.map("" -> _)).drop("query_id").as[Star]
+  }
+
+  /** The searcher's fetch: each `(query_id, query)`'s stars, as star
+    * columns plus `query_id`. A star selected by several queries appears
+    * once per query.
+    */
+  def fetch(spark: SparkSession, todo: Seq[(String, QuerySpec)]): DataFrame =
+    union(spark, todo)
+
+  /** Each query's [[read]], tagged with its id; an empty batch is an empty
+    * fetch, not an `empty.reduce` crash.
+    */
+  private def union(spark: SparkSession, todo: Seq[(String, QuerySpec)]): DataFrame = {
+    import spark.implicits._
+    todo.map { case (id, q) => read(spark, q).toDF().withColumn("query_id", lit(id)) }
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.emptyDataset[Star].toDF().withColumn("query_id", lit(null).cast("string")))
+  }
 }
 
 /** Registry (`db_tier/stars_provider.py:17-44` PackageReader replacement —
@@ -53,9 +80,10 @@ object StarsProvider {
   * parquet dataset of the star schema. Query keys: `path`, `suffix`
   * (dat|fits|parquet), `files_limit`, `star_class`, `db_ident`.
   *
-  * Scale: no driver loop over files. `.dat` reads through the
-  * [[graft.sources.v2.DatDataSource]] scan (name-pruned listing, whole
-  * files packed into splits); FITS arrives via the `binaryFile` source.
+  * Scale: no driver loop over files. Every `.dat` read is [[scanDat]]:
+  * one [[graft.sources.v2.DatDataSource]] scan per directory for a whole
+  * query batch (name-pruned listing, whole files packed into splits);
+  * FITS arrives via the `binaryFile` source.
   */
 class FileManagerConnector extends StarsConnector {
 
@@ -80,55 +108,63 @@ class FileManagerConnector extends StarsConnector {
       }
     } else (starClass, None)
 
-  override def getStars(spark: SparkSession, queries: Seq[QuerySpec]): Dataset[Star] = {
-    import spark.implicits._
-    val dfs = queries.map { q0 =>
-      val sel = selection(q0)
-      // star_class cleaned of its ":N" / "%f" sample mark
-      val q = sel.starClass.fold(q0)(c => QuerySpec(q0.params + ("star_class" -> c)))
-      val path = q.get("path").getOrElse(
-        throw new IllegalArgumentException("FileManager needs 'path'"))
-      val suffix = q.get("suffix").getOrElse("dat")
-      // .dat stars ARE files (starId = file stem), so "files_limit" / ":N" /
-      // "%f" prune the driver-side LISTING — the same planning-time seam the
-      // DSv2 source uses — instead of a global sort+limit job, and "%f"
-      // needs no separate count() pass. FITS star ids come from headers
-      // (stem != starId in general) so fits/parquet keep the generic path.
-      val listPruned = sel.sampled && suffix == "dat"
-      val effWanted: Option[Set[String]] =
-        if (listPruned) Some(sel.pick(DatFile.starIds(spark, path)).toSet)
-        else sel.wanted
-      val ds1 = suffix match {
-        case "dat"     => readDat(spark, path, q, effWanted)
-        case "fits"    => readFits(spark, path, q, effWanted)
-        case "parquet" =>
-          val base = spark.read.parquet(path).as[Star]
-          effWanted match { // parquet rows have no file identity; match starId
-            case Some(names) => base.filter(col("starId").isin(names.toSeq: _*)).as[Star]
-            case None        => base
-          }
-        case other => throw new IllegalArgumentException(s"Unknown suffix $other")
-      }
-      // `load_lc=false` fetches star metadata without curves
-      // (`base_query.py:13-36` getStars(load_lc)); curve-bearing sources
-      // honor it by stripping the parsed curves
-      val ds = if (q.get("load_lc").contains("false"))
-        ds1.map(_.copy(lightCurves = Nil)) else ds1
-      val limited =
-        if (listPruned) ds // sample already consumed by the listing
-        else sel.limit match {
-          case Some(n) => ds.orderBy("starId").limit(n) // deterministic "first N"
-          case None => sel.frac match {
-            // fraction keeps exactly floor(n·f) stars (`_split_stars`,
-            // `stars_handling.py:124-133`), deterministically by starId
-            case Some(f) => ds.orderBy("starId").limit((ds.count() * f).toInt)
-            case None    => ds
-          }
-        }
-      limited
-    }
-    if (dfs.isEmpty) spark.emptyDataset[Star] else dfs.reduce(_ unionByName _)
+  /** `.dat` queries are served by one [[scanDat]] per directory; FITS and
+    * parquet queries keep the per-query union.
+    */
+  override def fetch(spark: SparkSession, todo: Seq[(String, QuerySpec)]): DataFrame = {
+    val (dat, rest) = todo.partition { case (_, q) => suffix(q) == "dat" }
+    val scans = dat.map(t => path(t._2)).distinct
+      .map(dir => scanDat(spark, dir, dat.filter(t => path(t._2) == dir)))
+    (scans ++ Option.when(rest.nonEmpty || dat.isEmpty)(super.fetch(spark, rest)))
+      .reduce(_ unionByName _)
   }
+
+  override protected def read(spark: SparkSession, q: QuerySpec): Dataset[Star] = {
+    import spark.implicits._
+    suffix(q) match {
+      case "dat" => scanDat(spark, path(q), Seq("" -> q)).drop("query_id").as[Star]
+      case sfx   => readFile(spark, q, sfx)
+    }
+  }
+
+  /** A FITS or parquet query, sampled by a global sort + limit (FITS star
+    * ids come from headers, so they are not known before the read).
+    */
+  private def readFile(spark: SparkSession, q0: QuerySpec, sfx: String): Dataset[Star] = {
+    import spark.implicits._
+    val sel = selection(q0)
+    // star_class cleaned of its ":N" / "%f" sample mark
+    val q = sel.starClass.fold(q0)(c => QuerySpec(q0.params + ("star_class" -> c)))
+    val ds1 = sfx match {
+      case "fits"    => readFits(spark, path(q), q, sel.wanted)
+      case "parquet" =>
+        val base = spark.read.parquet(path(q)).as[Star]
+        sel.wanted match { // parquet rows have no file identity; match starId
+          case Some(names) => base.filter(col("starId").isin(names.toSeq: _*)).as[Star]
+          case None        => base
+        }
+      case other => throw new IllegalArgumentException(s"Unknown suffix $other")
+    }
+    // `load_lc=false` fetches star metadata without curves
+    // (`base_query.py:13-36` getStars(load_lc)); curve-bearing sources
+    // honor it by stripping the parsed curves
+    val ds = if (q.get("load_lc").contains("false"))
+      ds1.map(_.copy(lightCurves = Nil)) else ds1
+    sel.limit match {
+      case Some(n) => ds.orderBy("starId").limit(n) // deterministic "first N"
+      case None => sel.frac match {
+        // fraction keeps exactly floor(n·f) stars (`_split_stars`,
+        // `stars_handling.py:124-133`), deterministically by starId
+        case Some(f) => ds.orderBy("starId").limit((ds.count() * f).toInt)
+        case None    => ds
+      }
+    }
+  }
+
+  private def path(q: QuerySpec): String = q.get("path").getOrElse(
+    throw new IllegalArgumentException("FileManager needs 'path'"))
+
+  private def suffix(q: QuerySpec): String = q.get("suffix").getOrElse("dat")
 
   /** A query's star selection: the `star_class` cleaned of its sample
     * mark, the explicit file selection (`files_to_load` is a ;-separated
@@ -153,35 +189,44 @@ class FileManagerConnector extends StarsConnector {
   private def strip(name: String): String =
     name.stripSuffix(".dat").stripSuffix(".fits").stripSuffix(".parquet")
 
-  /** Systematic-search fetch over a `.dat` directory (SURVEY §2.10): each
-    * query's `files_limit` / `:N` / `%f` selection runs on the driver
-    * against ONE listing of the directory, in starId order — the rule
-    * `getStars` applies per query, so results are identical. The selected
-    * stars are then read by ONE DataSource V2 scan, their names pushed down
-    * as `starId IN (...)` so [[graft.sources.v2.DatDataSource]] plans only
-    * those FILES, and each star row fans out to the queries that selected
-    * it through a driver-built starId lookup, which also applies each
-    * query's `star_class` / `db_ident` / `load_lc`. No N-way union plan, no
-    * driver loop over queries, no join and no shuffle: the fetch is one
-    * narrow stage, and `%f` needs no counting job.
+  /** The one `.dat` read (SURVEY §2.10), for a batch of queries on one
+    * directory. Each sampled query's `files_limit` / `:N` / `%f` selection
+    * runs on the driver against ONE listing of the directory, in starId
+    * order ([[DatSelection.pick]]). ONE DataSource V2 scan reads the selected
+    * stars, their names pushed down as `starId IN (...)` so
+    * [[graft.sources.v2.DatDataSource]] plans only those FILES, and each
+    * star row fans out to the queries that selected it through a
+    * driver-built starId lookup, which also applies each query's
+    * `star_class` / `db_ident` / `load_lc`. A whole-directory query (no
+    * names, no sample) matches every row instead: the scan then plans every
+    * file, and no id travels in the pushdown or in the lookup, which ships
+    * in the closure to every task. No N-way union plan, no join and no
+    * shuffle: the fetch is one narrow stage, and `%f` needs no counting job.
+    *
+    * Each file is parsed whole by one task rather than via `textFile` +
+    * `groupBy(file)` + `collect_list`: `collect_list` after a shuffle has
+    * no ordering contract, and a splittable text file would interleave
+    * lines and silently scramble the time series every order-sensitive
+    * kernel (SAX, Abbe, variogram) depends on.
     */
-  def getStarsDatJoined(spark: SparkSession,
-                        todo: Seq[(String, Map[String, String])]): DataFrame = {
-    require(FileManagerConnector.datRoutable(todo), "not a dat-routable query batch")
-    val path = todo.head._2("path")
-    val listed = DatFile.starIds(spark, path)
-    // starId -> (query_id, star_class, db_ident, load_lc=false) per selecting query
-    val queriesOf: Map[String, Seq[(String, String, String, Boolean)]] = todo.flatMap {
-      case (qid, params) =>
-        val q = QuerySpec(params)
-        val sel = selection(q)
-        sel.pick(listed).map(id => id -> (qid, sel.starClass.orNull, q.get("db_ident").orNull,
-          q.get("load_lc").contains("false")))
-    }.groupMap(_._1)(_._2)
-    val fanOut = udf((id: String) => queriesOf.getOrElse(id, Nil))
+  private def scanDat(spark: SparkSession, dir: String,
+                      todo: Seq[(String, QuerySpec)]): DataFrame = {
+    lazy val listed = DatFile.starIds(spark, dir)
+    // (query_id, star_class, db_ident, load_lc=false) per query, with the
+    // ids it selects (None: every star); only a sample needs the listing
+    val tagged = todo.map { case (qid, q) =>
+      val sel = selection(q)
+      val tag = (qid, sel.starClass.orNull, q.get("db_ident").orNull,
+        q.get("load_lc").contains("false"))
+      (if (sel.sampled) Some(sel.pick(listed)) else sel.wanted, tag)
+    }
+    val everyStar = tagged.collect { case (None, tag) => tag }
+    val queriesOf = tagged.flatMap { case (ids, tag) => ids.toSeq.flatten.map(_ -> tag) }
+      .groupMap(_._1)(_._2)
+    val fanOut = udf((id: String) => queriesOf.getOrElse(id, Nil) ++ everyStar)
+    val stars = spark.read.format("graft.sources.v2.DatDataSource").load(dir)
     val starCols = graft.model.Star.schema.fieldNames.map(col).toSeq
-    spark.read.format("graft.sources.v2.DatDataSource").load(path)
-      .filter(col("starId").isin(queriesOf.keys.toSeq: _*))
+    (if (everyStar.isEmpty) stars.filter(col("starId").isin(queriesOf.keys.toSeq: _*)) else stars)
       .withColumn("_q", explode(fanOut(col("starId"))))
       .withColumn("starClass", col("_q._2"))
       .withColumn("identNames",
@@ -193,35 +238,10 @@ class FileManagerConnector extends StarsConnector {
       .select(starCols :+ col("_q._1").as("query_id"): _*)
   }
 
-  /** `.dat`: whitespace-separated `time mag err` with optional comment
-    * lines; bad values scrubbed and rounded 5/3/3 by the cleaning kernel
-    * (`file_manager.py:194-233` + `light_curve.py:196-204`); star name from
-    * the file name (`parseFileName`, `file_manager.py:247-253`).
-    *
-    * Read through the [[graft.sources.v2.DatDataSource]] scan, with the
-    * wanted names pushed down as `starId IN (...)` so only those files are
-    * listed into splits and opened. Each file is parsed whole by one task
-    * rather than via `textFile` + `groupBy(file)` + `collect_list`:
-    * `collect_list` after a shuffle has no ordering contract, and a
-    * splittable text file would interleave lines and silently scramble the
-    * time series every order-sensitive kernel (SAX, Abbe, variogram)
-    * depends on. Whole-file reads make line order structural, however
-    * many files a split packs.
-    */
-  private def readDat(spark: SparkSession, path: String, q: QuerySpec,
-                      wanted: Option[Set[String]]): Dataset[Star] = {
-    import spark.implicits._
-    val stars = spark.read.format("graft.sources.v2.DatDataSource").load(path)
-    val selected = wanted match {
-      case Some(names) => stars.filter(col("starId").isin(names.toSeq: _*))
-      case None        => stars
-    }
-    selected
-      .withColumn("starClass", lit(q.get("star_class").orNull).cast("string"))
-      .withColumn("identNames", q.get("db_ident")
-        .map(d => map(lit(d), col("starId"))).getOrElse(col("identNames")))
-      .as[Star]
-  }
+  /** The [[fetch]] of a `.dat` batch given as raw params. */
+  def getStarsDatJoined(spark: SparkSession,
+                        todo: Seq[(String, Map[String, String])]): DataFrame =
+    fetch(spark, todo.map { case (qid, params) => qid -> QuerySpec(params) })
 
   /** FITS via the `binaryFile` source + the pure [[Fits]] parser. */
   private def readFits(spark: SparkSession, path: String, q: QuerySpec,
@@ -263,22 +283,6 @@ private final case class DatSelection(starClass: Option[String], wanted: Option[
       case None    => frac.fold(names)(f => names.take((names.size * f).toInt))
     }
   }
-}
-
-object FileManagerConnector {
-  /** True when every query targets the SAME `.dat` directory with an
-    * explicit star list (`object_file_name` / `files_to_load`) — the shape
-    * [[FileManagerConnector.getStarsDatJoined]] serves with one pruned
-    * DataSource V2 scan. Queries without explicit star lists are whole-dir
-    * scans and keep the per-query path.
-    */
-  def datRoutable(todo: Seq[(String, Map[String, String])]): Boolean =
-    todo.nonEmpty &&
-      todo.map(_._2.get("path")).distinct.size == 1 &&
-      todo.forall { case (_, p) =>
-        p.contains("path") && p.getOrElse("suffix", "dat") == "dat" &&
-          (p.contains("object_file_name") || p.contains("files_to_load"))
-      }
 }
 
 /** Shared `.dat` file access (`file_manager.py:194-253`): the one listing
@@ -351,15 +355,20 @@ private[sources] object DatFile {
 object ConeSearch {
   def apply(stars: DataFrame, ra: Double, dec: Double, deltaDeg: Double,
             nearest: Boolean = false): DataFrame = {
-    val d = lit(2.0) * asin(sqrt(
-      pow(sin(radians(col("coo.dec") - dec) / 2), 2) +
-        cos(radians(col("coo.dec"))) * cos(lit(math.toRadians(dec))) *
-        pow(sin(radians(col("coo.ra") - ra) / 2), 2)))
-    val withDist = stars.withColumn("dist_deg", degrees(d))
+    val withDist = stars.withColumn("dist_deg", distance(lit(ra), lit(dec)))
     val filtered = withDist.filter(col("dist_deg").isNull || col("dist_deg") < deltaDeg)
     if (nearest) filtered.orderBy(col("dist_deg").asc_nulls_last).limit(1)
     else filtered
   }
+
+  /** Exact spherical separation in degrees of each star's `coo` from
+    * (ra, dec); null for a star without coordinates.
+    */
+  def distance(ra: Column, dec: Column): Column =
+    degrees(lit(2.0) * asin(sqrt(
+      pow(sin(radians(col("coo.dec") - dec) / 2), 2) +
+        cos(radians(col("coo.dec"))) * cos(radians(dec)) *
+        pow(sin(radians(col("coo.ra") - ra) / 2), 2))))
 
   /** Cone → box rewrite (`_getRanges`, `base_query.py:85-91`): the sargable
     * prefilter pushed to the source; faithfully does NOT scale ra by

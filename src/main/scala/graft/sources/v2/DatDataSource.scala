@@ -50,13 +50,10 @@ class DatTable(pathProp: Option[String]) extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new DatScanBuilder(
       pathProp.orElse(Option(options.get("path"))).getOrElse(
-        throw new IllegalArgumentException("dat source needs a path")),
-      Option(options.get("files_limit")).flatMap(_.toIntOption),
-      Option(options.get("sample_fraction")).flatMap(_.toDoubleOption))
+        throw new IllegalArgumentException("dat source needs a path")))
 }
 
-class DatScanBuilder(path: String, filesLimit: Option[Int] = None,
-                     sampleFraction: Option[Double] = None)
+class DatScanBuilder(path: String)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var pushed: Array[Filter] = Array.empty
@@ -81,11 +78,10 @@ class DatScanBuilder(path: String, filesLimit: Option[Int] = None,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new DatScan(path, pushed, required, filesLimit, sampleFraction)
+  override def build(): Scan = new DatScan(path, pushed, required)
 }
 
-class DatScan(path: String, pushed: Array[Filter], required: StructType,
-              filesLimit: Option[Int] = None, sampleFraction: Option[Double] = None)
+class DatScan(path: String, pushed: Array[Filter], required: StructType)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -94,31 +90,24 @@ class DatScan(path: String, pushed: Array[Filter], required: StructType,
     s"DatScan(path=$path, pushedFilters=${pushed.mkString("[", ", ", "]")}, " +
       s"readSchema=${required.fieldNames.mkString(",")})"
 
-  private def keep(starId: String): Boolean =
-    pushed.forall {
-      case EqualTo("starId", v: String)  => starId == v
-      case In("starId", vs)              => vs.exists(v => v != null && v.toString == starId)
-      case StringStartsWith("starId", p) => starId.startsWith(p)
-      case _                             => true
+  /** The pushed starId predicates as one test; an `IN` list becomes a set
+    * once per scan, not a scan of the list per listed file.
+    */
+  private lazy val keep: String => Boolean = {
+    val tests: Seq[String => Boolean] = pushed.toSeq.map {
+      case EqualTo("starId", v: String)  => (id: String) => id == v
+      case In("starId", vs)              => vs.iterator.filter(_ != null).map(_.toString).toSet
+      case StringStartsWith("starId", p) => (id: String) => id.startsWith(p)
+      case _                             => (_: String) => true
     }
+    id => tests.forall(_(id))
+  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val files = DatFile.list(spark, path)
-      .filter(f => keep(DatFile.starName(f.getPath.getName)))
-    // sample pushdown: "files_limit" keeps the first N stars by id,
-    // "sample_fraction" keeps floor(n·f) — consumed HERE so a sampled read
-    // plans only the surviving files (one job, no count pass; stars are
-    // files, so star sampling IS file sampling)
-    val sampled = filesLimit match {
-      case Some(n) => files.take(n)
-      case None => sampleFraction match {
-        case Some(f) => files.take((files.length * f).toInt)
-        case None    => files
-      }
-    }
+    val files = DatFile.list(spark, path).filter(f => keep(DatFile.starName(f.getPath.getName)))
     val conf = spark.sessionState.conf
-    DatScan.pack(sampled.map(f => f.getPath.toString -> f.getLen).toSeq,
+    DatScan.pack(files.map(f => f.getPath.toString -> f.getLen).toSeq,
       conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
       conf.filesMinPartitionNum
         .orElse(spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt))

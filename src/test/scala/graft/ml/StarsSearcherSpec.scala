@@ -106,7 +106,8 @@ class StarsSearcherSpec extends SparkSpec {
     q("q1", "files_to_load" -> (11 to 20).map(i => f"s_$i%02d").mkString(";")))
 
   test("a 2 x 10 batch runs 3 jobs over a fetch with no exchange or window") {
-    val fetch = new graft.sources.FileManagerConnector().getStarsDatJoined(spark, batch)
+    val fetch = new graft.sources.FileManagerConnector()
+      .fetch(spark, batch.map { case (qid, p) => qid -> graft.sources.QuerySpec(p) })
     fetch.collect()
     val plan = fetch.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan

@@ -222,13 +222,14 @@ class ArchiveConnectorSpec extends SparkSpec {
 
   test("joined query-table fetch matches per-query semantics with no N-way union") {
     val conn = new ArchiveConnector(ArchiveConfigs.macho(machoDir))
-    val queries = Seq(
+    val todo = Seq(
       ("q1", Map("ra" -> "10.0", "dec" -> "20.0", "delta" -> "3600")),
       ("q2", Map("ra" -> "80.0", "dec" -> "-30.0", "delta" -> "3600", "nearest" -> "true")),
-      ("q3", Map("Class" -> "qso"))).toDF("query_id", "params")
+      ("q3", Map("Class" -> "qso")))
+    val queries = todo.toDF("query_id", "params")
     assert(conn.supportsJoinedFetch(Set("ra", "dec", "delta", "nearest", "Class")))
     assert(!conn.supportsJoinedFetch(Set("types")))
-    val joined = conn.getStarsJoined(spark, queries)
+    val joined = conn.fetch(spark, todo.map { case (qid, p) => qid -> QuerySpec(p) })
     val plan = joined.queryExecution.optimizedPlan.toString
     assert(!plan.contains("Union"), "joined fetch must not build an N-way union:\n" + plan)
     val got = joined.select("query_id", "starId").as[(String, String)].collect().toSet
@@ -246,7 +247,11 @@ class ArchiveConnectorSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("joinsearch").toString
     val searcher = new graft.ml.StarsSearcher(model, "MachoJoined",
       s"$tmp/matched", s"$tmp/status")
-    val status = searcher.queryStars(spark, queries)
+    var status: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsFor("archive-search") { status = searcher.queryStars(spark, queries) }
+    // the batch's keys and ids come from the collected query table, so no
+    // job reads them before the fetch (reading them with Spark jobs made 11)
+    assert(jobs <= 7, s"the archive search ran $jobs jobs")
     assert(status.select("query_id", "starId").as[(String, String)].collect().toSet == got)
   }
 
@@ -273,8 +278,7 @@ class ArchiveConnectorSpec extends SparkSpec {
     // numeric-column equality coerces like the per-query path: "0.98"
     // must match the double column (not compare "0.98" to "0.98" cast
     // through a double's string form)
-    val numQ = Seq(("qn", Map("pgood" -> "0.98"))).toDF("query_id", "params")
-    val viaJoin = ogle2.getStarsJoined(spark, numQ)
+    val viaJoin = ogle2.fetch(spark, Seq("qn" -> QuerySpec(Map("pgood" -> "0.98"))))
       .select("starId").as[String].collect().toSet
     val viaLoop = ogle2.getStars(spark, Seq(QuerySpec(Map("pgood" -> "0.98"))))
       .toDF().select("starId").as[String].collect().toSet

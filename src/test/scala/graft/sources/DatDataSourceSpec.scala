@@ -77,9 +77,8 @@ class DatDataSourceSpec extends SparkSpec {
       // duplicate names must dedup like the per-query path's Set — no
       // doubled rows through the join, no inflated %f window count
       ("qe", Map("path" -> dir, "files_to_load" -> "star_02;star_02;star_04")))
-    assert(FileManagerConnector.datRoutable(todo))
 
-    val joined = fm.getStarsDatJoined(spark, todo)
+    val joined = fm.fetch(spark, todo.map { case (qid, p) => qid -> QuerySpec(p) })
     // unwrap AQE in case the plan is adaptive
     val plan = joined.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -110,17 +109,63 @@ class DatDataSourceSpec extends SparkSpec {
     assert(byQ == Map("qa" -> 3, "qb" -> 1, "qc" -> 5, "qd" -> 1, "qe" -> 2))
   }
 
-  test("files_limit / sample_fraction options prune the planned files") {
-    val lim = spark.read.format(fmt).option("files_limit", "4").load(dir)
-    assert(scanFiles(lim) == 4)
-    assert(lim.select("starId").as[String].collect().sorted.toSeq ==
-      (1 to 4).map(i => f"star_$i%02d"))
-    val frac = spark.read.format(fmt).option("sample_fraction", "0.25").load(dir)
-    assert(scanFiles(frac) == 5, "floor(20 * 0.25) files planned")
-    // composes with predicate pruning: filter first, then the limit
-    val both = spark.read.format(fmt).option("files_limit", "2").load(dir)
-      .filter(col("starId").startsWith("star_1"))
-    assert(both.as[Star].collect().map(_.starId).toSeq == Seq("star_10", "star_11"))
+  private lazy val dir2 = {
+    val d = java.nio.file.Files.createTempDirectory("datv2b")
+    (1 to 6).foreach { i =>
+      java.nio.file.Files.writeString(d.resolve(f"other_$i%02d.dat"),
+        (0 until 30).map(j => s"$j.5 ${12.0 + (i * j) % 7 * 0.2} 0.05\n").mkString)
+    }
+    d.toString
+  }
+
+  /** Every column of a row, arrays spelled out, for exact comparisons. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select((Star.schema.fieldNames :+ "query_id").map(col).toSeq: _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  test("a whole-directory query pushes no starId filter and reads every star unfiltered") {
+    val fm = StarsProvider.getProvider("FileManager").asInstanceOf[FileManagerConnector]
+    val whole = fm.getStars(spark, Seq(QuerySpec(Map("path" -> dir,
+      "star_class" -> "be", "db_ident" -> "ogle")))).toDF()
+    val scan = scanOf(whole)
+    assert(scan.scan.description().contains("pushedFilters=[]"), scan.scan.description())
+    assert(!whole.queryExecution.optimizedPlan.toString.contains("starId IN"))
+    assert(filesPlanned(scan) == 20)
+    // the unfiltered scan with the query's class and ident columns
+    val unfiltered = spark.read.format(fmt).load(dir)
+      .withColumn("starClass", lit("be"))
+      .withColumn("identNames", map(lit("ogle"), col("starId")))
+    assert(rowsOf(whole.withColumn("query_id", lit(""))) ==
+      rowsOf(unfiltered.withColumn("query_id", lit(""))))
+  }
+
+  test("a mixed batch fetch plans one DatScan per directory and equals per-query getStars") {
+    val fm = StarsProvider.getProvider("FileManager").asInstanceOf[FileManagerConnector]
+    val pq = java.nio.file.Files.createTempDirectory("datpq").resolve("stars").toString
+    fm.getStars(spark, Seq(QuerySpec(Map("path" -> dir2)))).write.parquet(pq)
+    val todo = Seq(
+      "whole" -> Map("path" -> dir, "star_class" -> "all"),
+      "limit" -> Map("path" -> dir, "files_to_load" -> "star_04;star_02;star_09;star_15",
+        "files_limit" -> "2", "db_ident" -> "ogle"),
+      "frac" -> Map("path" -> dir2, "star_class" -> "x%0.5"),
+      "nolc" -> Map("path" -> dir2, "object_file_name" -> "other_03.dat", "load_lc" -> "false"),
+      "pq" -> Map("path" -> pq, "suffix" -> "parquet", "files_to_load" -> "other_01;other_05"))
+      .map { case (qid, p) => qid -> QuerySpec(p) }
+    val fetched = fm.fetch(spark, todo)
+    val plan = fetched.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val dirs = plan.collect { case b: BatchScanExec => b.scan.description() }
+      .map(d => d.substring(d.indexOf("path=") + 5, d.indexOf(",")))
+    assert(dirs.sorted == Seq(dir, dir2).sorted, "one DatScan per directory")
+
+    val expected = todo.flatMap { case (qid, q) =>
+      rowsOf(fm.getStars(spark, Seq(q)).toDF().withColumn("query_id", lit(qid)))
+    }.sorted
+    assert(rowsOf(fetched) == expected)
+    val byQ = fetched.groupBy("query_id").count().as[(String, Long)].collect().toMap
+    assert(byQ == Map("whole" -> 20L, "limit" -> 2L, "frac" -> 3L, "nolc" -> 1L, "pq" -> 2L))
   }
 
   test("dat ':N' and '%f' sampling prune the listing — one job, no count pass") {
@@ -196,10 +241,8 @@ class DatDataSourceSpec extends SparkSpec {
     val fm = StarsProvider.getProvider("FileManager").asInstanceOf[FileManagerConnector]
     assert(fm.getStars(spark, Seq(QuerySpec(Map("path" -> d, "files_limit" -> "1"))))
       .collect().map(_.starId).toSeq == Seq("a"))
-    assert(fm.getStarsDatJoined(spark, Seq("q" -> Map("path" -> d,
-      "files_to_load" -> "a-b;a", "files_limit" -> "1")))
-      .select("starId").as[String].collect().toSeq == Seq("a"))
-    assert(spark.read.format(fmt).option("files_limit", "1").load(d)
+    assert(fm.fetch(spark, Seq("q" -> QuerySpec(Map("path" -> d,
+      "files_to_load" -> "a-b;a", "files_limit" -> "1"))))
       .select("starId").as[String].collect().toSeq == Seq("a"))
   }
 
@@ -219,8 +262,8 @@ class DatDataSourceSpec extends SparkSpec {
       "files_to_load" -> "star_02;star_05;star_11")))).collect().map(_.starId).sorted.toSeq
     assert(ids(uri) == Seq("star_02", "star_05", "star_11"))
     assert(ids(uri) == ids(dir))
-    def joined(p: String) = fm.getStarsDatJoined(spark, Seq(
-      "q" -> Map("path" -> p, "files_to_load" -> "star_02;star_05;star_11")))
+    def joined(p: String) = fm.fetch(spark, Seq(
+      "q" -> QuerySpec(Map("path" -> p, "files_to_load" -> "star_02;star_05;star_11"))))
       .select("starId").as[String].collect().sorted.toSeq
     assert(joined(uri) == Seq("star_02", "star_05", "star_11"))
     assert(joined(uri) == joined(dir))
@@ -231,7 +274,7 @@ class DatDataSourceSpec extends SparkSpec {
     val missing = new java.io.File(dir, "no_such_dir").getPath
     intercept[java.io.FileNotFoundException](fm.getStars(spark, Seq(QuerySpec(Map(
       "path" -> missing, "files_to_load" -> "star_02")))).collect())
-    intercept[java.io.FileNotFoundException](fm.getStarsDatJoined(spark, Seq(
-      "q" -> Map("path" -> missing, "files_to_load" -> "star_02"))).collect())
+    intercept[java.io.FileNotFoundException](fm.fetch(spark, Seq(
+      "q" -> QuerySpec(Map("path" -> missing, "files_to_load" -> "star_02")))).collect())
   }
 }
