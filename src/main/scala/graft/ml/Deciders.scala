@@ -4,7 +4,7 @@ import breeze.linalg.{det, inv, DenseMatrix => BDM, DenseVector => BDV}
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deciders (SURVEY §2.9): binary classifiers with the reference's
@@ -434,30 +434,59 @@ private[ml] final case class GaussianClass(
   }
 }
 
+/** One feature set of a labelled frame: a `dim`-wide vector column and the
+  * boolean column of the rows it covers (a grid combination's NaN-free rows).
+  */
+private[ml] final case class FeatureSet(features: Column, valid: Column, dim: Int)
+
 private[ml] object GaussianFit {
   type Moments = (Long, BDV[Double], BDM[Double])
 
-  /** (n, Σx, Σxxᵀ) for BOTH classes in one distributed pass.
+  /** (n, Σx, Σxxᵀ) for BOTH classes of the `features` column in one
+    * distributed pass.
     *
     * `dim` > 0 skips the `first()` probe job (callers that know the feature
     * dimension — e.g. StarsFilter via `featureCols.length` — save one
     * driver round-trip; guide §5, no needless driver actions).
     */
   def momentsBoth(df: DataFrame, dim: Int = -1): (Moments, Moments) = {
-    val rows = df.select("label", "features")
-      .rdd.map(r => (r.getDouble(0), r.getAs[Vector](1).toArray))
-    val d = if (dim > 0) dim else rows.first()._2.length
-    def zero: Moments = (0L, BDV.zeros[Double](d), BDM.zeros[Double](d, d))
+    val d = if (dim > 0) dim else df.select("features").rdd.first().getAs[Vector](0).size
+    momentsBoth(df, Seq(FeatureSet(col("features"), lit(true), d))).head
+  }
+
+  /** (n, Σx, Σxxᵀ) for BOTH classes of each of k feature sets of `df` (a
+    * double `label` column, 1 = searched) in ONE `treeAggregate`. A set
+    * adds its vector on the rows where its `valid` column holds, in
+    * partition order, so its sums are those a one-set pass over just those
+    * rows computes: the same additions in the same order.
+    */
+  def momentsBoth(df: DataFrame, sets: Seq[FeatureSet]): Seq[(Moments, Moments)] = {
+    val k = sets.length
+    val dims = sets.map(_.dim)
+    val rows = df.select(col("label") +: sets.flatMap(s => Seq(s.features, s.valid)): _*).rdd
+    def zero(d: Int): Moments = (0L, BDV.zeros[Double](d), BDM.zeros[Double](d, d))
     def add(acc: Moments, x: Array[Double]): Moments = {
       val v = BDV(x)
       (acc._1 + 1, acc._2 + v, acc._3 + (v * v.t))
     }
     def merge(a: Moments, b: Moments): Moments = (a._1 + b._1, a._2 + b._2, a._3 + b._3)
-    rows.treeAggregate((zero, zero))(
-      seqOp = { case ((m0, m1), (label, x)) =>
-        if (label == 0.0) (add(m0, x), m1) else (m0, add(m1, x))
+    rows.treeAggregate(dims.map(d => (zero(d), zero(d))).toArray)(
+      seqOp = { (acc, r) =>
+        val label = r.getDouble(0)
+        var i = 0
+        while (i < k) {
+          if (r.getBoolean(2 + 2 * i)) {
+            val x = r.getAs[Vector](1 + 2 * i).toArray
+            val (m0, m1) = acc(i)
+            acc(i) = if (label == 0.0) (add(m0, x), m1) else (m0, add(m1, x))
+          }
+          i += 1
+        }
+        acc
       },
-      combOp = { case ((a0, a1), (b0, b1)) => (merge(a0, b0), merge(a1, b1)) })
+      combOp = { (a, b) =>
+        a.zip(b).map { case ((a0, a1), (b0, b1)) => (merge(a0, b0), merge(a1, b1)) }
+      }).toSeq
   }
 
   def gaussian(n: Long, sx: BDV[Double], sxx: BDM[Double], total: Long,
@@ -486,21 +515,37 @@ private[ml] object GaussianFit {
 
 private[ml] class GaussianDiscriminantModel(
     val name: String, val threshold: Double,
-    g0: GaussianClass, g1: GaussianClass) extends DeciderModel {
+    val g0: GaussianClass, val g1: GaussianClass) extends DeciderModel {
   override def evaluate(df: DataFrame): DataFrame =
     finishProb(df, GaussianFit.probUdf(g0, g1)(col("features")))
 }
 
 /** A decider whose fit is a closed form over the per-class Gaussian moment
-  * sums (n, Σx, Σxxᵀ). [[StarsFilter.learnOnCoords]] exploits this: when
-  * every decider is moment-based, ONE shared treeAggregate pass replaces
-  * the per-decider count + probe + aggregate jobs (guide §1 fewer jobs /
-  * §5 driver round-trips). `learnFromMoments` must produce the exact model
-  * `learn` would: both run the same `GaussianFit.momentsBoth` arithmetic,
-  * so the models are bit-identical.
+  * sums (n, Σx, Σxxᵀ). Two callers exploit this: when every decider is
+  * moment-based, [[StarsFilter.learnOnCoords]] fits them all from ONE
+  * shared treeAggregate pass (no per-decider count + probe + aggregate
+  * jobs), and [[ParamsEstimator]] fits every such grid combination from
+  * ONE pass keyed by combination. `learnFromMoments` must produce the exact
+  * model `learn` would: both run the same `GaussianFit.momentsBoth`
+  * arithmetic, so the models are bit-identical.
   */
 private[ml] trait MomentDecider extends Decider {
   def learnFromMoments(mom0: GaussianFit.Moments, mom1: GaussianFit.Moments): DeciderModel
+}
+
+private[ml] object MomentDecider {
+  /** True when every decider of a non-empty panel is moment-based. */
+  def all(deciders: Seq[Decider]): Boolean =
+    deciders.nonEmpty && deciders.forall(_.isInstanceOf[MomentDecider])
+
+  /** Every decider of an [[all]]-moment panel, fitted from one class pair
+    * of moments; both classes need a row.
+    */
+  def learnAll(deciders: Seq[Decider], mom0: GaussianFit.Moments,
+               mom1: GaussianFit.Moments): Seq[DeciderModel] = {
+    require(mom1._1 > 0 && mom0._1 > 0, "Decider can't be learned on an empty sample")
+    deciders.map(_.asInstanceOf[MomentDecider].learnFromMoments(mom0, mom1))
+  }
 }
 
 /** `QDADec`: per-class mean + covariance, closed form

@@ -40,6 +40,13 @@ abstract class Descriptor(override val uid: String) extends Transformer {
   override def transformSchema(schema: StructType): StructType =
     outputCols.foldLeft(schema)((s, c) => s.add(StructField(c, DoubleType)))
 
+  /** The parameters that fix this descriptor's output, `uid` aside: two
+    * descriptors of one class with equal keys compute the same columns, so
+    * a grid search computes them once ([[ParamsEstimator]]). `None` (the
+    * default) shares nothing.
+    */
+  private[ml] def sharingKey: Option[Seq[Any]] = None
+
   override def copy(extra: ParamMap): Transformer = this
 }
 
@@ -51,6 +58,7 @@ class AbbeValueDescr(val bins: Option[Int] = None,
                      override val uid: String = Identifiable.randomUID("abbeValue"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = Seq("abbe_value")
+  override private[ml] def sharingKey = Some(Seq(bins))
   override def transform(df: Dataset[_]): DataFrame = {
     val b = bins
     val u0 = udf((t: Seq[Double], m: Seq[Double]) =>
@@ -65,6 +73,7 @@ class KurtosisDescr(val bins: Option[Int] = None, val absolute: Boolean = false,
                     override val uid: String = Identifiable.randomUID("kurtosis"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = Seq("kurtosis")
+  override private[ml] def sharingKey = Some(Seq(bins, absolute))
   override def transform(df: Dataset[_]): DataFrame = {
     val (b, abs0) = (bins, absolute)
     val u0 = udf((t: Seq[Double], m: Seq[Double]) => {
@@ -85,6 +94,7 @@ class SkewnessDescr(val bins: Option[Int] = None, val absolute: Boolean = false,
                     override val uid: String = Identifiable.randomUID("skewness"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = Seq("skewness")
+  override private[ml] def sharingKey = Some(Seq(bins, absolute))
   override def transform(df: Dataset[_]): DataFrame = {
     val (b, abs0) = (bins, absolute)
     val u0 = udf((t: Seq[Double], m: Seq[Double]) => {
@@ -104,6 +114,7 @@ class SkewnessDescr(val bins: Option[Int] = None, val absolute: Boolean = false,
 class CurveDensityDescr(override val uid: String = Identifiable.randomUID("curveDensity"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = Seq("curve_density")
+  override private[ml] def sharingKey = Some(Nil)
   override def transform(df: Dataset[_]): DataFrame = {
     val u0 = udf((t: Seq[Double], m: Seq[Double]) =>
       Kernels.curveDensity(t.toArray, m.toArray))
@@ -117,6 +128,7 @@ class VariogramSlopeDescr(val daysPerBin: Double, val absolute: Boolean = false,
                           override val uid: String = Identifiable.randomUID("varioSlope"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = Seq("variogram_slope")
+  override private[ml] def sharingKey = Some(Seq(daysPerBin, absolute))
   override def transform(df: Dataset[_]): DataFrame = {
     val (dpb, abs0) = (daysPerBin, absolute)
     val u0 = udf((t: Seq[Double], m: Seq[Double]) =>
@@ -130,6 +142,7 @@ class VariogramSlopeDescr(val daysPerBin: Double, val absolute: Boolean = false,
 class PositionDescriptor(override val uid: String = Identifiable.randomUID("position"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = Seq("ra", "dec")
+  override private[ml] def sharingKey = Some(Nil)
   override def transform(df: Dataset[_]): DataFrame =
     df.withColumn("ra", col("coo").getField("ra"))
       .withColumn("dec", col("coo").getField("dec"))
@@ -144,6 +157,7 @@ class ColorIndexDescr(val colors: Seq[(String, String)],
     extends Descriptor(uid) {
   override val outputCols: Seq[String] =
     colors.map { case (a, b) => s"${b}-${a}" }
+  override private[ml] def sharingKey = Some(Seq(colors))
   override def transform(df: Dataset[_]): DataFrame =
     colors.foldLeft(df.toDF()) { case (d, (a, b)) =>
       d.withColumn(s"${b}-${a}",
@@ -157,6 +171,7 @@ class PropertyDescr(val attributeNames: Seq[String],
                     override val uid: String = Identifiable.randomUID("property"))
     extends Descriptor(uid) {
   override val outputCols: Seq[String] = attributeNames
+  override private[ml] def sharingKey = Some(Seq(attributeNames))
   override def transform(df: Dataset[_]): DataFrame =
     attributeNames.foldLeft(df.toDF()) { (d, a) =>
       d.withColumn(a, element_at(col("more"), a).cast("double"))
@@ -185,6 +200,8 @@ class CurveDescr(val bins: Int, val height: Option[Int] = None,
     case Some(rd) => (1 to rd).map(i => s"curve_pca_$i")
     case None     => (1 to bins).map(i => s"curve_point_$i")
   }
+  // a red_dim descriptor carries its own fitted reduction: never shared
+  override private[ml] def sharingKey = if (redDim.isEmpty) Some(Seq(bins, height)) else None
 
   /** sklearn-compatible fitted PCA: column means + components[redDim][bins];
     * transform is `(y - mean) · componentsᵀ` (sklearn centers on transform,
@@ -262,6 +279,10 @@ abstract class ComparativeDescr(uid: String) extends Descriptor(uid) {
   def templates: Seq[(Array[Double], Array[Double])]
   def meth: String
   protected def pairFn: (Array[Double], Array[Double], Array[Double], Array[Double]) => Double
+  /** The pair function's parameters besides the templates and `meth`. */
+  protected def pairParams: Seq[Any]
+  override private[ml] def sharingKey =
+    Some(templates.map { case (t, m) => (t.toSeq, m.toSeq) } +: meth +: pairParams)
 
   override def transform(df: Dataset[_]): DataFrame = {
     val (tmpl, m, pf) = (templates, meth, pairFn)
@@ -280,6 +301,7 @@ class CurvesShapeDescr(val templates: Seq[(Array[Double], Array[Double])],
                        override val uid: String = Identifiable.randomUID("curvesShape"))
     extends ComparativeDescr(uid) {
   override val outputCols: Seq[String] = Seq("curves_shape_dissim")
+  override protected def pairParams = Seq(daysPerBin, alphabetSize, slide)
   override protected def pairFn = (st, sm, ct, cm) =>
     Comparative.curvesShapePair(st, sm, ct, cm, daysPerBin, alphabetSize, slide)
 }
@@ -291,6 +313,7 @@ class HistShapeDescr(val templates: Seq[(Array[Double], Array[Double])],
                      override val uid: String = Identifiable.randomUID("histShape"))
     extends ComparativeDescr(uid) {
   override val outputCols: Seq[String] = Seq("hist_shape_dissim")
+  override protected def pairParams = Seq(bins, alphabetSize, slide)
   override protected def pairFn = (st, sm, ct, cm) =>
     Comparative.histShapePair(st, sm, ct, cm, bins, alphabetSize, slide)
 }
@@ -302,6 +325,7 @@ class VariogramShapeDescr(val templates: Seq[(Array[Double], Array[Double])],
                           override val uid: String = Identifiable.randomUID("varioShape"))
     extends ComparativeDescr(uid) {
   override val outputCols: Seq[String] = Seq("vario_shape_dissim")
+  override protected def pairParams = Seq(bins, alphabetSize, slide)
   override protected def pairFn = (st, sm, ct, cm) =>
     Comparative.varioShapePair(st, sm, ct, cm, bins, alphabetSize, slide)
 }

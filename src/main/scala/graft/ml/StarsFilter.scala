@@ -66,11 +66,9 @@ class StarsFilter(val descriptors: Seq[Descriptor], val deciders: Seq[Decider]) 
     // per class — the class counts for the emptiness check included — and
     // each model is solved on the driver. No cache (single consumer), no
     // per-decider count/probe/aggregate jobs, no thread pool.
-    if (deciders.nonEmpty && deciders.forall(_.isInstanceOf[MomentDecider])) {
+    if (MomentDecider.all(deciders)) {
       val (m0, m1) = GaussianFit.momentsBoth(train, dim = featureCols.length)
-      require(m1._1 > 0 && m0._1 > 0, "Decider can't be learned on an empty sample")
-      val models = deciders.map(_.asInstanceOf[MomentDecider].learnFromMoments(m0, m1))
-      return new StarsFilterModel(descriptors, models, featureCols)
+      return new StarsFilterModel(descriptors, MomentDecider.learnAll(deciders, m0, m1), featureCols)
     }
     val cached = train.cache()
     try {
@@ -104,6 +102,66 @@ object StarsFilterModel {
   /** The statistic columns of [[StarsFilterModel.getStatistic]], after `decider`. */
   val StatColumns: Seq[String] = Seq("precision", "accuracy", "f1_score",
     "true_positive_rate", "true_negative_rate", "false_positive_rate", "false_negative_rate")
+
+  /** Per-decider statistics of k (feature set, models) pairs over one
+    * frame with a double `label` column (1 = searched, 0 = contamination),
+    * read on the driver from ONE aggregation: pair i scores its models on
+    * its feature set and counts the rows its `valid` column keeps. For
+    * each pair: decider name → values in [[StatColumns]] order, rates
+    * rounded to 3 decimals like the reference (`base_decider.py:133-197`).
+    */
+  private[ml] def deciderStatistics(
+      labelled: DataFrame,
+      sets: Seq[(FeatureSet, Seq[DeciderModel])]): Seq[Seq[(String, Seq[Double])]] = {
+    // No caches: every scored row is consumed exactly once, and the rows
+    // under it are the caller's (already cached/checkpointed) frame.
+    val scored = sets.zipWithIndex.foldLeft(labelled) { case (df, ((fs, models), i)) =>
+      models.zipWithIndex.foldLeft(
+        df.withColumns(Map("features" -> fs.features, s"_v$i" -> fs.valid))) {
+        case (d, (m, j)) => m.evaluate(d).withColumnRenamed(s"prob_${m.name}", s"_p${i}_$j")
+      }
+    }
+    val (isS, isO) = (col("label") === 1.0, col("label") === 0.0)
+    // per pair: the sample sizes, then each decider's hits on either side,
+    // counted in one single-stage job (a global agg runs two jobs); counts
+    // merge exactly in any order
+    val hits = sets.zipWithIndex.flatMap { case ((_, models), i) =>
+      val v = col(s"_v$i")
+      Seq(v && isS, v && isO) ++ models.zipWithIndex.flatMap { case (m, j) =>
+        val p = col(s"_p${i}_$j")
+        Seq(v && isS && p >= m.threshold, v && isO && p < m.threshold)
+      }
+    }
+    val n = hits.length
+    val all = scored.select(hits: _*).rdd.aggregate(new Array[Long](n))(
+      seqOp = { (acc, r) =>
+        var i = 0
+        while (i < n) { if (!r.isNullAt(i) && r.getBoolean(i)) acc(i) += 1; i += 1 }
+        acc
+      },
+      combOp = { (a, b) => a.indices.foreach(i => a(i) += b(i)); a }).map(_.toDouble)
+    val starts = sets.scanLeft(0)((at, s) => at + 2 + 2 * s._2.length)
+    sets.zip(starts).map { case ((_, models), at) =>
+      val (rightNum, wrongNum) = (all(at), all(at + 1))
+      require(rightNum > 0 && wrongNum > 0,
+        "Decider statistics can't be computed on an empty sample")
+      models.zipWithIndex.map { case (m, j) =>
+        val tp = all(at + 2 + 2 * j)
+        val tn = all(at + 3 + 2 * j)
+        val fp = wrongNum - tn
+        val fn = rightNum - tp
+        val precision = if (tp + fp > 0) tp / (tp + fp) else 0.0
+        m.name -> Seq(
+          math.rint(precision * 1000) / 1000,
+          (tp + tn) / (rightNum + wrongNum),
+          2 * tp / (2 * tp + fp + fn),
+          math.rint(tp / rightNum * 1000) / 1000,
+          math.rint(tn / wrongNum * 1000) / 1000,
+          math.rint((1 - tn / wrongNum) * 1000) / 1000,
+          math.rint((1 - tp / rightNum) * 1000) / 1000)
+      }
+    }
+  }
 }
 
 class StarsFilterModel(val descriptors: Seq[Descriptor],
@@ -230,54 +288,15 @@ class StarsFilterModel(val descriptors: Seq[Descriptor],
 
   /** The per-decider rows of [[getStatisticOnCoords]] (no mean row), read
     * on the driver: decider name → values in [[StarsFilterModel.StatColumns]]
-    * order.
+    * order. ONE aggregation job computes both samples' n and every
+    * decider's hit count.
     */
   def deciderStatistics(searchedCoords: DataFrame,
-                        othersCoords: DataFrame): Seq[(String, Seq[Double])] = {
-    // ONE aggregation job computes both samples' n and every decider's hit
-    // count: the two per-sample aggregates are label-conditional sums over
-    // the union (guide §1 fewer jobs). No caches — each scored branch is
-    // consumed exactly once, and the underlying coords are the caller's
-    // (already cached/checkpointed) frame.
-    val tagged = predictOnCoords(searchedCoords).withColumn("_cls", lit(1))
-      .unionByName(predictOnCoords(othersCoords).withColumn("_cls", lit(0)))
-    def cls(v: Int) = col("_cls") === v
-    val aggs =
-      Seq(sum(when(cls(1), 1).otherwise(0)).cast("double").as("s_n"),
-          sum(when(cls(0), 1).otherwise(0)).cast("double").as("o_n")) ++
-      models.flatMap { m =>
-        Seq(
-          sum(when(cls(1) && col(s"prob_${m.name}") >= m.threshold, 1).otherwise(0))
-            .cast("double").as(s"s_${m.name}"),
-          sum(when(cls(0) && col(s"prob_${m.name}") < m.threshold, 1).otherwise(0))
-            .cast("double").as(s"o_${m.name}"))
-      }
-    val row = tagged.agg(aggs.head, aggs.tail: _*).head()
-    // sums over no rows are null: read them as 0 so the guard below fires
-    val all = row.schema.fieldNames.zipWithIndex
-      .map { case (f, i) => f -> (if (row.isNullAt(i)) 0.0 else row.getDouble(i)) }.toMap
-    val sc = all.collect { case (k, v) if k.startsWith("s_") => k.drop(2) -> v }
-    val oc = all.collect { case (k, v) if k.startsWith("o_") => k.drop(2) -> v }
-    val rightNum = sc("n")
-    val wrongNum = oc("n")
-    require(rightNum > 0 && wrongNum > 0,
-      "Decider statistics can't be computed on an empty sample")
-    models.map { m =>
-      val tp = sc(m.name)
-      val tn = oc(m.name)
-      val fp = wrongNum - tn
-      val fn = rightNum - tp
-      val precision = if (tp + fp > 0) tp / (tp + fp) else 0.0
-      m.name -> Seq(
-        math.rint(precision * 1000) / 1000,
-        (tp + tn) / (rightNum + wrongNum),
-        2 * tp / (2 * tp + fp + fn),
-        math.rint(tp / rightNum * 1000) / 1000,
-        math.rint(tn / wrongNum * 1000) / 1000,
-        math.rint((1 - tn / wrongNum) * 1000) / 1000,
-        math.rint((1 - tp / rightNum) * 1000) / 1000)
-    }
-  }
+                        othersCoords: DataFrame): Seq[(String, Seq[Double])] =
+    StarsFilterModel.deciderStatistics(
+      searchedCoords.withColumn("label", lit(1.0))
+        .unionByName(othersCoords.withColumn("label", lit(0.0))),
+      Seq(FeatureSet(col("features"), lit(true), featureCols.length) -> models)).head
 
   /** Grid-evaluated probability space (`tools/visualization.py:117-199`
     * `plotProbabSpace` data product, SURVEY §2.10): an evenly spaced

@@ -47,7 +47,9 @@ class StarsSearcher(
   }
 
   /** Run the search for a query table with columns `query_id` + connector
-    * params (as a map column `params`). Returns the status DataFrame.
+    * params (as a map column `params`). Returns this call's rows of the
+    * status sink, read back from it (every column nullable, as parquet
+    * reads are).
     */
   def queryStars(spark: SparkSession, queries: DataFrame): DataFrame = {
     import spark.implicits._
@@ -96,7 +98,11 @@ class StarsSearcher(
           (model.featureCols ++ probCols).map(col) ++
           (passedCols :+ "passed").map(c => coalesce(col(c), lit(false)).as(c)): _*)
       status.coalesce(files).write.mode(SaveMode.Append).parquet(statusPath)
-      status
+      // the rows just written, read back: a frame over `scored` would re-run
+      // the fetch and scoring once the `finally` drops the cache, and the
+      // given schema spares parquet's schema-inference job
+      spark.read.schema(status.schema).parquet(statusPath)
+        .filter(col("query_id").isin(asked: _*))
     } finally scored.unpersist()
   }
 

@@ -102,7 +102,7 @@ class StarsFilterSpec extends SparkSpec {
       Seq(new AbbeValueDescr(Some(100)), new VariogramSlopeDescr(30)),
       Seq(new LDADec(), new QDADec())))
 
-  test("ParamsEstimator 2-combination LDA/QDA grid runs at most 6 Spark jobs") {
+  test("ParamsEstimator 2-combination LDA/QDA grid runs at most 3 Spark jobs") {
     searched.count(); others.count() // inputs cached before counting
     var all: Seq[TuneResult] = Nil
     val jobs = jobsFor("tune-grid") {
@@ -110,7 +110,81 @@ class StarsFilterSpec extends SparkSpec {
     }
     assert(all.size == 2)
     info(s"$jobs jobs")
-    assert(jobs <= 6, s"2-combination grid ran $jobs jobs")
+    // one moments treeAggregate, then the statistic aggregate's map stage
+    // and result job
+    assert(jobs <= 3, s"2-combination grid ran $jobs jobs")
+  }
+
+  /** Every field of each Gaussian decider's two class models. */
+  private def gaussians(m: StarsFilterModel) = m.models.map {
+    case g: GaussianDiscriminantModel =>
+      (g.name, g.threshold, Seq(g.g0, g.g1).map(c =>
+        (c.prior, c.mean.toSeq, c.invCov.map(_.toSeq).toSeq, c.logDet)))
+    case other => fail(s"not a Gaussian decider: ${other.name}")
+  }
+
+  /** The 8-combination grid of the parallel-fit spec. */
+  private def momentGrid = Seq(
+    TuneCombination("abbe30", Seq(new AbbeValueDescr(Some(30))), Seq(new QDADec())),
+    TuneCombination("abbe100", Seq(new AbbeValueDescr(Some(100))), Seq(new QDADec())),
+    TuneCombination("slope30", Seq(new VariogramSlopeDescr(30)), Seq(new QDADec())),
+    TuneCombination("abbe+slope",
+      Seq(new AbbeValueDescr(Some(100)), new VariogramSlopeDescr(30)), Seq(new QDADec())),
+    TuneCombination("abbe30_lda", Seq(new AbbeValueDescr(Some(30))), Seq(new LDADec())),
+    TuneCombination("abbe100_t7",
+      Seq(new AbbeValueDescr(Some(100))), Seq(new QDADec(threshold = 0.7))),
+    TuneCombination("slope30_lda", Seq(new VariogramSlopeDescr(30)), Seq(new LDADec())),
+    TuneCombination("abbe+slope_t3",
+      Seq(new AbbeValueDescr(Some(100)), new VariogramSlopeDescr(30)),
+      Seq(new QDADec(threshold = 0.3))))
+
+  /** `x` in `more`: NaN for every fourth star of either family. */
+  private def withX(df: DataFrame) = df.withColumn("more", map(lit("x"),
+    when(pmod(xxhash64(col("starId")), lit(4)) === 0, lit("NaN"))
+      .otherwise((pmod(xxhash64(col("starId"), lit(1)), lit(1000)) / 100.0).cast("string"))))
+
+  test("ParamsEstimator one-pass grid equals each combination fitted alone") {
+    val (s, o) = (withX(searched).cache(), withX(others).cache())
+    try {
+      val grid = momentGrid :+ TuneCombination("abbe+x",
+        Seq(new AbbeValueDescr(Some(100)), new PropertyDescr(Seq("x"))),
+        Seq(new LDADec(), new QDADec()))
+      val xRows = s.unionByName(o).filter(element_at(col("more"), "x") === "NaN").count()
+      assert(xRows > 0 && xRows < 30, s"$xRows NaN rows")
+      val all = new ParamsEstimator(s, o, grid).fit()._2
+      assert(all.map(_.label) == grid.map(_.label), "results keep the input order")
+      val train = ParamsEstimator.inTrain(0.75, 42L)
+      for ((c, got) <- grid.zip(all)) {
+        val filter = new StarsFilter(c.descriptors, c.deciders)
+        val alone = filter.learn(s.filter(train), o.filter(train))
+        val rows = alone.deciderStatistics(filter.spaceCoordinates(s.filter(!train)),
+          filter.spaceCoordinates(o.filter(!train)))
+        val stats = StarsFilterModel.StatColumns.zipWithIndex.map { case (n, i) =>
+          n -> rows.map(_._2(i)).sum / rows.length
+        }.toMap
+        assert(got.stats == stats, s"${c.label}: statistics")
+        assert(gaussians(got.model) == gaussians(alone), s"${c.label}: Gaussian parameters")
+        assert(got.model.featureCols == filter.featureCols)
+      }
+    } finally { s.unpersist(); o.unpersist() }
+  }
+
+  test("ParamsEstimator refuses a combination with no valid train row of one class") {
+    // `y` exists for the contamination only: the searched side has no row
+    val (s, o) = (searched, others.withColumn("more", map(lit("y"), lit("1.0"))))
+    val grid = ldaQdaGrid :+ TuneCombination("y", Seq(new PropertyDescr(Seq("y"))),
+      Seq(new LDADec(), new QDADec()))
+    val err = intercept[IllegalArgumentException](new ParamsEstimator(s, o, grid).fit())
+    assert(err.getMessage.contains("Decider can't be learned on an empty sample"),
+      err.getMessage)
+  }
+
+  test("ParamsEstimator refuses a grid whose test side is empty") {
+    // a split ratio of 1 puts every star on the train side
+    val err = intercept[IllegalArgumentException](
+      new ParamsEstimator(searched, others, ldaQdaGrid, splitRatio = 1.0).fit())
+    assert(err.getMessage.contains("statistics can't be computed on an empty sample"),
+      err.getMessage)
   }
 
   test("ParamsEstimator split does not depend on the input partitioning") {
@@ -135,35 +209,29 @@ class StarsFilterSpec extends SparkSpec {
 
   test("ParamsEstimator parallel fit matches the sequential argmax and is faster") {
     // 8 combinations (a realistic small tuning grid — descriptor variants ×
-    // decider thresholds), so the measured ratio prices the concurrent-fit
-    // claim at grid width, not at a toy 2-3 entries
-    def grid = Seq(
-      TuneCombination("abbe30", Seq(new AbbeValueDescr(Some(30))), Seq(new QDADec())),
-      TuneCombination("abbe100", Seq(new AbbeValueDescr(Some(100))), Seq(new QDADec())),
-      TuneCombination("slope30", Seq(new VariogramSlopeDescr(30)), Seq(new QDADec())),
-      TuneCombination("abbe+slope",
-        Seq(new AbbeValueDescr(Some(100)), new VariogramSlopeDescr(30)), Seq(new QDADec())),
-      TuneCombination("abbe30_lda", Seq(new AbbeValueDescr(Some(30))), Seq(new LDADec())),
-      TuneCombination("abbe100_t7",
-        Seq(new AbbeValueDescr(Some(100))), Seq(new QDADec(threshold = 0.7))),
-      TuneCombination("slope30_lda", Seq(new VariogramSlopeDescr(30)), Seq(new LDADec())),
-      TuneCombination("abbe+slope_t3",
-        Seq(new AbbeValueDescr(Some(100)), new VariogramSlopeDescr(30)),
-        Seq(new QDADec(threshold = 0.3))))
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val ((seqBest, seqAll), tSeq) = time(
-      new ParamsEstimator(searched, others, grid, parallelism = 1).fit())
-    val ((parBest, parAll), tPar) = time(
-      new ParamsEstimator(searched, others, grid, parallelism = 4).fit())
-    info(f"sequential: $tSeq%.2fs, parallel: $tPar%.2fs")
+    // decider thresholds). An all-moment grid fits in one pass whatever
+    // the parallelism, so the pool must not move its results.
+    val (seqBest, seqAll) = new ParamsEstimator(searched, others, momentGrid,
+      parallelism = 1).fit()
+    val (parBest, parAll) = new ParamsEstimator(searched, others, momentGrid,
+      parallelism = 4).fit()
     assert(parBest.label == seqBest.label, "parallel argmax must match sequential")
     assert(parAll.map(r => r.label -> r.stats) == seqAll.map(r => r.label -> r.stats),
       "per-combination stats must be identical")
+    // a GaussianNBDec grid still fits per combination, from the pool; its
     // 4 concurrent tiny fits are scheduling-bound: expect a real wall-clock
-    // win (10% tolerance so a loaded machine can't flake the suite; the
-    // typical observed ratio is 2-3x)
+    // win (10% tolerance so a loaded machine can't flake the suite)
+    def nbGrid = momentGrid.map(c => c.copy(deciders = Seq(new GaussianNBDec())))
+    def time[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+    }
+    val ((nbSeqBest, nbSeqAll), tSeq) = time(
+      new ParamsEstimator(searched, others, nbGrid, parallelism = 1).fit())
+    val ((nbParBest, nbParAll), tPar) = time(
+      new ParamsEstimator(searched, others, nbGrid, parallelism = 4).fit())
+    info(f"GaussianNBDec grid: sequential $tSeq%.2fs, parallel $tPar%.2fs")
+    assert(nbParBest.label == nbSeqBest.label)
+    assert(nbParAll.map(r => r.label -> r.stats) == nbSeqAll.map(r => r.label -> r.stats))
     assert(tPar < tSeq * 1.1, f"parallel ($tPar%.2fs) not faster than sequential ($tSeq%.2fs)")
   }
 

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 import graft.model.Star
 import org.apache.spark.sql.{DataFrame, Row}
+import graft.sources.v2.DatScan
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.StructType
@@ -122,6 +124,32 @@ class StarsSearcherSpec extends SparkSpec {
     // fill the scored cache + read back the hit queries, then one append per sink
     assert(jobs <= 3, s"the search ran $jobs jobs")
     assert(spark.read.parquet(sinks.resolve("status").toString).count() == 20)
+  }
+
+  test("the returned status frame reads the written rows back in one job, without a fetch") {
+    val sinks = Files.createTempDirectory("sinks")
+    val status = new StarsSearcher(model, "FileManager", sinks.resolve("matched").toString,
+      sinks.resolve("status").toString).queryStars(spark, batch.toDF("query_id", "params"))
+    var rows: Array[Row] = null
+    val jobs = jobsFor("status-collect") { rows = status.collect() }
+    assert(jobs <= 1, s"collecting the returned frame ran $jobs jobs")
+    val plan = status.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect { case b: BatchScanExec if b.scan.isInstanceOf[DatScan] => b }.isEmpty,
+      plan.toString)
+    // the rows the sink holds, which are the scores of the fetched stars
+    val written = spark.read.parquet(sinks.resolve("status").toString)
+    assert(shape(status.schema) == shape(written.schema))
+    assert(rows.map(_.toString).sorted.toSeq == written.collect().map(_.toString).sorted.toSeq)
+    val fetched = new graft.sources.FileManagerConnector()
+      .fetch(spark, batch.map { case (qid, p) => qid -> graft.sources.QuerySpec(p) })
+    val cols = Seq("query_id", "starId", "abbe_value", "prob_CustomDecider", "passed")
+    def keyed(df: DataFrame) = df.select(cols.head, cols.tail: _*).collect()
+      .map(_.toString).sorted.toSeq
+    assert(keyed(status) == keyed(model.scoreEveryRow(fetched)))
+    assert(rows.length == 20)
   }
 
   test("a small batch writes one parquet file per sink") {
