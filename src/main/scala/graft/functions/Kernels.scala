@@ -335,21 +335,19 @@ object Kernels {
     */
   def cleanLc(time: Array[Double], mag: Array[Double], err: Array[Double]):
       (Array[Double], Array[Double], Array[Double]) = {
-    val bad = Set(-99.0) // numeric forms of "-99"/"-99.0"; NaN handled below
-    val t = new ArrayBuffer[Double]()
-    val m = new ArrayBuffer[Double]()
-    val e = new ArrayBuffer[Double]()
+    def good(x: Double) = x.isFinite && x != -99.0 // -99.0: the numeric "-99"/"-99.0" sentinel
+    val n = time.length
+    val (t, m, e) = (new Array[Double](n), new Array[Double](n), new Array[Double](n))
+    var kept = 0
     var i = 0
-    while (i < time.length) {
-      val (ti, mi, ei) = (time(i), mag(i), err(i))
-      val ok = ti.isFinite && mi.isFinite && ei.isFinite &&
-        !bad(ti) && !bad(mi) && !bad(ei)
-      if (ok) {
-        t += pyRound(ti, 5); m += pyRound(mi, 3); e += pyRound(ei, 3)
+    while (i < n) {
+      if (good(time(i)) && good(mag(i)) && good(err(i))) {
+        t(kept) = pyRound(time(i), 5); m(kept) = pyRound(mag(i), 3); e(kept) = pyRound(err(i), 3)
+        kept += 1
       }
       i += 1
     }
-    (t.toArray, m.toArray, e.toArray)
+    (java.util.Arrays.copyOf(t, kept), java.util.Arrays.copyOf(m, kept), java.util.Arrays.copyOf(e, kept))
   }
 
   /** python3 round(): half-even on the EXACT binary value. Scala's
@@ -357,10 +355,31 @@ object Kernels {
     * look like a tie and round UP to 2.68 where CPython sees
     * 2.67499999999999982 and rounds down) — the java.math constructor
     * keeps the exact expansion.
+    *
+    * Fast path: `x = v·10^d` is within half an ulp of the exact product, so
+    * `rint(x)` is the exact product's nearest integer `n` unless `x` lies
+    * within a few ulps of a .5 tie; `n` and `10^d` are then exact doubles,
+    * and their IEEE quotient is the correctly rounded `n / 10^d`, the double
+    * `BigDecimal.doubleValue` returns. Near-ties, |x| ≥ 2^52, non-finite
+    * values and digits outside [0, 22] take the exact path.
     */
-  def pyRound(v: Double, digits: Int): Double =
-    BigDecimal(new java.math.BigDecimal(v))
-      .setScale(digits, BigDecimal.RoundingMode.HALF_EVEN).toDouble
+  def pyRound(v: Double, digits: Int): Double = {
+    if (digits >= 0 && digits < Pow10.length) {
+      val p = Pow10(digits)
+      val x = v * p
+      if (math.abs(x) < TwoPow52 && math.abs(x - math.floor(x) - 0.5) > 4 * math.ulp(x)) {
+        val n = math.rint(x)
+        return if (n == 0.0) 0.0 else n / p // the exact path yields +0.0, never -0.0
+      }
+    }
+    new java.math.BigDecimal(v).setScale(digits, java.math.RoundingMode.HALF_EVEN).doubleValue
+  }
+
+  /** 10^0 … 10^22: the powers of ten a double holds exactly (each product
+    * below is exact, where `math.pow` may be an ulp off).
+    */
+  private val Pow10 = Array.iterate(1.0, 23)(_ * 10)
+  private val TwoPow52 = 4503599627370496.0
 
   private def centralMoment(x: Array[Double], k: Int): Double = {
     val n = x.length

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * `evaluate` appends `prob_<name>` = P(class 1), with NaN coerced to 0.
   *
   * MLlib-backed deciders train distributed; QDA/LDA are closed-form
-  * estimators (one `treeAggregate` over the data, tiny driver-side solve,
+  * estimators (one moments pass over the data, tiny driver-side solve,
   * broadcast-able model — ideal at scale since feature dimension is small).
   *
   * Documented semantic deltas vs the reference (survey §2.9):
@@ -455,23 +455,29 @@ private[ml] object GaussianFit {
   }
 
   /** (n, Σx, Σxxᵀ) for BOTH classes of each of k feature sets of `df` (a
-    * double `label` column, 1 = searched) in ONE `treeAggregate`. A set
-    * adds its vector on the rows where its `valid` column holds, in
-    * partition order, so its sums are those a one-set pass over just those
-    * rows computes: the same additions in the same order.
+    * double `label` column, 1 = searched) in ONE job. A set adds its vector
+    * on the rows where its `valid` column holds, in partition order, so its
+    * sums are those a one-set pass over just those rows computes: the same
+    * additions in the same order. The per-partition sums are collected and
+    * merged in partition order on the driver, not in task completion order,
+    * so every fit of one frame yields bit-identical moments.
     */
   def momentsBoth(df: DataFrame, sets: Seq[FeatureSet]): Seq[(Moments, Moments)] = {
     val k = sets.length
     val dims = sets.map(_.dim)
     val rows = df.select(col("label") +: sets.flatMap(s => Seq(s.features, s.valid)): _*).rdd
-    def zero(d: Int): Moments = (0L, BDV.zeros[Double](d), BDM.zeros[Double](d, d))
+    def zeros: Array[(Moments, Moments)] = dims.map { d =>
+      def zero: Moments = (0L, BDV.zeros[Double](d), BDM.zeros[Double](d, d))
+      (zero, zero)
+    }.toArray
     def add(acc: Moments, x: Array[Double]): Moments = {
       val v = BDV(x)
       (acc._1 + 1, acc._2 + v, acc._3 + (v * v.t))
     }
     def merge(a: Moments, b: Moments): Moments = (a._1 + b._1, a._2 + b._2, a._3 + b._3)
-    rows.treeAggregate(dims.map(d => (zero(d), zero(d))).toArray)(
-      seqOp = { (acc, r) =>
+    val partials = rows.mapPartitions { it =>
+      val acc = zeros
+      it.foreach { r =>
         val label = r.getDouble(0)
         var i = 0
         while (i < k) {
@@ -482,11 +488,12 @@ private[ml] object GaussianFit {
           }
           i += 1
         }
-        acc
-      },
-      combOp = { (a, b) =>
-        a.zip(b).map { case ((a0, a1), (b0, b1)) => (merge(a0, b0), merge(a1, b1)) }
-      }).toSeq
+      }
+      Iterator.single(acc)
+    }.collect()
+    partials.foldLeft(zeros) { (a, b) =>
+      a.zip(b).map { case ((a0, a1), (b0, b1)) => (merge(a0, b0), merge(a1, b1)) }
+    }.toSeq
   }
 
   def gaussian(n: Long, sx: BDV[Double], sxx: BDM[Double], total: Long,
@@ -516,14 +523,15 @@ private[ml] object GaussianFit {
 private[ml] class GaussianDiscriminantModel(
     val name: String, val threshold: Double,
     val g0: GaussianClass, val g1: GaussianClass) extends DeciderModel {
-  override def evaluate(df: DataFrame): DataFrame =
-    finishProb(df, GaussianFit.probUdf(g0, g1)(col("features")))
+  // built once per model, not per `evaluate`
+  @transient private lazy val prob = GaussianFit.probUdf(g0, g1)
+  override def evaluate(df: DataFrame): DataFrame = finishProb(df, prob(col("features")))
 }
 
 /** A decider whose fit is a closed form over the per-class Gaussian moment
   * sums (n, Σx, Σxxᵀ). Two callers exploit this: when every decider is
   * moment-based, [[StarsFilter.learnOnCoords]] fits them all from ONE
-  * shared treeAggregate pass (no per-decider count + probe + aggregate
+  * shared moments pass (no per-decider count + probe + aggregate
   * jobs), and [[ParamsEstimator]] fits every such grid combination from
   * ONE pass keyed by combination. `learnFromMoments` must produce the exact
   * model `learn` would: both run the same `GaussianFit.momentsBoth`

@@ -50,91 +50,106 @@ abstract class Descriptor(override val uid: String) extends Transformer {
   override def copy(extra: ParamMap): Transformer = this
 }
 
+/** A one-column descriptor: a kernel of the star's first light curve
+  * (time, mag), null when the star has none. The kernel's udf is built once
+  * per instance, not per `transform`, and is nondeterministic so that the
+  * kernel runs exactly once per row.
+  *
+  * The concrete descriptors pin the serialVersionUID their classes had
+  * before their kernels moved here, so filters saved earlier
+  * ([[FilterSerializer]]) still load.
+  */
+abstract class CurveKernelDescr(uid: String) extends Descriptor(uid) {
+  /** The kernel over (time, mag); it closes over its parameters, not over
+    * the descriptor.
+    */
+  protected def kernel: (Array[Double], Array[Double]) => Double
+
+  @transient private lazy val kernelUdf = {
+    val f = kernel
+    udf((t: Seq[Double], m: Seq[Double]) => f(t.toArray, m.toArray)).asNondeterministic()
+  }
+
+  override def transform(df: Dataset[_]): DataFrame =
+    df.withColumn(outputCols.head, lcFeature(kernelUdf(lcTime, lcMag)))
+}
+
+private object CurveKernelDescr {
+  /** The mags a moment descriptor reads: ekvi-PAA-reduced to `bins`, or raw. */
+  def mags(t: Array[Double], m: Array[Double], bins: Option[Int]): Array[Double] =
+    bins match {
+      case Some(b) => Kernels.ekviPaa(t, m, Some(b.toDouble))._2
+      case None    => m
+    }
+}
+
 /** Abbe value of the ekvi-PAA-reduced curve (`abbe_value_descr.py:4-49`);
   * `bins=None` → curve length (no reduction path difference matters:
   * `getAbbe` without bins uses raw mags).
   */
+@SerialVersionUID(1182130971029561720L)
 class AbbeValueDescr(val bins: Option[Int] = None,
                      override val uid: String = Identifiable.randomUID("abbeValue"))
-    extends Descriptor(uid) {
+    extends CurveKernelDescr(uid) {
   override val outputCols: Seq[String] = Seq("abbe_value")
   override private[ml] def sharingKey = Some(Seq(bins))
-  override def transform(df: Dataset[_]): DataFrame = {
+  override protected def kernel = {
     val b = bins
-    val u0 = udf((t: Seq[Double], m: Seq[Double]) =>
-      Kernels.curveAbbe(t.toArray, m.toArray, b))
-    val u = u0.asNondeterministic() // evaluate the kernel exactly once
-    df.withColumn("abbe_value", lcFeature(u(lcTime, lcMag)))
+    (t, m) => Kernels.curveAbbe(t, m, b)
   }
 }
 
 /** Kurtosis of the (optionally reduced) mags (`kurtosis_desc.py:8-61`). */
+@SerialVersionUID(-6947306257548364520L)
 class KurtosisDescr(val bins: Option[Int] = None, val absolute: Boolean = false,
                     override val uid: String = Identifiable.randomUID("kurtosis"))
-    extends Descriptor(uid) {
+    extends CurveKernelDescr(uid) {
   override val outputCols: Seq[String] = Seq("kurtosis")
   override private[ml] def sharingKey = Some(Seq(bins, absolute))
-  override def transform(df: Dataset[_]): DataFrame = {
+  override protected def kernel = {
     val (b, abs0) = (bins, absolute)
-    val u0 = udf((t: Seq[Double], m: Seq[Double]) => {
-      val mags = b match {
-        case Some(bb) => Kernels.ekviPaa(t.toArray, m.toArray, Some(bb.toDouble))._2
-        case None     => m.toArray
-      }
-      val k = Kernels.kurtosis(mags)
+    (t, m) => {
+      val k = Kernels.kurtosis(CurveKernelDescr.mags(t, m, b))
       if (abs0) math.abs(k) else k
-    })
-    val u = u0.asNondeterministic()
-    df.withColumn("kurtosis", lcFeature(u(lcTime, lcMag)))
+    }
   }
 }
 
 /** Skewness of the (optionally reduced) mags (`skewness_desc.py:8-62`). */
+@SerialVersionUID(-4503678897710272308L)
 class SkewnessDescr(val bins: Option[Int] = None, val absolute: Boolean = false,
                     override val uid: String = Identifiable.randomUID("skewness"))
-    extends Descriptor(uid) {
+    extends CurveKernelDescr(uid) {
   override val outputCols: Seq[String] = Seq("skewness")
   override private[ml] def sharingKey = Some(Seq(bins, absolute))
-  override def transform(df: Dataset[_]): DataFrame = {
+  override protected def kernel = {
     val (b, abs0) = (bins, absolute)
-    val u0 = udf((t: Seq[Double], m: Seq[Double]) => {
-      val mags = b match {
-        case Some(bb) => Kernels.ekviPaa(t.toArray, m.toArray, Some(bb.toDouble))._2
-        case None     => m.toArray
-      }
-      val s = Kernels.skewness(mags)
+    (t, m) => {
+      val s = Kernels.skewness(CurveKernelDescr.mags(t, m, b))
       if (abs0) math.abs(s) else s
-    })
-    val u = u0.asNondeterministic()
-    df.withColumn("skewness", lcFeature(u(lcTime, lcMag)))
+    }
   }
 }
 
 /** Points per time unit after ekvi-PAA (`curve_density_descr.py:7-35`). */
+@SerialVersionUID(6415447155458611132L)
 class CurveDensityDescr(override val uid: String = Identifiable.randomUID("curveDensity"))
-    extends Descriptor(uid) {
+    extends CurveKernelDescr(uid) {
   override val outputCols: Seq[String] = Seq("curve_density")
   override private[ml] def sharingKey = Some(Nil)
-  override def transform(df: Dataset[_]): DataFrame = {
-    val u0 = udf((t: Seq[Double], m: Seq[Double]) =>
-      Kernels.curveDensity(t.toArray, m.toArray))
-    val u = u0.asNondeterministic()
-    df.withColumn("curve_density", lcFeature(u(lcTime, lcMag)))
-  }
+  override protected def kernel = Kernels.curveDensity _
 }
 
 /** Slope of the (log-)variogram linear fit (`variogram_slope_descr.py:5-54`). */
+@SerialVersionUID(587656884063174449L)
 class VariogramSlopeDescr(val daysPerBin: Double, val absolute: Boolean = false,
                           override val uid: String = Identifiable.randomUID("varioSlope"))
-    extends Descriptor(uid) {
+    extends CurveKernelDescr(uid) {
   override val outputCols: Seq[String] = Seq("variogram_slope")
   override private[ml] def sharingKey = Some(Seq(daysPerBin, absolute))
-  override def transform(df: Dataset[_]): DataFrame = {
+  override protected def kernel = {
     val (dpb, abs0) = (daysPerBin, absolute)
-    val u0 = udf((t: Seq[Double], m: Seq[Double]) =>
-      Kernels.variogramSlope(t.toArray, m.toArray, dpb, abs0))
-    val u = u0.asNondeterministic()
-    df.withColumn("variogram_slope", lcFeature(u(lcTime, lcMag)))
+    (t, m) => Kernels.variogramSlope(t, m, dpb, abs0)
   }
 }
 
@@ -275,7 +290,8 @@ class CurveDescr(val bins: Int, val height: Option[Int] = None,
 /** Shared shape of the three comparative SAX descriptors (§2.8): pairwise
   * dissimilarity vs template curves aggregated by `meth`.
   */
-abstract class ComparativeDescr(uid: String) extends Descriptor(uid) {
+@SerialVersionUID(925418222689480203L)
+abstract class ComparativeDescr(uid: String) extends CurveKernelDescr(uid) {
   def templates: Seq[(Array[Double], Array[Double])]
   def meth: String
   protected def pairFn: (Array[Double], Array[Double], Array[Double], Array[Double]) => Double
@@ -284,12 +300,9 @@ abstract class ComparativeDescr(uid: String) extends Descriptor(uid) {
   override private[ml] def sharingKey =
     Some(templates.map { case (t, m) => (t.toSeq, m.toSeq) } +: meth +: pairParams)
 
-  override def transform(df: Dataset[_]): DataFrame = {
+  override protected def kernel = {
     val (tmpl, m, pf) = (templates, meth, pairFn)
-    val u0 = udf((t: Seq[Double], mag: Seq[Double]) =>
-      Comparative.feature(t.toArray, mag.toArray, tmpl, m)(pf))
-    val u = u0.asNondeterministic()
-    df.withColumn(outputCols.head, lcFeature(u(lcTime, lcMag)))
+    (t, mag) => Comparative.feature(t, mag, tmpl, m)(pf)
   }
 }
 

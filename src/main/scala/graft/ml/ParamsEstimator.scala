@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *     descriptor of one class and parameters in several combinations is
   *     computed once) and checkpoints each combination's feature vector
   *     and NaN-row validity, with the train/test flag;
-  *  1. ONE treeAggregate over the train rows yields every combination's
+  *  1. ONE moments job over the train rows yields every combination's
   *     per-class moments, and the models are solved on the driver;
   *  1. ONE aggregate over the test rows scores every combination's models.
   * Each combination keeps its own NaN-row drop, and its rows enter the

@@ -62,7 +62,7 @@ class StarsFilter(val descriptors: Seq[Descriptor], val deciders: Seq[Decider]) 
       .select("features", "label")
     // Closed-form deciders (LDA/QDA) all fit from the same per-class moment
     // sums, so when every decider is moment-based the whole learn path is
-    // ONE distributed pass: the shared treeAggregate yields (n, Σx, Σxxᵀ)
+    // ONE distributed pass: the shared moments job yields (n, Σx, Σxxᵀ)
     // per class — the class counts for the emptiness check included — and
     // each model is solved on the driver. No cache (single consumer), no
     // per-decider count/probe/aggregate jobs, no thread pool.

@@ -94,6 +94,35 @@ class KernelPropertiesSpec extends AnyFunSuite {
     })
   }
 
+  test("pyRound equals exact half-even rounding on random doubles and near-ties") {
+    def exact(v: Double, d: Int): Double =
+      new java.math.BigDecimal(v).setScale(d, java.math.RoundingMode.HALF_EVEN).doubleValue
+    def same(v: Double, d: Int): Unit = {
+      val (got, want) = (Kernels.pyRound(v, d), exact(v, d))
+      assert(java.lang.Double.doubleToRawLongBits(got) == java.lang.Double.doubleToRawLongBits(want),
+        s"pyRound($v, $d) = $got, exact $want")
+    }
+    val r = new scala.util.Random(11)
+    (1 to 200000).foreach { _ =>
+      val d = r.nextInt(9)
+      // any magnitude, signed values around the cleaning scales, raw bit patterns
+      same(math.pow(10, r.nextInt(40) - 20) * (r.nextDouble() * 2 - 1), d)
+      same(r.nextDouble() * 2000 - 1000, d)
+      val bits = java.lang.Double.longBitsToDouble(r.nextLong())
+      if (bits.isFinite) same(bits, d)
+    }
+    // decimal ties k.5·10^-d and their neighbours a few ulps away
+    (1 to 20000).foreach { _ =>
+      val d = r.nextInt(8)
+      val tie = java.math.BigDecimal.valueOf(r.nextLong() % 10000000 * 10 + 5, d + 1).doubleValue
+      var v = tie
+      (1 to 3).foreach(_ => v = math.nextDown(v))
+      (1 to 7).foreach { _ => same(v, d); same(-v, d); v = math.nextUp(v) }
+    }
+    Seq(2.675 -> 2, 0.125 -> 2, 0.5 -> 0, 1.5 -> 0, 2.5 -> 0, -0.0004 -> 3, -0.0 -> 1,
+      1e300 -> 5, 4.5e15 -> 0, 1e-320 -> 3).foreach { case (v, d) => same(v, d) }
+  }
+
   test("degenerate kernel inputs: no hang, scipy-0.19 zero-variance values") {
     // empty input / non-positive bins: a zero PAA step must yield no
     // frames, not an unbounded loop (reachable from SQL sax_word)

@@ -126,4 +126,24 @@ class DecidersSpec extends SparkSpec {
     // orientation is no longer an artifact of k-means label assignment
     assert(ps - po > 0.9)
   }
+
+  test("QDA fits of one 16-partition frame are bit-identical") {
+    // magnitudes spread over six decades, so a different merge order of the
+    // per-partition sums would round differently
+    val r = new scala.util.Random(5)
+    val frame = (1 to 4000).map { i =>
+      (Vectors.dense(Array.fill(3)(math.pow(10, r.nextInt(6)) * r.nextGaussian())),
+        (i % 2).toDouble)
+    }.toDF("features", "label").repartition(16).cache()
+    def bits(g: GaussianClass): Seq[Long] =
+      (g.prior +: g.logDet +: (g.mean ++ g.invCov.flatten)).map(java.lang.Double.doubleToRawLongBits)
+    def fit(): (Seq[Long], Seq[Long]) = {
+      val m = new QDADec().learn(frame).asInstanceOf[GaussianDiscriminantModel]
+      (bits(m.g0), bits(m.g1))
+    }
+    try {
+      val first = fit()
+      (1 to 5).foreach(i => assert(fit() == first, s"fit ${i + 1} differs from the first"))
+    } finally frame.unpersist()
+  }
 }

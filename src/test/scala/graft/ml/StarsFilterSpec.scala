@@ -110,7 +110,7 @@ class StarsFilterSpec extends SparkSpec {
     }
     assert(all.size == 2)
     info(s"$jobs jobs")
-    // one moments treeAggregate, then the statistic aggregate's map stage
+    // one moments job, then the statistic aggregate's map stage
     // and result job
     assert(jobs <= 3, s"2-combination grid ran $jobs jobs")
   }
@@ -299,7 +299,7 @@ class StarsFilterSpec extends SparkSpec {
 
   test("r19 single-pass moment path is bit-identical to per-decider learn") {
     // learnOnCoords now fits all-MomentDecider panels from ONE shared
-    // treeAggregate; this pins that the fused path's models equal the
+    // moments pass; this pins that the fused path's models equal the
     // per-decider learn() models EXACTLY (same momentsBoth arithmetic)
     val sf = new StarsFilter(descriptors, Seq(new LDADec(), new QDADec()))
     val sc = sf.spaceCoordinates(searched).cache()

@@ -152,10 +152,29 @@ class StarsSearcherSpec extends SparkSpec {
     assert(rows.length == 20)
   }
 
+  /** Every staged `_pending-*` directory left under a sink. */
+  private def pending(sink: Path): Seq[String] =
+    Option(sink.toFile.listFiles()).toSeq.flatten.map(_.getName).filter(_.startsWith("_pending-"))
+
   test("a small batch writes one parquet file per sink") {
     val sinks = run(batch)
     assert(parts(sinks.resolve("matched")) == 1)
     assert(parts(sinks.resolve("status")) == 1)
+    assert(pending(sinks.resolve("status")).isEmpty)
+  }
+
+  test("a failed matched append leaves the status sink without rows, so resume re-runs the batch") {
+    val queries: DataFrame = batch.toDF("query_id", "params")
+    val sinks = Files.createTempDirectory("failed")
+    val matched = Files.writeString(sinks.resolve("matched"), "a file, not a directory")
+    val status = sinks.resolve("status")
+    val searcher = new StarsSearcher(model, "FileManager", matched.toString, status.toString)
+    intercept[Exception](searcher.queryStars(spark, queries))
+    val left = Option(status.toFile.listFiles()).toSeq.flatten
+    assert(left.forall(f => !f.getName.endsWith(".parquet")), left.mkString(", "))
+    assert(pending(status).isEmpty)
+    assert(searcher.unsearchedQueries(spark, queries).select("query_id").as[String]
+      .collect().sorted.toSeq == Seq("q0", "q1"))
   }
 
   test("resume: a missing or empty status sink means nothing was searched") {
