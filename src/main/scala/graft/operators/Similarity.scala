@@ -1657,7 +1657,7 @@ object Similarity {
   }
 
   /** Serve against an ALREADY-RESOLVED residual IVF-PQ index — the form
-    * streaming callers need: a [[graft.streaming.IndexServingStream]]
+    * streaming callers need: a [[graft.streaming.Streams.serve]]
     * binding hoists the load outside `foreachBatch` (one meta read + two bounded collects per query
     * start, zero per batch), exactly like [[ivfSearch]]/[[sq8Search]].
     * One batch is one uncached plan ([[ivfPqResidualServe]]): 4 Spark

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The batch-keyed segment store behind every merge-on-read partial view
   * (q132 stats, q154 HLL registers): each micro-batch writes its own
-  * `batch_<id>` dir (replay-idempotent overwrite — the ledger
+  * [[Streams.sink]] dir (replay-idempotent overwrite — the ledger
   * convention), a compactor folds covered segments into `compact_<hi>`
   * via the view's OWN merge, and readers exclude covered batch ids BY
   * NAME so a crashed compactor's leftover dirs can never double-count.
@@ -13,14 +13,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[streaming] object SegmentStore {
 
-  private val BatchDir = "batch_(\\d+)".r
   private val CompactDir = "compact_(\\d+)".r
 
   /** (newest compacted segment covering ids ≤ hi if any, live batch dirs).
     *
     * A compact dir counts only when it carries the committer's `_SUCCESS`
     * marker: a compactor crash mid-write leaves a partial `compact_<hi>`
-    * whose covered `batch_*` dirs are still intact (deletes happen only
+    * whose covered batch dirs are still intact (deletes happen only
     * after a successful write), so the incomplete dir must NOT mask
     * them — readers fall back to the previous valid compact plus every
     * live batch, and the re-run compactor overwrites the partial.
@@ -40,7 +39,7 @@ private[streaming] object SegmentStore {
     val newest = compacts.sortBy(-_._1).headOption
     val hi = newest.map(_._1).getOrElse(-1L)
     val live = dirs.flatMap(d => d.getName match {
-      case BatchDir(id) if id.toLong > hi => Some(d.toString)
+      case Streams.SinkDir(id) if id.toLong > hi => Some(d.toString)
       case _ => None
     })
     (newest, live.toSeq)
@@ -64,7 +63,7 @@ private[streaming] object SegmentStore {
     if (live.isEmpty) return
     val hi = live.map { d =>
       new org.apache.hadoop.fs.Path(d).getName match {
-        case BatchDir(id) => id.toLong
+        case Streams.SinkDir(id) => id.toLong
       }
     }.max
     val inputs = compactSeg.map(_._2).toSeq ++ live
@@ -89,7 +88,7 @@ private[streaming] object SegmentStore {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(p).filter(_.isDirectory).map(_.getPath).foreach { d =>
       d.getName match {
-        case BatchDir(id) if id.toLong <= hi => fs.delete(d, true); ()
+        case Streams.SinkDir(id) if id.toLong <= hi => fs.delete(d, true); ()
         case CompactDir(id) if id.toLong != hi => fs.delete(d, true); ()
         case _ => ()
       }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * removed, within-batch duplicates keep q103's (doc_id, idx)
   * first-occurrence rule, and per-doc verdicts
   * (n_blocks, n_removed, scrubbed_md5) land in an idempotent
-  * `batch_<id>` sink. Across batches, first ARRIVAL wins — the
+  * [[Streams.sink]]. Across batches, first ARRIVAL wins — the
   * streaming analog of q103's global (doc_id, idx) order.
   *
   * State is a distributed parquet LEDGER of seen block hashes, not an
@@ -66,8 +66,8 @@ import org.apache.spark.sql.types.StructType
 object StreamingBlockScrub {
 
   /** Ledger additions live under `ledger_<id>`; compacted history under
-    * `compact_<hi>`; verdicts under `batch_<id>`. Readers load verdicts
-    * with recursiveFileLookup.
+    * `compact_<hi>`; verdicts in the batch's [[Streams.sink]] under
+    * `outPath`.
     */
   def run(spark: SparkSession, docDir: String, docSchema: StructType,
           outPath: String, ledgerPath: String, checkpoint: String,
@@ -77,16 +77,9 @@ object StreamingBlockScrub {
     // inside the first batch would leave `might_contain` unresolvable for
     // every later batch of the same query (the StreamingDedup convention)
     graft.functions.expressions.BloomFns.register(spark)
-    spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scrubBatch(spark, batch, batchId, outPath, ledgerPath)
-      }
-      .start()
+    Streams.run(spark.readStream.schema(docSchema).parquet(docDir), checkpoint, trigger) {
+      (batch, batchId) => scrubBatch(spark, batch, batchId, outPath, ledgerPath)
+    }
   }
 
   /** Per-batch sketch dials: 128 KiB, ≲1% fp at 2^17 items. Compacted
@@ -156,8 +149,7 @@ object StreamingBlockScrub {
       val marked = CorpusOps.firstOccurrenceKeep(
         blocks.join(seen, Seq("h"), "left"), col("seen").isNull)
       val cachedMarked = graft.CacheScope.cache(marked)
-      CorpusOps.scrubVerdicts(cachedMarked)
-        .write.mode("overwrite").parquet(s"$outPath/batch_$batchId")
+      Streams.fanOut(cachedMarked, batchId)((outPath, CorpusOps.scrubVerdicts))
       // newly-seen hashes = the kept blocks' (within-batch dups share a
       // kept block's hash; ledger-dropped blocks are already present)
       val additions = graft.CacheScope.cache(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{IndexMeta, TimeSeries}
+import graft.operators.TimeSeries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -15,12 +15,12 @@ import org.apache.spark.sql.types.StructType
   * [[TimeSeries.cusumIncrements]] kernel, so batch and stream cannot
   * drift on units, rounding, or the allowance rule.
   *
-  * Unlike the stateless gates on the [[IndexServingStream]] scaffold,
-  * this operator is genuinely stateful — C_t depends on every prior x —
-  * so it carries its own stream: the two scaffold contracts are upheld
-  * manually (fingerprint captured BEFORE the boundary frame resolves;
-  * re-checked every micro-batch in the sink, failing loudly on rebuild).
-  * The boundary table is collected to the driver at start (one row per
+  * Unlike the stateless gates on [[Streams.serve]], this operator is
+  * genuinely stateful — C_t depends on every prior x — so it builds its
+  * own stream on [[Streams.run]], with the boundary frame resolved
+  * through [[Streams.guard]] (fingerprint captured BEFORE it resolves;
+  * re-checked every micro-batch, failing loudly on rebuild). The
+  * boundary table is collected to the driver at start (one row per
   * user), so no micro-batch reads the index files the check guards.
   *
   * Ordering contract: within a batch events sort by (ts, event_id); the
@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.StructType
   * per-event buffers); per-batch work is |batch| joined against the
   * user-bounded boundary table, held on the driver as three numbers per
   * user. Replay is safe: state restores from the
-  * checkpoint version and `batch_<id>` overwrite re-places output.
+  * checkpoint version and the [[Streams.sink]] overwrite re-places output.
   */
 object StreamingCusum {
 
@@ -77,24 +77,18 @@ object StreamingCusum {
   def runAgainstIndex(spark: SparkSession, evDir: String, evSchema: StructType,
                       indexPath: String, outPath: String, checkpoint: String,
                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val loadedFp = IndexMeta.fingerprint(spark, indexPath)
     // resolved ONCE into a local relation. Read from the index files, the
     // stream-static join's broadcast runs before `foreachBatch` hands over
     // the batch, so a rebuild would kill the query on a deleted part file
-    // before the fingerprint check below could name the rebuild
-    val stored = TimeSeries.loadOutlierBounds(spark, indexPath)
-    val bounds = spark.createDataFrame(
-      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
-    build(spark.readStream.schema(evSchema).parquet(evDir), bounds)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[AlarmOut], batchId: Long) =>
-        IndexMeta.requireUnchanged(spark, indexPath, loadedFp)
-        batch.write.mode("overwrite").parquet(s"$outPath/batch_$batchId")
-        ()
-      }
-      .start()
+    // before the fingerprint check could name the rebuild
+    val (bounds, check) = Streams.guard(spark, indexPath) {
+      val stored = TimeSeries.loadOutlierBounds(spark, indexPath)
+      spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    }
+    val alarms = build(spark.readStream.schema(evSchema).parquet(evDir), bounds).toDF()
+    Streams.run(alarms, checkpoint, trigger) { (batch, batchId) =>
+      check()
+      Streams.fanOut(batch, batchId)((outPath, identity))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.StructType
   * is a pure per-row map plus two appends. The restart-on-rebuild
   * contract is ENFORCED the way the band/ANN/IVF indexes enforce it: the
   * build carries [[graft.operators.IndexMeta]] with a per-build nonce,
-  * the gate fingerprints it before loading, and every micro-batch
-  * re-checks — a re-materialized boundary build under a running stream
-  * fails the next batch loudly instead of being served stale.
+  * and the gate resolves the boundaries through [[Streams.guard]] — a
+  * re-materialized boundary build under a running stream fails the next
+  * batch loudly instead of being served stale.
   */
 object StreamingDecileGate {
 
@@ -42,31 +42,21 @@ object StreamingDecileGate {
           checkpoint: String, minDecile: Int = 9,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // resolved ONCE: 9 doubles, baked into the per-batch plan as a
-    // literal. Fingerprint BEFORE the read (the IndexServingStream ordering), so
-    // a rebuild racing the load fails the first batch loudly; each batch
-    // re-checks and fails instead of serving retired boundaries.
-    val loadedFp = graft.operators.IndexMeta.fingerprint(spark, boundariesPath)
-    val bs: Seq[Double] =
-      spark.read.parquet(s"$boundariesPath/bounds").head().getSeq[Double](0)
-    val bsCol = array(bs.map(lit): _*)
+    // literal; each batch re-checks and fails instead of serving retired
+    // boundaries
+    val (bsCol, check) = Streams.guard(spark, boundariesPath) {
+      val bs: Seq[Double] =
+        spark.read.parquet(s"$boundariesPath/bounds").head().getSeq[Double](0)
+      array(bs.map(lit): _*)
+    }
     val docs = spark.readStream.schema(docSchema).parquet(docDir)
-    TextAnalysis.qualityScored(docs.toDF())
+    val scored = TextAnalysis.qualityScored(docs)
       .withColumn("decile", TextAnalysis.decileOf(col("score"), bsCol))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IndexMeta.requireUnchanged(spark, boundariesPath, loadedFp)
-        // idempotent batch_id=N overwrite, the shared sink contract
-        val scored = batch.cache()
-        try {
-          scored.filter(col("decile") >= minDecile)
-            .write.mode("overwrite").parquet(s"$keepPath/batch_id=$batchId")
-          scored.filter(col("decile") < minDecile)
-            .write.mode("overwrite").parquet(s"$restPath/batch_id=$batchId")
-        } finally scored.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    Streams.run(scored, checkpoint, trigger) { (batch, batchId) =>
+      check()
+      Streams.fanOut(batch, batchId)(
+        (keepPath, _.filter(col("decile") >= minDecile)),
+        (restPath, _.filter(col("decile") < minDecile)))
+    }
   }
 }

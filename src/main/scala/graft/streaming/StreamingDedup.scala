@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * which is the standard trade for unbounded streams. The same shape with
   * a minhash band column as the key gives streaming NEAR-dup candidate
   * suppression. Dedup against a STORED band index is stateless and runs
-  * on [[IndexServingStream]] instead.
+  * on [[Streams.serve]] instead.
   */
 object StreamingDedup {
 

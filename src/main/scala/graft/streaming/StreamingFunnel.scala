@@ -92,23 +92,15 @@ object StreamingFunnel {
   def run(spark: org.apache.spark.sql.SparkSession, evDir: String,
           evSchema: StructType, outPath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    build(spark.readStream.schema(evSchema).parquet(evDir))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[FunnelOut], batchId: Long) =>
-        batch.toDF()
-          .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("overwrite").parquet(s"$outPath/batch_$batchId")
-        ()
-      }
-      .start()
+    Streams.run(build(spark.readStream.schema(evSchema).parquet(evDir)).toDF(),
+      checkpoint, trigger)((batch, batchId) => Streams.fanOut(batch, batchId)((outPath, identity)))
 
-  /** The current funnel table: each user's latest emitted row. */
+  /** The current funnel table: each user's latest emitted row, ordered by
+    * the `batch_id` partition column of the [[Streams.sink]] layout.
+    */
   def readFunnel(spark: org.apache.spark.sql.SparkSession,
                  outPath: String): DataFrame = {
-    val all = spark.read.parquet(s"$outPath/batch_*")
+    val all = spark.read.parquet(outPath)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("batch_id").desc)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming Gopher gate — the ingest-time router for the q176 rule
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: the rules are a pure per-row projection over the split arrays
   * (no state, no watermark — a verdict is a function of the row), so the
-  * stream's only cost is the two appends; `foreachBatch` fans one
+  * stream's only cost is the two appends; [[Streams.fanOut]] fans one
   * computed batch to both sinks without re-verdicting. The sinks carry
   * the FULL document row (text/lang/source/n_chars) plus the verdict
   * columns — [[TextAnalysis.gopherScored]], the StreamingQuality
@@ -28,26 +28,11 @@ object StreamingGopherGate {
   def run(spark: SparkSession, docDir: String, docSchema: StructType,
           passPath: String, rejectPath: String,
           checkpoint: String): StreamingQuery = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-    TextAnalysis.gopherScored(docs.toDF())
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // idempotent restart: each micro-batch OVERWRITES its own
-        // batch_id=N partition dir (the StreamingQuality convention), so
-        // a crash between the two sink writes re-runs without duplicates
-        val v = batch.cache()
-        try {
-          v.filter(col("passes"))
-            .write.mode("overwrite").parquet(s"$passPath/batch_id=$batchId")
-          v.filter(!col("passes"))
-            .write.mode("overwrite").parquet(s"$rejectPath/batch_id=$batchId")
-        } finally v.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val docs = spark.readStream.schema(docSchema).parquet(docDir)
+    Streams.run(TextAnalysis.gopherScored(docs), checkpoint) { (batch, batchId) =>
+      Streams.fanOut(batch, batchId)(
+        (passPath, _.filter(col("passes"))),
+        (rejectPath, _.filter(!col("passes"))))
+    }
   }
 }

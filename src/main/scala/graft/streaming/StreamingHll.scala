@@ -17,23 +17,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingHll {
 
-  /** Per-batch maintainer: register partials into `hllPath/batch_<id>`. */
+  /** Per-batch maintainer: register partials into the batch's
+    * [[Streams.sink]] under `hllPath`.
+    */
   def run(spark: SparkSession, docDir: String,
           docSchema: org.apache.spark.sql.types.StructType,
           hllPath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TextAnalysis.hllPartials(batch)
-          .write.mode("overwrite").parquet(s"$hllPath/batch_$batchId")
-        ()
-      }
-      .start()
+    Streams.run(spark.readStream.schema(docSchema).parquet(docDir), checkpoint, trigger) {
+      (batch, batchId) => Streams.fanOut(batch, batchId)((hllPath, TextAnalysis.hllPartials))
+    }
 
   /** The current per-source estimate over every live segment. */
   def readEstimates(spark: SparkSession, hllPath: String): DataFrame =

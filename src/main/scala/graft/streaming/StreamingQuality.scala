@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.CorpusOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming quality gate — the ingest-time counterpart of the batch
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: the scorer is a per-row projection (no state, no watermark
   * needed — quality is a pure function of the row), so the stream's only
-  * cost is the two appends; `foreachBatch` fans one computed batch out to
-  * both sinks without re-scoring. Composes upstream of [[StreamingDedup]]
+  * cost is the two appends; [[Streams.fanOut]] fans one computed batch
+  * out to both sinks without re-scoring. Composes upstream of [[StreamingDedup]]
   * in an ingest pipeline: gate first (cheap, stateless), dedup the
   * survivors (stateful).
   */
@@ -23,27 +23,11 @@ object StreamingQuality {
   def run(spark: SparkSession, docDir: String, docSchema: StructType,
           cleanPath: String, rejectPath: String,
           checkpoint: String): StreamingQuery = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-    CorpusOps.repetitionScored(docs.toDF())
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // idempotent restart: each micro-batch OVERWRITES its own
-        // batch_id=N partition directory, so a failure between the two
-        // sink writes (or after them but before the checkpoint commit)
-        // re-runs the batch without duplicating rows in either sink
-        val scored = batch.cache()
-        try {
-          scored.filter(!col("flagged"))
-            .write.mode("overwrite").parquet(s"$cleanPath/batch_id=$batchId")
-          scored.filter(col("flagged"))
-            .write.mode("overwrite").parquet(s"$rejectPath/batch_id=$batchId")
-        } finally scored.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val docs = spark.readStream.schema(docSchema).parquet(docDir)
+    Streams.run(CorpusOps.repetitionScored(docs), checkpoint) { (batch, batchId) =>
+      Streams.fanOut(batch, batchId)(
+        (cleanPath, _.filter(!col("flagged"))),
+        (rejectPath, _.filter(col("flagged"))))
+    }
   }
 }

@@ -28,26 +28,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingSample {
 
-  /** Per-batch maintainer: the batch's own top-k into
-    * `samplePath/batch_<id>`.
+  /** Per-batch maintainer: the batch's own top-k into its
+    * [[Streams.sink]] under `samplePath`.
     */
   def run(spark: SparkSession, docDir: String,
           docSchema: org.apache.spark.sql.types.StructType,
           samplePath: String, checkpoint: String,
           k: Int = CorpusOps.WS_K,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        CorpusOps.topKReservoir(CorpusOps.weightedKeys(batch), k)
-          .write.mode("overwrite").parquet(s"$samplePath/batch_$batchId")
-        ()
-      }
-      .start()
+    Streams.run(spark.readStream.schema(docSchema).parquet(docDir), checkpoint, trigger) {
+      (batch, batchId) => Streams.fanOut(batch, batchId)(
+        (samplePath, b => CorpusOps.topKReservoir(CorpusOps.weightedKeys(b), k)))
+    }
 
   /** Merge-on-read: global top-k over every live segment (the shared
     * [[SegmentStore]] topology — one definition of batch/compact/covered),

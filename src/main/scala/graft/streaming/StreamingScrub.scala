@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming PII scrub — the ingest-time counterpart of the batch redaction
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: the scrubber is a per-row regex projection (no state, no
   * watermark — redaction is a pure function of the row), so the stream's
-  * only cost is the two appends; `foreachBatch` computes the batch once and
-  * fans it to both sinks. Composes with the other ingest gates: quality
+  * only cost is the two appends; [[Streams.fanOut]] computes the batch
+  * once and fans it to both sinks. Composes with the other ingest gates: quality
   * gate first (cheap reject), scrub the survivors, then dedup — each stage
   * stateless or watermark-bounded.
   */
@@ -26,30 +26,15 @@ object StreamingScrub {
   def run(spark: SparkSession, docDir: String, docSchema: StructType,
           scrubbedPath: String, auditPath: String,
           checkpoint: String): StreamingQuery = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-    TextAnalysis.piiScrubbed(docs.toDF())
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // idempotent restart: each micro-batch OVERWRITES its own
-        // batch_id=N partition directory (the StreamingQuality contract),
-        // so a failure between the two sink writes re-runs the batch
-        // without duplicating rows in either sink
-        val scrubbed = batch.cache()
-        try {
-          scrubbed.write.mode("overwrite").parquet(s"$scrubbedPath/batch_id=$batchId")
-          // whitelist projection, not a text blacklist: the audit sink
-          // carries id + counters ONLY, so a text-bearing column added
-          // upstream can never leak into the compliance record
-          scrubbed.filter(col("n_emails") + col("n_phones") > 0)
-            .select(col("doc_id"), col("n_emails"), col("n_phones"))
-            .write.mode("overwrite").parquet(s"$auditPath/batch_id=$batchId")
-        } finally scrubbed.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val docs = spark.readStream.schema(docSchema).parquet(docDir)
+    Streams.run(TextAnalysis.piiScrubbed(docs), checkpoint) { (batch, batchId) =>
+      Streams.fanOut(batch, batchId)(
+        (scrubbedPath, identity),
+        // whitelist projection, not a text blacklist: the audit sink
+        // carries id + counters ONLY, so a text-bearing column added
+        // upstream can never leak into the compliance record
+        (auditPath, _.filter(col("n_emails") + col("n_phones") > 0)
+          .select(col("doc_id"), col("n_emails"), col("n_phones"))))
+    }
   }
 }

@@ -1,66 +1,39 @@
 package graft.streaming
 
 import graft.ml.StarsFilterModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming form of the systematic search (SURVEY §2.11): the
   * reference's append-only status file + resume loop
   * (`status_resolver.py:53-76`) maps onto checkpointed streaming — the
   * checkpoint IS `getUnsearchedQuery`, and the status sink is the
-  * append-mode output of `foreachBatch`.
+  * per-batch output of [[Streams.run]].
   *
   * Scale: a file-source stream of star rows (or any source with the star
   * schema); each micro-batch runs the trained filter exactly like batch
-  * mode; watermarked windowed aggregation is provided for event streams.
+  * mode.
   */
 object StreamingSearch {
 
   /** Stream star rows from a parquet directory (new files = new stars),
     * score each micro-batch with the trained filter, append matches and
-    * status.
+    * status. Every streamed star gets a status row: like
+    * `StarsSearcher.queryStars` it scores with `scoreEveryRow`, so a star
+    * with a null or NaN feature gets null `prob_*` and `passed = false`.
     */
   def run(spark: SparkSession, model: StarsFilterModel, starDir: String,
           matchedPath: String, statusPath: String,
           checkpoint: String): StreamingQuery = {
-    val stars = spark.readStream
-      .schema(graft.model.Star.schema)
-      .parquet(starDir)
-    stars.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val preds = model.getAllPredictions(batch).cache()
-          try {
-            // sink idempotence like every sibling streaming sink:
-            // foreachBatch is at-least-once on failure retry, so each batch
-            // OVERWRITES its own deterministic batch_<id> directory — a
-            // replay replaces rather than duplicates matches/status rows.
-            // Readers load with recursiveFileLookup=true.
-            preds.filter(col("passed"))
-              .select("starId", "starClass")
-              .write.mode("overwrite").parquet(s"$matchedPath/batch_$batchId")
-            val statusCols = Seq(col("starId")) ++
-              model.models.map(m => col(s"prob_${m.name}")) :+ col("passed")
-            preds.select(statusCols: _*)
-              .write.mode("overwrite").parquet(s"$statusPath/batch_$batchId")
-          } finally preds.unpersist()
-        }
-        ()
-      }
-      .start()
+    val stars = spark.readStream.schema(graft.model.Star.schema).parquet(starDir)
+    val statusCols = Seq(col("starId")) ++
+      model.models.map(m => col(s"prob_${m.name}")) :+ col("passed")
+    Streams.run(stars, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        Streams.fanOut(model.scoreEveryRow(batch), batchId)(
+          (matchedPath, _.filter(col("passed")).select("starId", "starClass")),
+          (statusPath, _.select(statusCols: _*)))
+    }
   }
-
-  /** Watermarked sliding-window aggregation over an event stream — the
-    * streaming analog of the per-user resampling kernels: mean/count per
-    * (user, 1h window) with 10 min watermark for late data.
-    */
-  def windowedEventAgg(events: DataFrame): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("event_time", "10 minutes")
-      .groupBy(window(col("event_time"), "1 hour"), col("user_id"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("mean_v"))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TimeSeries
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming gap sessionization — the incremental counterpart of batch
   * q36 (`TimeSeries.q36Sessionize`), on `flatMapGroupsWithState` with an
@@ -103,13 +103,17 @@ object StreamingSessionize {
     */
   def run(events: DataFrame, outPath: String, checkpoint: String,
           delay: String = "0 seconds"): StreamingQuery =
-    build(events, delay).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[SessionOut], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outPath/batch_$batchId")
-        ()
-      }
-      .start()
+    Streams.run(build(events, delay).toDF(), checkpoint)(
+      (batch, batchId) => Streams.fanOut(batch, batchId)((outPath, identity)))
+
+  /** Watermarked sliding-window aggregation over an event stream — the
+    * streaming analog of the per-user resampling kernels: mean/count per
+    * (user, 1h window) with 10 min watermark for late data.
+    */
+  def windowedEventAgg(events: DataFrame): DataFrame =
+    events
+      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+      .withWatermark("event_time", "10 minutes")
+      .groupBy(window(col("event_time"), "1 hour"), col("user_id"))
+      .agg(count(lit(1)).as("n"), avg(col("value")).as("mean_v"))
 }

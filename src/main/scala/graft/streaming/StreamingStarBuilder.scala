@@ -65,15 +65,6 @@ object StreamingStarBuilder {
     */
   def run(events: DataFrame, outPath: String, checkpoint: String,
           maxPoints: Int = 1000): org.apache.spark.sql.streaming.StreamingQuery =
-    build(events, maxPoints).writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[StarUpdate], batchId: Long) =>
-        // at-least-once replay overwrites its own batch_<id> dir instead of
-        // appending duplicate update rows (readers: recursiveFileLookup)
-        batch.write.mode("overwrite").parquet(s"$outPath/batch_$batchId")
-        ()
-      }
-      .start()
+    Streams.run(build(events, maxPoints).toDF(), checkpoint, mode = OutputMode.Update())(
+      (batch, batchId) => Streams.fanOut(batch, batchId)((outPath, identity)))
 }

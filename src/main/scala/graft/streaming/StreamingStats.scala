@@ -18,23 +18,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingStats {
 
-  /** Per-batch maintainer: partials into `statsPath/batch_<id>`. */
+  /** Per-batch maintainer: partials into the batch's [[Streams.sink]]
+    * under `statsPath`.
+    */
   def run(spark: SparkSession, docDir: String,
           docSchema: org.apache.spark.sql.types.StructType,
           statsPath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .parquet(docDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TextAnalysis.statsPartials(batch)
-          .write.mode("overwrite").parquet(s"$statsPath/batch_$batchId")
-        ()
-      }
-      .start()
+    Streams.run(spark.readStream.schema(docSchema).parquet(docDir), checkpoint, trigger) {
+      (batch, batchId) => Streams.fanOut(batch, batchId)((statsPath, TextAnalysis.statsPartials))
+    }
 
   /** Merge-on-read: the current view = the newest compacted segment plus
     * every batch segment it does not cover.

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** q153/q154 HyperLogLog: plain-Scala register replay, the max-merge law
@@ -154,7 +155,7 @@ class HllSpec extends SparkSpec {
     // max is IDEMPOTENT: a batch re-delivered under a NEW id — the
     // failure the sum-based stats view cannot absorb — changes nothing
     TextAnalysis.hllPartials(d.filter(col("doc_id") % 2 === 0))
-      .write.mode("overwrite").parquet(s"$tmp/hll/batch_7")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/hll", 7))
     assert(collect(graft.streaming.StreamingHll
       .readEstimates(spark, s"$tmp/hll")) == direct,
       "cross-id replay moved a register")

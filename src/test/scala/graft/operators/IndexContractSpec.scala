@@ -37,7 +37,7 @@ class IndexContractSpec extends SparkSpec {
   test("a rebuild invalidates the loaded fingerprint — even at identical dials") {
     // restart-on-rebuild is the streaming serving contract: a running
     // query holds the fingerprint it loaded at start and every micro-batch
-    // re-checks it (IndexServingStream.run). The
+    // re-checks it (Streams.guard). The
     // fingerprint must change on ANY rebuild — same dials included, since
     // same-dial rebuilds replace the corpus frames too — and the check
     // must fail loudly, not serve the retired build's plan.

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** q132 (incremental stats view): the merge law (base ⊕ delta == direct,
@@ -51,7 +52,7 @@ class StatsMaintenanceSpec extends SparkSpec {
     assert(view == direct, "merge-on-read view drifted from direct")
     // a replayed batch overwrites its own segment: the view is unchanged
     TextAnalysis.statsPartials(d.filter(col("doc_id") % 2 === 1))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_1")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 1))
     val replayed = collectStats(
       graft.streaming.StreamingStats.readStats(spark, s"$tmp/stats"))
     assert(replayed == direct, "replay must be idempotent")
@@ -63,14 +64,14 @@ class StatsMaintenanceSpec extends SparkSpec {
     // crash simulation: a covered batch dir left behind is EXCLUDED by
     // id (additive partials must not double-count)
     TextAnalysis.statsPartials(d.filter(col("doc_id") % 2 === 0))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_0")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 0))
     assert(collectStats(graft.streaming.StreamingStats
       .readStats(spark, s"$tmp/stats")) == direct,
       "covered leftovers double-counted")
     // post-compaction batches merge on top; a second compaction folds
     // compact + live into one segment, view still exact
     TextAnalysis.statsPartials(d.limit(0))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_2")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 2))
     graft.streaming.StreamingStats.compactStats(spark, s"$tmp/stats")
     assert(collectStats(graft.streaming.StreamingStats
       .readStats(spark, s"$tmp/stats")) == direct, "re-compaction drifted")
@@ -80,9 +81,9 @@ class StatsMaintenanceSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("statscrash").toString
     val d = graft.Tables.load(spark, dir, "documents")
     TextAnalysis.statsPartials(d.filter(col("doc_id") % 2 === 0))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_0")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 0))
     TextAnalysis.statsPartials(d.filter(col("doc_id") % 2 === 1))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_1")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 1))
     val direct = collectStats(TextAnalysis.finalizeStats(
       TextAnalysis.statsPartials(d)))
     assert(collectStats(graft.streaming.StreamingStats
@@ -103,7 +104,7 @@ class StatsMaintenanceSpec extends SparkSpec {
     graft.streaming.StreamingStats.compactStats(spark, s"$tmp/stats")
     assert(collectStats(graft.streaming.StreamingStats
       .readStats(spark, s"$tmp/stats")) == direct, "recovery compaction drifted")
-    assert(!new java.io.File(s"$tmp/stats/batch_0").exists(),
+    assert(!new java.io.File(Streams.sink(s"$tmp/stats", 0)).exists(),
       "recovery compaction must sweep covered batch dirs")
   }
 
@@ -117,9 +118,9 @@ class StatsMaintenanceSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("statsnomark").toString
     val d = graft.Tables.load(spark, dir, "documents")
     TextAnalysis.statsPartials(d.filter(col("doc_id") % 2 === 0))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_0")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 0))
     TextAnalysis.statsPartials(d.filter(col("doc_id") % 2 === 1))
-      .write.mode("overwrite").parquet(s"$tmp/stats/batch_1")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/stats", 1))
     val direct = collectStats(TextAnalysis.finalizeStats(
       TextAnalysis.statsPartials(d)))
     val conf = spark.sparkContext.hadoopConfiguration
@@ -130,8 +131,8 @@ class StatsMaintenanceSpec extends SparkSpec {
     finally {
       if (prev == null) conf.unset(key) else conf.set(key, prev)
     }
-    assert(new java.io.File(s"$tmp/stats/batch_0").exists() &&
-      new java.io.File(s"$tmp/stats/batch_1").exists(),
+    assert(new java.io.File(Streams.sink(s"$tmp/stats", 0)).exists() &&
+      new java.io.File(Streams.sink(s"$tmp/stats", 1)).exists(),
       "sweep deleted batches behind an unserved (_SUCCESS-less) compact")
     assert(collectStats(graft.streaming.StreamingStats
       .readStats(spark, s"$tmp/stats")) == direct,
@@ -140,7 +141,7 @@ class StatsMaintenanceSpec extends SparkSpec {
     graft.streaming.StreamingStats.compactStats(spark, s"$tmp/stats")
     assert(collectStats(graft.streaming.StreamingStats
       .readStats(spark, s"$tmp/stats")) == direct, "recovery drifted")
-    assert(!new java.io.File(s"$tmp/stats/batch_0").exists(),
+    assert(!new java.io.File(Streams.sink(s"$tmp/stats", 0)).exists(),
       "normal-committer recompaction must sweep covered batches")
   }
 }

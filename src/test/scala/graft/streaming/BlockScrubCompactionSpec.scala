@@ -19,7 +19,7 @@ class BlockScrubCompactionSpec extends SparkSpec {
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
 
   private def verdicts(out: String, b: Long): Map[Long, (Long, Long)] =
-    spark.read.parquet(s"$out/batch_$b")
+    spark.read.parquet(Streams.sink(out, b))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   private def segmentNames(ledger: String): Set[String] = {

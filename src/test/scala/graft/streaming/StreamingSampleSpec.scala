@@ -34,7 +34,7 @@ class StreamingSampleSpec extends SparkSpec {
     CorpusOps.topKReservoir(
       CorpusOps.weightedKeys(d.filter(pmod(col("doc_id"), lit(3)) === 1)),
       CorpusOps.WS_K)
-      .write.mode("overwrite").parquet(s"$tmp/sample/batch_1")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/sample", 1))
     assert(rows(StreamingSample.readSample(spark, s"$tmp/sample")) == direct,
       "replay must be idempotent")
 
@@ -51,7 +51,7 @@ class StreamingSampleSpec extends SparkSpec {
     CorpusOps.topKReservoir(
       CorpusOps.weightedKeys(d.filter(pmod(col("doc_id"), lit(3)) === 0)),
       CorpusOps.WS_K)
-      .write.mode("overwrite").parquet(s"$tmp/sample/batch_0")
+      .write.mode("overwrite").parquet(Streams.sink(s"$tmp/sample", 0))
     assert(rows(StreamingSample.readSample(spark, s"$tmp/sample")) == direct,
       "covered leftover shifted the sample")
 

@@ -54,6 +54,33 @@ class StreamingSpec extends SparkSpec {
     assert(matched.count() >= 8, "most searched-family stars pass")
   }
 
+  test("streaming search writes a status row for every star, unscorable ones included") {
+    val searched = (1 to 10).map(i => star(s"cos_$i", x => math.cos(x / 8))).toDF()
+    val others = (1 to 10).map(i => star(s"lin_$i", x => x / 50 + rng.nextGaussian())).toDF()
+    val model = new StarsFilter(
+      Seq(new AbbeValueDescr(Some(80)), new SkewnessDescr()),
+      Seq(new LDADec())).learn(searched, others)
+
+    val tmp = java.nio.file.Files.createTempDirectory("streamall").toString
+    // one micro-batch: five scorable stars and one with no light curve
+    val noCurve = Star("no_curve", None, Map.empty, Map.empty, Map.empty, None, Seq.empty)
+    (Seq(noCurve) ++ (1 to 5).map(i => star(s"cos_new_$i", x => math.cos(x / 8))))
+      .toDF().coalesce(1).write.parquet(s"$tmp/stars")
+    StreamingSearch.run(spark, model, s"$tmp/stars",
+      s"$tmp/matched", s"$tmp/status", s"$tmp/ckpt").awaitTermination()
+
+    val status = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/status")
+    assert(status.count() == 6, s"one status row per streamed star: ${status.count()}")
+    assert(status.select("starId").distinct().count() == 6)
+    val unscorable = status.filter(col("starId") === "no_curve").collect()
+    assert(unscorable.length == 1 && !unscorable.head.getAs[Boolean]("passed") &&
+      unscorable.head.isNullAt(unscorable.head.fieldIndex("prob_LDADec")),
+      s"the unscorable star is not passed and has no probability: ${unscorable.toSeq}")
+    val matched = spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/matched")
+    assert(matched.filter(col("starId") === "no_curve").count() == 0,
+      "the unscorable star is not matched")
+  }
+
   test("streaming dedup drops exact duplicates across micro-batches") {
     val tmp = java.nio.file.Files.createTempDirectory("dedupstream").toString
     val docs1 = Seq(
@@ -194,7 +221,7 @@ class StreamingSpec extends SparkSpec {
   /** `family`'s serving stream from `$tmp/in` against `$tmp/index`. */
   private def serveStream(family: String, tmp: String,
                           trigger: Trigger = Trigger.AvailableNow()) =
-    IndexServingStream.run(spark, s"$tmp/in", spark.read.parquet(s"$tmp/in").schema,
+    Streams.serve(spark, s"$tmp/in", spark.read.parquet(s"$tmp/in").schema,
       s"$tmp/index", s"$tmp/out", s"$tmp/ckpt", trigger)(
       served(family).resolve(s"$tmp/index"))
 
@@ -234,7 +261,7 @@ class StreamingSpec extends SparkSpec {
     val in = f.input()
     in.write.mode("append").parquet(s"$tmp/in")
     val q = serveStream(family, tmp, Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
+    assertDiesOnRebuild(q, Streams.sink(s"$tmp/out", 0)) {
       f.build(s"$tmp/index")
       in.write.mode("append").parquet(s"$tmp/in")
     }
@@ -329,7 +356,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set(graft.operators.Similarity.RETRAIN_FRACTION_CONF, "0")
     spark.conf.set(graft.operators.Similarity.RETRAIN_DRIFT_CONF, "0")
     try {
-      assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
+      assertDiesOnRebuild(q, Streams.sink(s"$tmp/out", 0)) {
         graft.operators.Similarity.appendIvfPqDelta(delta, s"$tmp/index")
         probes.write.mode("append").parquet(s"$tmp/in")
       }
@@ -411,7 +438,7 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("evstream").toString
     batch.write.parquet(s"$tmp/in")
     val stream = spark.readStream.schema(batch.schema).parquet(s"$tmp/in")
-    val agg = StreamingSearch.windowedEventAgg(stream)
+    val agg = StreamingSessionize.windowedEventAgg(stream)
     val q = agg.writeStream
       .outputMode("append")
       .format("memory").queryName("winagg")
@@ -569,7 +596,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingDecileGate.run(spark, s"$tmp/in", docs.schema,
       s"$tmp/bounds", s"$tmp/keep", s"$tmp/rest", s"$tmp/ckpt",
       trigger = Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/keep/batch_id=0") {
+    assertDiesOnRebuild(q, Streams.sink(s"$tmp/keep", 0)) {
       StreamingDecileGate.writeBoundaries(spark, dir, s"$tmp/bounds")
       docs.limit(5).write.mode("append").parquet(s"$tmp/in")
     }
@@ -635,7 +662,7 @@ class StreamingSpec extends SparkSpec {
     docs1.write.mode("overwrite").parquet(s"$batchDir/documents.parquet")
     val expect = graft.operators.CorpusOps.q103DedupScrub(spark, batchDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    val got1 = spark.read.parquet(s"$tmp/out/batch_0")
+    val got1 = spark.read.parquet(Streams.sink(s"$tmp/out", 0))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     assert(got1 == expect, s"single-batch stream diverged from q103: $got1 vs $expect")
     val emptyMd5 = "d41d8cd98f00b204e9800998ecf8427e"
@@ -650,7 +677,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$tmp/in")
     StreamingBlockScrub.run(spark, s"$tmp/in", docs1.schema,
       s"$tmp/out", s"$tmp/ledger", s"$tmp/ckpt").awaitTermination()
-    val v2 = spark.read.parquet(s"$tmp/out/batch_1")
+    val v2 = spark.read.parquet(Streams.sink(s"$tmp/out", 1))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(v2.keySet == Set(4L, 5L), s"batch 1 verdicts: ${v2.keySet}")
     val (n4, rm4, md4) = v2(4L)
@@ -665,7 +692,7 @@ class StreamingSpec extends SparkSpec {
     StreamingBlockScrub.scrubBatch(spark,
       spark.read.parquet(s"$tmp/in").filter(col("doc_id") >= 4L), 1L,
       s"$tmp/out", s"$tmp/ledger")
-    val replay = spark.read.parquet(s"$tmp/out/batch_1")
+    val replay = spark.read.parquet(Streams.sink(s"$tmp/out", 1))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(replay == Map(4L -> 1L, 5L -> 0L), s"replay not idempotent: $replay")
 
@@ -677,7 +704,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$tmp/in")
     StreamingBlockScrub.run(spark, s"$tmp/in", docs1.schema,
       s"$tmp/out", s"$tmp/ledger", s"$tmp/ckpt").awaitTermination()
-    val v3 = spark.read.parquet(s"$tmp/out/batch_2")
+    val v3 = spark.read.parquet(Streams.sink(s"$tmp/out", 2))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(v3 == Map(6L -> ((1L, 1L)), 7L -> ((1L, 1L))),
       s"multi-segment ledger reach: $v3")
@@ -826,7 +853,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingCusum.runAgainstIndex(spark, s"$tmp/in",
       spark.read.parquet(s"$tmp/in").schema, s"$tmp/index", s"$tmp/out", s"$tmp/ckpt",
       trigger = Trigger.ProcessingTime("50 milliseconds"))
-    assertDiesOnRebuild(q, s"$tmp/out/batch_0") {
+    assertDiesOnRebuild(q, Streams.sink(s"$tmp/out", 0)) {
       graft.operators.TimeSeries.writeOutlierIndex(bounds, s"$tmp/index")
       sfEvents.limit(5).write.mode("append").parquet(s"$tmp/in")
     }
@@ -834,7 +861,7 @@ class StreamingSpec extends SparkSpec {
 }
 
 object StreamingSpec {
-  /** One stateless index family on [[IndexServingStream.run]]: `build`
+  /** One stateless index family on [[Streams.serve]]: `build`
     * materializes its index at a path, `input` is an arriving batch, and
     * `resolve` is the load + batch-kernel binding a serving stream hands
     * the scaffold — applied to a frame directly, it is the batch serve
